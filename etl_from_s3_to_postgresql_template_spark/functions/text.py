@@ -21,6 +21,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 __all__ = [
     "tokens_col",
     "token_count_col",
+    "ws_token_count_col",
     "normalize_text_col",
     "fingerprint_col",
     "stopword_hits_col",
@@ -52,6 +53,30 @@ def tokens_col(text: Column | str) -> Column:
 
 def token_count_col(text: Column | str) -> Column:
     return F.size(tokens_col(text)).cast("long")
+
+
+#: maximal non-whitespace runs (explicit ASCII whitespace — the same
+#: byte set under Java regex and RE2) — each run IS one token
+_NONWS = r"[^ \t\n\x0B\f\r]+"
+
+
+def ws_token_count_col(tx: Column) -> Column:
+    """Whitespace-token COUNT without materializing the token array:
+    collapse each non-whitespace run to one char and diff the lengths —
+    tokens are exactly the maximal non-WS runs, so this equals
+    ``size(filter(split(t, WS), x != ''))`` on any string (equality
+    re-verified on the 500k corpus before adoption). Two regex passes
+    beat the split form structurally: the split materializes ~190
+    strings per doc only to count them, and under allocation pressure
+    its wall time degrades 10x (same-session A/B on a loaded box:
+    split 3.6-43.9 s at 500k, collapse 6.0-10.8 s; fresh-session sweep
+    17-18 s split vs ~6 s collapse). The llm_ops8 A/B that KEPT its
+    HOFs needed the token array for other statistics — a pure count
+    does not."""
+    return (
+        F.length(F.regexp_replace(tx, _NONWS, "x"))
+        - F.length(F.regexp_replace(tx, _NONWS, ""))
+    ).cast("long")
 
 
 def normalize_text_col(text: Column | str) -> Column:

@@ -1,0 +1,115 @@
+"""Bloom-filter paragraph dedup from first-class DataFrame ops — the one
+implementation behind the batch tiers (plans/llm_ops13, llm_ops14) and
+the streaming tier (streaming/bloom_state).
+
+Spark's ``bloom_filter_agg`` is not in the public function registry, so
+the filter is a packed words table ``(wi, w)``: k=7 double-hashed bit
+positions per paragraph (Kirsch–Mitzenmacher: pos_j = (h1 + j*h2) &
+(m-1), xxhash64 both), OR-folded per 64-bit word via
+bit_or(shiftleft). The table is <= m/64 rows (128 KB .. 16 MB) and
+always broadcast; probing is k broadcast joins + bit tests — whole-stage
+codegen, no Python, and the probe stream never shuffles. bit_or is
+associative and commutative, so per-shard filters built at the same m
+OR-merge in any order (``merge_words``) — the cross-shard and
+cross-batch primitive.
+
+The words table feeds k broadcast builds, and the per-j renames defeat
+exchange reuse, so each build evaluates its own copy of the words
+subtree. Whether to pin it first (``util.shared_subtree_eager``) is the
+CALLER's measured decision, not this module's: llm_ops13 gates it on
+the reference-shard size, llm_ops14 always pins, streaming never does.
+"""
+
+from __future__ import annotations
+
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+__all__ = [
+    "MIN_BITS",
+    "MAX_BITS",
+    "K",
+    "bits_for",
+    "paragraphs",
+    "positions",
+    "words",
+    "merge_words",
+    "flag_probe",
+]
+
+MIN_BITS = 1 << 20  # m floor: 16 Ki packed words = 128 KB broadcast
+MAX_BITS = 1 << 27  # m ceiling: 2 Mi words = 16 MB — still broadcastable
+K = 7  # hash functions — optimal near m/n ~ 10-16 bits/item
+
+
+def bits_for(n_items: int) -> int:
+    """Bitset size for n expected items: next power of two >= 16n
+    (fpp ~ 1e-3 at k=7), clamped to [2^20, 2^27]. Power of two keeps
+    position extraction a mask. The count that feeds this is a bounded
+    scalar action over the reference shard(s) only; a pipeline that
+    knows its shard size passes it instead. Filters that will be
+    OR-merged must share m — size for the UNION load."""
+    return max(MIN_BITS, min(MAX_BITS, 1 << max(0, (16 * max(1, n_items) - 1).bit_length())))
+
+
+def paragraphs(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, par): newline-split, trimmed, empties dropped — the
+    Dolma paragraph unit; pos is the ORIGINAL line index so a clean
+    stage can reconstruct untouched lines verbatim."""
+    text = F.coalesce(F.col("text"), F.lit(""))
+    return (
+        docs.select("doc_id", F.posexplode(F.split(text, "\n", -1)).alias("pos", "raw"))
+        .select("doc_id", "pos", F.trim(F.col("raw")).alias("par"))
+        .where(F.col("par") != "")
+    )
+
+
+def positions(par: Column, bits: int) -> list[Column]:
+    """k double-hashed bit positions (Kirsch-Mitzenmacher): pos_j =
+    (h1 + j*h2) & (m-1). Long overflow wraps deterministically (ANSI
+    off per registry confs); & with m-1 is non-negative for any sign."""
+    h1 = F.xxhash64(par)
+    h2 = F.xxhash64(par, F.lit(1))
+    return [(h1 + F.lit(j) * h2).bitwiseAND(F.lit(bits - 1)) for j in range(K)]
+
+
+def words(ref_pars: DataFrame, bits: int = MIN_BITS) -> DataFrame:
+    """OR-fold the reference paragraphs' bit positions into the packed
+    (wi, w) words table — <= m/64 rows, partial-aggregated map-side
+    (bit_or combines associatively), always broadcastable."""
+    pos = ref_pars.select(F.explode(F.array(*positions(F.col("par"), bits))).alias("p"))
+    return pos.groupBy(F.expr("shiftright(p, 6)").alias("wi")).agg(
+        F.expr("bit_or(shiftleft(1L, cast((p & 63) as int)))").alias("w")
+    )
+
+
+def merge_words(*words: DataFrame) -> DataFrame:
+    """OR-merge words tables built at the SAME m: union -> bit_or per
+    word index, in any order / any grouping. The input is <= N * m/64
+    rows (never corpus-scale) and the result is the same words-table
+    shape, still broadcastable."""
+    return reduce(DataFrame.unionByName, words).groupBy("wi").agg(
+        F.expr("bit_or(w)").alias("w")
+    )
+
+
+def flag_probe(probe_pars: DataFrame, words: DataFrame, bits: int = MIN_BITS) -> DataFrame:
+    """Append might_contain as `dup` to the probe paragraphs: k
+    broadcast joins + bit tests. No false negatives: every paragraph
+    folded into ``words`` is flagged."""
+    out = probe_pars
+    for j, pos in enumerate(positions(F.col("par"), bits)):
+        out = out.withColumn(f"_p{j}", pos)
+    flags = []
+    for j in range(K):
+        wj = words.select(F.col("wi").alias(f"_wi{j}"), F.col("w").alias(f"_w{j}"))
+        out = out.join(
+            F.broadcast(wj), F.expr(f"shiftright(_p{j}, 6)") == F.col(f"_wi{j}"), "left"
+        )
+        flags.append(
+            F.expr(f"coalesce(_w{j} & shiftleft(1L, cast((_p{j} & 63) as int)), 0L) != 0")
+        )
+    dup = reduce(lambda a, b: a & b, flags)
+    return out.select(*probe_pars.columns, dup.alias("dup"))

@@ -27,8 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.functions.text import normalize_text_col, shingles_col, tokens_col
-from etl_from_s3_to_postgresql_template_spark.util import spread_partitions
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree_eager, spread_partitions
 
 __all__ = [
     "dedup_exact_by_hash",

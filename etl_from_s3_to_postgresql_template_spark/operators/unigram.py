@@ -38,7 +38,7 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = ["seed_pieces", "em_step", "viterbi_encode", "MAX_PIECE_LEN"]
 

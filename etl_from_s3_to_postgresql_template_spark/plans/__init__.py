@@ -43,7 +43,8 @@ from etl_from_s3_to_postgresql_template_spark.plans import llm_ops11  # noqa: F4
 # registry each round, so after module registration we rotate queries the
 # driver most needs to (re-)check to the front. Verified status is NOT a
 # hardcoded name list: plans/provenance.py keys it on a fingerprint of each
-# query's source (plan module + imported operator/function modules), stamped
+# query's source (plan module + every in-package module it reaches
+# through imports, transitively), stamped
 # from the git tree the driver actually verified
 # (tools/stamp_verified.py -> _verified_stamps.json). Editing a plan, its
 # inline oracle, or an operator it uses changes the fingerprint and drops

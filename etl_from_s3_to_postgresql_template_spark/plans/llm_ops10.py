@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "docs_line_dedup",
@@ -356,12 +356,6 @@ def _bpe_norm_col(text_col: str):
             )
         )
     )
-
-
-def _bpe_sym_col(text_col: str):
-    """Normalized, symbolized text: one-char symbols joined by \\x1F
-    within words, ' ' between words."""
-    return F.regexp_replace(_bpe_norm_col(text_col), r"(?<=\S)(?=\S)", _BPE_SEP)
 
 
 def _bpe_apply_merges(col, merges):

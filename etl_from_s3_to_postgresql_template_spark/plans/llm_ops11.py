@@ -47,8 +47,10 @@ engines; nothing tolerance-compares. Whitespace is the explicit ASCII
 class (the llm_ops8 convention — RE2's ``\\s`` omits ``\\x0B``; Java's
 ``\\s`` is exactly ``[ \\t\\n\\x0B\\f\\r]``).
 
-New module by policy (VERDICT r8 item 1 / functions/foldvec.py:17):
-stamped modules stay frozen; new work re-fingerprints nothing.
+Module policy: helpers shared between plan modules live once in
+operators/ (or functions/) and are imported, never copied;
+plans/provenance.py follows imports transitively, so an edit to a
+shared helper re-checks every query that reaches it.
 
 Reference scope note: the reference pipeline (etl_pipeline.py ~734
 lines) has no quality/mixing/contamination surface; all four entries
@@ -60,9 +62,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import ws_token_count_col
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "docs_gopher_repetition",
@@ -83,28 +86,6 @@ __all__ = [
 #: explicit ASCII whitespace — identical byte set under Java regex and
 #: RE2 (the llm_ops8 convention)
 _WS = r"[ \t\n\x0B\f\r]+"
-
-#: maximal non-whitespace runs — each run IS one token
-_NONWS = r"[^ \t\n\x0B\f\r]+"
-
-
-def _ntok(tx) -> F.Column:
-    """Whitespace-token COUNT without materializing the token array:
-    collapse each non-whitespace run to one char and diff the lengths —
-    tokens are exactly the maximal non-WS runs, so this equals
-    ``size(filter(split(t, WS), x != ''))`` on any string (equality
-    re-verified on the 500k corpus before adoption). Two regex passes
-    beat the split form structurally: the split materializes ~190
-    strings per doc only to count them, and under allocation pressure
-    its wall time degrades 10x (same-session A/B on a loaded box:
-    split 3.6-43.9 s at 500k, collapse 6.0-10.8 s; fresh-session sweep
-    17-18 s split vs ~6 s collapse). The llm_ops8 A/B that KEPT its
-    HOFs needed the token array for other statistics — a pure count
-    does not."""
-    return (
-        F.length(F.regexp_replace(tx, _NONWS, "x"))
-        - F.length(F.regexp_replace(tx, _NONWS, ""))
-    ).cast("long")
 
 # ---------------------------------------------------------------------------
 # docs_gopher_repetition
@@ -469,7 +450,7 @@ def _unimax_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     dom = docs.select(
         _domain_col().alias("domain"),
-        _ntok(F.coalesce(F.col("text"), F.lit(""))).alias("n_tok"),
+        ws_token_count_col(F.coalesce(F.col("text"), F.lit(""))).alias("n_tok"),
     )
     agg = dom.groupBy("domain").agg(F.sum("n_tok").cast("long").alias("n_tokens"))
     cap = agg.select(
@@ -787,7 +768,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "long"
     )
     repl = F.regexp_replace(tx, _CJK_JAVA, " ")
-    n_ws = _ntok(repl)
+    n_ws = ws_token_count_col(repl)
     a = (
         docs.select(
             "lang",
@@ -1045,7 +1026,7 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     widens."""
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", _ntok(F.coalesce(F.col("text"), F.lit(""))).alias("n_tok")
+        "doc_id", ws_token_count_col(F.coalesce(F.col("text"), F.lit(""))).alias("n_tok")
     )
     nparts = max(2, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
     part = base.repartitionByRange(nparts, "doc_id").sortWithinPartitions("doc_id")

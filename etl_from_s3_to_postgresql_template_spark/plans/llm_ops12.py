@@ -50,8 +50,10 @@ Reference scope: the reference pipeline (etl_pipeline.py, 734 lines)
 has no URL or data-mixing surface; all three are north-star
 training-data operators.
 
-New module by policy (VERDICT r8 item 1): stamped modules stay frozen;
-new work re-fingerprints nothing.
+Module policy: helpers shared between plan modules live once in
+operators/ (or functions/) and are imported, never copied;
+plans/provenance.py follows imports transitively, so an edit to a
+shared helper re-checks every query that reaches it.
 """
 
 from __future__ import annotations
@@ -59,9 +61,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import ws_token_count_col
+from etl_from_s3_to_postgresql_template_spark.operators import ccnet
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "docs_url_normalize_dedup",
@@ -75,17 +79,6 @@ __all__ = [
 
 #: explicit ASCII whitespace (the llm_ops8 convention; RE2 \s omits \x0B)
 _WS = r"[ \t\n\x0B\f\r]+"
-_NONWS = r"[^ \t\n\x0B\f\r]+"
-
-
-def _ntok(tx) -> F.Column:
-    """Whitespace-token count via the two-pass length diff (the
-    llm_ops11 collapse-and-recount form — measured 2.5x faster and 10x
-    better tail than materializing the split array)."""
-    return (
-        F.length(F.regexp_replace(tx, _NONWS, "x"))
-        - F.length(F.regexp_replace(tx, _NONWS, ""))
-    ).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -547,7 +540,7 @@ def corpus_mixture_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("source"), F.lit("")),
             F.coalesce(F.col("lang"), F.lit("")),
         ).alias("domain"),
-        _ntok(tx).alias("n_tok"),
+        ws_token_count_col(tx).alias("n_tok"),
         F.length(tx).cast("long").alias("n_chars"),
     )
     # Everything after the corpus scan runs on the bounded domains
@@ -836,7 +829,7 @@ def corpus_prep_funnel_web(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.mapInPandas(
             _strip_carry, "doc_id long, registered_domain string, clean_text string"
         )
-        .withColumn("n_tok", _ntok(F.col("clean_text")))
+        .withColumn("n_tok", ws_token_count_col(F.col("clean_text")))
         .filter(F.col("n_tok").between(_FW_MIN_TOK, _FW_MAX_TOK))
     )
     rn = F.row_number().over(
@@ -862,8 +855,8 @@ def corpus_prep_funnel_web(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drops (tail).
 #
 # Score: the corpus's own Laplace-smoothed bigram LM mean log-prob (the
-# docs_bigram_logprob construction, re-declared with this module's
-# explicit-WS tokenizer; higher log-prob == lower perplexity). The
+# docs_bigram_logprob construction with the explicit-WS tokenizer;
+# higher log-prob == lower perplexity). The
 # 4-decimal rounded score is lifted to an EXACT integer (x 1e4), so the
 # bucket cutoffs are integers and the whole entry hash-exacts.
 #
@@ -873,103 +866,11 @@ def corpus_prep_funnel_web(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct 4-decimal scores), the descending cumulative runs on that
 # bounded frame, and the two cut values per language broadcast back —
 # threshold semantics (every doc with score >= cut1 is head, ties
-# included), deterministic on both engines.
-
-#: tokenize + bigram CTE chain ending at `bg(doc_id, lang, s{{w1,w2}})`
-#: — ONE definition consumed by the exact and hashed tiers' oracles
-_CC_TOKS_SQL = rf"""t AS (
-      SELECT doc_id, COALESCE(lang, '') AS lang,
-             list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS toks
-      FROM documents
-    ), bg AS (
-      SELECT doc_id, lang,
-             UNNEST(list_transform(range(len(toks) - 1),
-                    i -> {{'w1': toks[i+1], 'w2': toks[i+2]}})) AS s
-      FROM t WHERE len(toks) >= 2
-    )"""
-
-#: histogram -> threshold cutoffs -> bucket assignment over a
-#: `scored(doc_id, lang, lp)` CTE — shared by both tiers' oracles
-_CC_CUTS_SQL = """hist AS (
-      SELECT lang, lp, CAST(COUNT(*) AS BIGINT) AS c FROM scored GROUP BY 1, 2
-    ), tot AS (
-      SELECT lang, CAST(SUM(c) AS BIGINT) AS n FROM hist GROUP BY 1
-    ), cum AS (
-      SELECT h.lang, h.lp, t.n,
-             CAST(SUM(h.c) OVER (PARTITION BY h.lang ORDER BY h.lp DESC)
-                  AS BIGINT) AS cum
-      FROM hist h JOIN tot t USING (lang)
-    ), cuts AS (
-      SELECT lang,
-             MAX(CASE WHEN cum >= (n + 2) // 3 THEN lp END) AS cut1,
-             MAX(CASE WHEN cum >= (2 * n + 2) // 3 THEN lp END) AS cut2
-      FROM cum GROUP BY lang
-    )
-    SELECT s.doc_id, s.lang, s.lp,
-           CASE WHEN s.lp >= c.cut1 THEN 'head'
-                WHEN s.lp >= c.cut2 THEN 'middle'
-                ELSE 'tail' END AS bucket
-    FROM scored s JOIN cuts c USING (lang)
-    ORDER BY s.doc_id"""
-
-def _cc_bigram_occurrences(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, w1, w2) — one row per bigram OCCURRENCE, the
-    Spark twin of _CC_TOKS_SQL's `bg`, shared by both tiers."""
-    tx = F.coalesce(F.col("text"), F.lit(""))
-    toks = docs.select(
-        "doc_id",
-        F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
-        F.filter(F.split(F.lower(F.trim(tx)), _WS), lambda x: x != "").alias("t"),
-    ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select("doc_id", "lang", F.explode(bigrams).alias("s")).select(
-        "doc_id", "lang", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2")
-    )
-
-
-def _cc_assign_buckets(scored: DataFrame) -> DataFrame:
-    """histogram -> threshold cutoffs -> bucket assignment over a
-    (doc_id, lang, lp) frame — the Spark twin of _CC_CUTS_SQL, shared
-    by both tiers. The window runs ON THE HISTOGRAM (bounded), never
-    the document stream."""
-    from pyspark.sql import Window as W
-
-    hist = scored.groupBy("lang", "lp").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    tot = hist.groupBy("lang").agg(F.sum("c").cast("long").alias("n"))
-    # explicit hint: tot is <= one row per language, always
-    # broadcastable; estimate-based planning demoted it to a
-    # sort-merge join after the r12 LM restructure (guide 3.1)
-    cum = hist.join(F.broadcast(tot), "lang").withColumn(
-        "cum",
-        F.sum("c").over(W.partitionBy("lang").orderBy(F.desc("lp"))).cast("long"),
-    )
-    cuts = cum.groupBy("lang").agg(
-        F.max(F.when(F.expr("cum >= (n + 2) div 3"), F.col("lp"))).alias("cut1"),
-        F.max(F.when(F.expr("cum >= (2 * n + 2) div 3"), F.col("lp"))).alias("cut2"),
-    )
-    return (
-        scored.join(F.broadcast(cuts), "lang")
-        .select(
-            "doc_id",
-            "lang",
-            "lp",
-            F.when(F.col("lp") >= F.col("cut1"), F.lit("head"))
-            .when(F.col("lp") >= F.col("cut2"), F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
-        )
-        .orderBy("doc_id")
-    )
-
+# included), deterministic on both engines. The bigram extraction, the
+# bucket assignment and their oracle fragments live in operators/ccnet.
 
 _CC_ORACLE = rf"""
-    WITH {_CC_TOKS_SQL}, doc_pairs AS (
+    WITH {ccnet.TOKS_SQL}, doc_pairs AS (
       SELECT doc_id, lang, s.w1 AS w1, s.w2 AS w2,
              CAST(COUNT(*) AS BIGINT) AS c
       FROM bg GROUP BY 1, 2, 3, 4
@@ -990,7 +891,7 @@ _CC_ORACLE = rf"""
       JOIN w1_tot USING (w1)
       CROSS JOIN vocab
       GROUP BY d.doc_id, d.lang
-    ), {_CC_CUTS_SQL}
+    ), {ccnet.CUTS_SQL}
     """
 
 
@@ -1003,7 +904,7 @@ def docs_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ON THE HISTOGRAM -> 2 cut rows per language broadcast back onto the
     scored stream. No per-language sort of the document stream at any
     scale."""
-    occ = _cc_bigram_occurrences(load_table(spark, sf_dir, "documents", parallel=True))
+    occ = ccnet.bigram_occurrences(load_table(spark, sf_dir, "documents", parallel=True))
     doc_pairs = occ.groupBy(
         "doc_id", "lang", "w1", "w2"
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -1041,7 +942,7 @@ def docs_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(avg_lp * 10000).cast("long").alias("lp"))
         .transform(shared_subtree)
     )
-    return _cc_assign_buckets(scored)
+    return ccnet.assign_buckets(scored).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1053,15 +954,15 @@ def docs_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wall time tracks DISK state, not CPU (64 s in a loaded window vs
 # 144 s calm — shuffle-bound). This tier folds the LM into md5-bucket
 # tables (the docs_softdedup_weights_hashed convention, identical
-# bucketing expression on both engines): pair counts into _CCH_B
-# buckets, w1 marginals into _CCH_B buckets — both BOUNDED (~16 MB)
+# bucketing expression on both engines): pair counts into ccnet.B
+# buckets, w1 marginals into ccnet.B buckets — both BOUNDED (~16 MB)
 # and therefore BROADCAST, so the bigram stream is scored map-side and
 # never shuffles; partial aggregation collapses the LM builds to
-# <= _CCH_B rows per task before their exchanges. Collision bias folds
+# <= ccnet.B rows per task before their exchanges. Collision bias folds
 # counts upward only (two pairs sharing a bucket read as more common),
 # the exact trade SoftDeDup's hashed tier documents. The histogram /
 # cutoff / assignment machinery is byte-identical to the exact tier
-# (shared helpers above).
+# (operators/ccnet).
 #
 # Measured (500k docs): shuffle 164 MB / 16M records vs the exact
 # tier's 9.4 GB / 484M — 57x less; wall 84.7 s vs 144 s in the same
@@ -1070,18 +971,11 @@ def docs_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket hash for xxhash64 (~10x cheaper, same bounded table shape) —
 # the SoftDeDup-tier convention.
 
-_CCH_B = 1_048_576  # 2^20 buckets per table
-
-
-def _cch_bucket_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT % {_CCH_B}"
-
-
 _CCH_ORACLE = rf"""
-    WITH {_CC_TOKS_SQL}, occ AS (
+    WITH {ccnet.TOKS_SQL}, occ AS (
       SELECT doc_id, lang,
-             {_cch_bucket_sql("s.w1 || ' ' || s.w2")} AS b12,
-             {_cch_bucket_sql("s.w1")} AS b1
+             {ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")} AS b12,
+             {ccnet.bucket_md5_sql("s.w1")} AS b1
       FROM bg
     ), lm12 AS (
       SELECT b12, CAST(COUNT(*) AS BIGINT) AS pair_cnt FROM occ GROUP BY b12
@@ -1099,7 +993,7 @@ _CCH_ORACLE = rf"""
       JOIN lm1 USING (b1)
       CROSS JOIN vocab
       GROUP BY o.doc_id, o.lang
-    ), {_CC_CUTS_SQL}
+    ), {ccnet.CUTS_SQL}
     """
 
 
@@ -1110,59 +1004,4 @@ def docs_ccnet_ppl_buckets_hashed(spark: SparkSession, sf_dir: str) -> DataFrame
     bigram stream never shuffles — the 100 TB shape. Hash-exact
     cross-engine (identical md5 bucketing both sides); the exact tier
     stays registered beside it as the unbucketed reference."""
-    occ = _cc_bigram_occurrences(load_table(spark, sf_dir, "documents", parallel=True))
-
-    def _bucket(col: F.Column) -> F.Column:
-        return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % _CCH_B
-
-    occ = occ.select(
-        "doc_id",
-        "lang",
-        _bucket(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))).alias("b12"),
-        _bucket(F.col("w1")).alias("b1"),
-    )
-    # ONE pass builds BOTH bucket tables (r12): lm12, lm1 and vocab each
-    # consuming `occ` directly re-ran the tokenize+explode+md5 chain once
-    # per table (3 full corpus passes for the LM build alone). Exploding
-    # each occurrence into its two (table, bucket) keys keeps the counts
-    # byte-identical, partial aggregation still collapses to <= 2*2^20
-    # rows per task before the exchange, and the bounded result is
-    # lazily checkpointed so its three readers share the single pass.
-    kb = occ.select(
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("k"), F.col("b12").alias("b")),
-                F.struct(F.lit(1).alias("k"), F.col("b1").alias("b")),
-            )
-        ).alias("kb")
-    ).select("kb.k", "kb.b")
-    lm = (
-        kb.groupBy("k", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(shared_subtree)
-    )
-    lm12 = lm.where(F.col("k") == 0).select(
-        F.col("b").alias("b12"), F.col("c").alias("pair_cnt")
-    )
-    lm1 = lm.where(F.col("k") == 1).select(
-        F.col("b").alias("b1"), F.col("c").alias("w1_cnt")
-    )
-    vocab = lm1.agg(F.count(F.lit(1)).cast("double").alias("v"))
-    avg_lp = F.round(
-        F.sum(
-            F.log(
-                (F.col("pair_cnt") + 1.0) / (F.col("w1_cnt") + F.col("v"))
-            ).cast("decimal(38,15)")
-        ).cast("double")
-        / F.count(F.lit(1)),
-        4,
-    )
-    scored = (
-        occ.join(F.broadcast(lm12), "b12")
-        .join(F.broadcast(lm1), "b1")
-        .crossJoin(F.broadcast(vocab))
-        .groupBy("doc_id", "lang")
-        .agg(F.round(avg_lp * 10000).cast("long").alias("lp"))
-        .transform(shared_subtree)
-    )
-    return _cc_assign_buckets(scored)
+    return ccnet.self_lm_buckets(load_table(spark, sf_dir, "documents", parallel=True))

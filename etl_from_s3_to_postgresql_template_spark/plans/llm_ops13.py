@@ -10,7 +10,7 @@ VERDICT r10 (items 3-5).
    the held-out slice ``doc_id % 10 == 0`` stands in for the curated
    corpus: its bigram LM folds into two BOUNDED md5-bucket tables
    (2^20 rows max, ~16 MB — the docs_ccnet_ppl_buckets_hashed
-   convention, re-declared below per the module-coupling policy) which
+   convention, shared through operators/ccnet) which
    BROADCAST, so the scored stream (``doc_id % 10 != 0``) is scored
    entirely map-side: zero LM-construction shuffle from the scored
    stream, zero scored-stream shuffle before the per-doc aggregate —
@@ -59,21 +59,23 @@ a pure per-row expression chain (no shuffle but the final sort).
 Reference scope: the reference pipeline has no CCNet or dedup surface;
 the date_range struct is reference parity (etl_pipeline.py:181-189).
 
-New module by policy (VERDICT r8 item 1): stamped modules stay frozen;
-the CCNet helpers are re-declared, not imported, so llm_ops12's
-fingerprints are untouched.
+Module policy: helpers shared between plan modules live once in
+operators/ (or functions/) and are imported, never copied;
+plans/provenance.py follows imports transitively, so an edit to a
+shared helper re-checks every query that reaches it.
+The CCNet scorer is operators/ccnet and the Bloom filter
+operators/bloom, both shared with llm_ops12/llm_ops14.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.functions.dates import (
     extract_date_range_col,
 )
+from etl_from_s3_to_postgresql_template_spark.operators import bloom, ccnet
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
@@ -90,112 +92,16 @@ __all__ = [
     "project_extract_date_range",
 ]
 
-# explicit whitespace class — RE2 \s omits \x0B (the repo convention)
-_WS = r"[ \t\n\x0B\f\r]+"
-
-
 # ---------------------------------------------------------------------------
 # docs_ccnet_ppl_score_external
 # ---------------------------------------------------------------------------
-# Helpers re-declared from llm_ops12 (same text, independent fingerprint).
-
-_CCX_B = 1_048_576  # 2^20 buckets per LM table
-
-_CCX_TOKS_SQL = rf"""t AS (
-      SELECT doc_id, COALESCE(lang, '') AS lang,
-             list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS toks
-      FROM documents
-    ), bg AS (
-      SELECT doc_id, lang,
-             UNNEST(list_transform(range(len(toks) - 1),
-                    i -> {{'w1': toks[i+1], 'w2': toks[i+2]}})) AS s
-      FROM t WHERE len(toks) >= 2
-    )"""
-
-_CCX_CUTS_SQL = """hist AS (
-      SELECT lang, lp, CAST(COUNT(*) AS BIGINT) AS c FROM scored GROUP BY 1, 2
-    ), tot AS (
-      SELECT lang, CAST(SUM(c) AS BIGINT) AS n FROM hist GROUP BY 1
-    ), cum AS (
-      SELECT h.lang, h.lp, t.n,
-             CAST(SUM(h.c) OVER (PARTITION BY h.lang ORDER BY h.lp DESC)
-                  AS BIGINT) AS cum
-      FROM hist h JOIN tot t USING (lang)
-    ), cuts AS (
-      SELECT lang,
-             MAX(CASE WHEN cum >= (n + 2) // 3 THEN lp END) AS cut1,
-             MAX(CASE WHEN cum >= (2 * n + 2) // 3 THEN lp END) AS cut2
-      FROM cum GROUP BY lang
-    )
-    SELECT s.doc_id, s.lang, s.lp,
-           CASE WHEN s.lp >= c.cut1 THEN 'head'
-                WHEN s.lp >= c.cut2 THEN 'middle'
-                ELSE 'tail' END AS bucket
-    FROM scored s JOIN cuts c USING (lang)
-    ORDER BY s.doc_id"""
-
-
-def _ccx_bucket_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT % {_CCX_B}"
-
-
-def _ccx_bigram_occurrences(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, w1, w2) — one row per bigram OCCURRENCE."""
-    tx = F.coalesce(F.col("text"), F.lit(""))
-    toks = docs.select(
-        "doc_id",
-        F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
-        F.filter(F.split(F.lower(F.trim(tx)), _WS), lambda x: x != "").alias("t"),
-    ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select("doc_id", "lang", F.explode(bigrams).alias("s")).select(
-        "doc_id", "lang", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2")
-    )
-
-
-def _ccx_assign_buckets(scored: DataFrame) -> DataFrame:
-    """histogram -> cutoffs -> head/middle/tail over (doc_id, lang, lp);
-    the window runs ON THE HISTOGRAM (bounded), never the doc stream."""
-    from pyspark.sql import Window as W
-
-    hist = scored.groupBy("lang", "lp").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    tot = hist.groupBy("lang").agg(F.sum("c").cast("long").alias("n"))
-    # explicit hint: tot is <= one row per language, always
-    # broadcastable; estimate-based planning demoted it to a
-    # sort-merge join after the r12 LM restructure (guide 3.1)
-    cum = hist.join(F.broadcast(tot), "lang").withColumn(
-        "cum",
-        F.sum("c").over(W.partitionBy("lang").orderBy(F.desc("lp"))).cast("long"),
-    )
-    cuts = cum.groupBy("lang").agg(
-        F.max(F.when(F.expr("cum >= (n + 2) div 3"), F.col("lp"))).alias("cut1"),
-        F.max(F.when(F.expr("cum >= (2 * n + 2) div 3"), F.col("lp"))).alias("cut2"),
-    )
-    return (
-        scored.join(F.broadcast(cuts), "lang")
-        .select(
-            "doc_id",
-            "lang",
-            "lp",
-            F.when(F.col("lp") >= F.col("cut1"), F.lit("head"))
-            .when(F.col("lp") >= F.col("cut2"), F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
-        )
-        .orderBy("doc_id")
-    )
-
+# The bigram extraction, bucketing, scorer and bucket assignment (and
+# their oracle fragments) are operators/ccnet's.
 
 _CCX_ORACLE = rf"""
-    WITH {_CCX_TOKS_SQL}, lm_occ AS (
-      SELECT {_ccx_bucket_sql("s.w1 || ' ' || s.w2")} AS b12,
-             {_ccx_bucket_sql("s.w1")} AS b1
+    WITH {ccnet.TOKS_SQL}, lm_occ AS (
+      SELECT {ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")} AS b12,
+             {ccnet.bucket_md5_sql("s.w1")} AS b1
       FROM bg WHERE doc_id % 10 = 0
     ), lm12 AS (
       SELECT b12, CAST(COUNT(*) AS BIGINT) AS pair_cnt FROM lm_occ GROUP BY b12
@@ -205,8 +111,8 @@ _CCX_ORACLE = rf"""
       SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM lm1
     ), occ AS (
       SELECT doc_id, lang,
-             {_ccx_bucket_sql("s.w1 || ' ' || s.w2")} AS b12,
-             {_ccx_bucket_sql("s.w1")} AS b1
+             {ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")} AS b12,
+             {ccnet.bucket_md5_sql("s.w1")} AS b1
       FROM bg WHERE doc_id % 10 <> 0
     ), scored AS (
       SELECT o.doc_id, o.lang,
@@ -218,7 +124,7 @@ _CCX_ORACLE = rf"""
       LEFT JOIN lm1 USING (b1)
       CROSS JOIN vocab
       GROUP BY o.doc_id, o.lang
-    ), {_CCX_CUTS_SQL}
+    ), {ccnet.CUTS_SQL}
     """
 
 
@@ -230,66 +136,15 @@ def docs_ccnet_ppl_score_external(spark: SparkSession, sf_dir: str) -> DataFrame
     scored map-side (left joins, add-one backoff for unseen bigrams).
     At 100 TB the supplied-LM tables are loaded once and broadcast —
     the crawl contributes zero LM-construction shuffle."""
-    occ_all = _ccx_bigram_occurrences(load_table(spark, sf_dir, "documents", parallel=True))
-
-    def _bucket(col: Column) -> Column:
-        return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % _CCX_B
-
-    occ_all = occ_all.select(
-        "doc_id",
-        "lang",
-        _bucket(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))).alias("b12"),
-        _bucket(F.col("w1")).alias("b1"),
+    occ_all = ccnet.bucketed_occ(
+        ccnet.bigram_occurrences(load_table(spark, sf_dir, "documents", parallel=True))
     )
     lm_occ = occ_all.where(F.col("doc_id") % 10 == 0)
     occ = occ_all.where(F.col("doc_id") % 10 != 0)
-    # ONE pass over the reference slice builds BOTH bucket tables (r12):
-    # lm12, lm1 and vocab each consuming lm_occ re-ran the tokenize+
-    # explode+md5 chain once per table. Counts are byte-identical; the
-    # bounded (<= 2*2^20 rows) result is lazily checkpointed so its
-    # readers share the single pass (the llm_ops12 hashed-tier shape).
-    kb = lm_occ.select(
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("k"), F.col("b12").alias("b")),
-                F.struct(F.lit(1).alias("k"), F.col("b1").alias("b")),
-            )
-        ).alias("kb")
-    ).select("kb.k", "kb.b")
-    lm = (
-        kb.groupBy("k", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(shared_subtree)
-    )
-    lm12 = lm.where(F.col("k") == 0).select(
-        F.col("b").alias("b12"), F.col("c").alias("pair_cnt")
-    )
-    lm1 = lm.where(F.col("k") == 1).select(
-        F.col("b").alias("b1"), F.col("c").alias("w1_cnt")
-    )
-    vocab = lm1.agg(F.count(F.lit(1)).cast("double").alias("v"))
-    # decimal accumulation: exact, order-free (the llm_ops2 convention)
-    avg_lp = F.round(
-        F.sum(
-            F.log(
-                (F.coalesce(F.col("pair_cnt"), F.lit(0)) + 1.0)
-                / (F.coalesce(F.col("w1_cnt"), F.lit(0)) + F.col("v"))
-            ).cast("decimal(38,15)")
-        ).cast("double")
-        / F.count(F.lit(1)),
-        4,
-    )
     # scored feeds the histogram, the cuts broadcast, AND the final
     # assignment join (the llm_ops5/6 multi-subtree precedent)
-    scored = (
-        occ.join(F.broadcast(lm12), "b12", "left")
-        .join(F.broadcast(lm1), "b1", "left")
-        .crossJoin(F.broadcast(vocab))
-        .groupBy("doc_id", "lang")
-        .agg(F.round(avg_lp * 10000).cast("long").alias("lp"))
-        .transform(shared_subtree)
-    )
-    return _ccx_assign_buckets(scored)
+    scored = ccnet.lm_scored(lm_occ, occ, external=True).transform(shared_subtree)
+    return ccnet.assign_buckets(scored).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -311,61 +166,18 @@ def _ccx_external_perlang_scored(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, lp) for every scoreable stream doc whose language
     has an LM — per-language external-LM scoring, all LM tables
     broadcast, stream scored map-side."""
-    occ_all = _ccx_bigram_occurrences(docs).select(
-        "doc_id",
-        "lang",
-        _bucket_md5(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))).alias("b12"),
-        _bucket_md5(F.col("w1")).alias("b1"),
-    )
+    occ_all = ccnet.bucketed_occ(ccnet.bigram_occurrences(docs))
     lm_occ = occ_all.where(F.col("doc_id") % 10 == 0)
     occ = occ_all.where(F.col("doc_id") % 10 != 0)
-    # ONE reference-slice pass builds both per-lang bucket tables (r12 —
-    # the pooled-tier comment above; keys gain the lang column)
-    kb = lm_occ.select(
-        "lang",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("k"), F.col("b12").alias("b")),
-                F.struct(F.lit(1).alias("k"), F.col("b1").alias("b")),
-            )
-        ).alias("kb"),
-    ).select("lang", "kb.k", "kb.b")
-    lm = (
-        kb.groupBy("lang", "k", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(shared_subtree)
-    )
-    lm12 = lm.where(F.col("k") == 0).select(
-        "lang", F.col("b").alias("b12"), F.col("c").alias("pair_cnt")
-    )
-    lm1 = lm.where(F.col("k") == 1).select(
-        "lang", F.col("b").alias("b1"), F.col("c").alias("w1_cnt")
-    )
-    vocab = lm1.groupBy("lang").agg(F.count(F.lit(1)).cast("double").alias("v"))
-    avg_lp = F.round(
-        F.sum(
-            F.log(
-                (F.coalesce(F.col("pair_cnt"), F.lit(0)) + 1.0)
-                / (F.coalesce(F.col("w1_cnt"), F.lit(0)) + F.col("v"))
-            ).cast("decimal(38,15)")
-        ).cast("double")
-        / F.count(F.lit(1)),
-        4,
-    )
-    return (
-        occ.join(F.broadcast(lm12), ["lang", "b12"], "left")
-        .join(F.broadcast(lm1), ["lang", "b1"], "left")
-        .join(F.broadcast(vocab), "lang")  # inner: unscoreable langs drop
-        .groupBy("doc_id", "lang")
-        .agg(F.round(avg_lp * 10000).cast("long").alias("lp"))
-        .transform(shared_subtree)
+    return ccnet.lm_scored(lm_occ, occ, per_lang=True, external=True).transform(
+        shared_subtree
     )
 
 
 _CCP_SCORED_SQL = rf"""lm_occ AS (
       SELECT lang,
-             {_ccx_bucket_sql("s.w1 || ' ' || s.w2")} AS b12,
-             {_ccx_bucket_sql("s.w1")} AS b1
+             {ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")} AS b12,
+             {ccnet.bucket_md5_sql("s.w1")} AS b1
       FROM bg WHERE doc_id % 10 = 0
     ), lm12 AS (
       SELECT lang, b12, CAST(COUNT(*) AS BIGINT) AS pair_cnt
@@ -377,8 +189,8 @@ _CCP_SCORED_SQL = rf"""lm_occ AS (
       SELECT lang, CAST(COUNT(*) AS DOUBLE) AS v FROM lm1 GROUP BY lang
     ), occ AS (
       SELECT doc_id, lang,
-             {_ccx_bucket_sql("s.w1 || ' ' || s.w2")} AS b12,
-             {_ccx_bucket_sql("s.w1")} AS b1
+             {ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")} AS b12,
+             {ccnet.bucket_md5_sql("s.w1")} AS b1
       FROM bg WHERE doc_id % 10 <> 0
     ), scored AS (
       SELECT o.doc_id, o.lang,
@@ -393,7 +205,7 @@ _CCP_SCORED_SQL = rf"""lm_occ AS (
     )"""
 
 _CCP_ORACLE = rf"""
-    WITH {_CCX_TOKS_SQL}, {_CCP_SCORED_SQL}, {_CCX_CUTS_SQL}
+    WITH {ccnet.TOKS_SQL}, {_CCP_SCORED_SQL}, {ccnet.CUTS_SQL}
     """
 
 
@@ -405,14 +217,11 @@ def docs_ccnet_ppl_score_external_perlang(spark: SparkSession, sf_dir: str) -> D
     LM are not scored (CCNet semantics). Terciles are per-language as
     in every tier."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    return _ccx_assign_buckets(_ccx_external_perlang_scored(docs))
+    return ccnet.assign_buckets(_ccx_external_perlang_scored(docs)).orderBy("doc_id")
 
-
-#: deterministic 1-in-3 md5 coin on doc_id — identical on both engines
-_CCS_COIN_SQL = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 = 0"
 
 _CCS_ORACLE = rf"""
-    WITH {_CCX_TOKS_SQL}, {_CCP_SCORED_SQL}, bkt AS (
+    WITH {ccnet.TOKS_SQL}, {_CCP_SCORED_SQL}, bkt AS (
       SELECT s.doc_id, s.lang, s.lp,
              CASE WHEN s.lp >= c.cut1 THEN 'head'
                   WHEN s.lp >= c.cut2 THEN 'middle'
@@ -433,7 +242,7 @@ _CCS_ORACLE = rf"""
       ) c USING (lang)
     )
     SELECT doc_id, lang, lp, bucket,
-           (bucket = 'head' OR (bucket = 'middle' AND {_CCS_COIN_SQL})) AS kept
+           (bucket = 'head' OR (bucket = 'middle' AND {ccnet.COIN_SQL})) AS kept
     FROM bkt ORDER BY doc_id
     """
 
@@ -447,13 +256,7 @@ def docs_ccnet_sample_headmiddle(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision; a production run filters on it — a pure projection, so
     Catalyst collapses the difference."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    bkt = _ccx_assign_buckets(_ccx_external_perlang_scored(docs))
-    coin = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 3
-        == 0
-    )
+    bkt = ccnet.assign_buckets(_ccx_external_perlang_scored(docs)).orderBy("doc_id")
     return bkt.select(
         "doc_id",
         "lang",
@@ -461,7 +264,7 @@ def docs_ccnet_sample_headmiddle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         (
             (F.col("bucket") == "head")
-            | ((F.col("bucket") == "middle") & coin)
+            | ((F.col("bucket") == "middle") & ccnet.coin())
         ).alias("kept"),
     ).orderBy("doc_id")
 
@@ -479,72 +282,6 @@ def docs_ccnet_sample_headmiddle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the winnowing exact/fast tier-agreement convention).
 
 
-def _ccx_self_lm_buckets(docs_or_occ: DataFrame, bucket) -> DataFrame:
-    """Self-LM hashed CCNet chain (llm_ops12's hashed tier shape,
-    re-declared) parameterized by the bucket expression. Accepts either
-    a documents frame or a pre-extracted (doc_id, lang, w1, w2)
-    occurrence frame — the agreement gate shares ONE tokenize+explode
-    pass between its two tiers (review r11)."""
-    src = docs_or_occ
-    if "w1" not in src.columns:
-        src = _ccx_bigram_occurrences(src)
-    occ = src.select(
-        "doc_id",
-        "lang",
-        bucket(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))).alias("b12"),
-        bucket(F.col("w1")).alias("b1"),
-    )
-    # ONE pass builds both bucket tables (r12 — the external-tier comment
-    # above): 3 LM-build evaluations of the tokenize+explode+hash chain
-    # collapse into one bounded, lazily checkpointed count frame
-    kb = occ.select(
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("k"), F.col("b12").alias("b")),
-                F.struct(F.lit(1).alias("k"), F.col("b1").alias("b")),
-            )
-        ).alias("kb")
-    ).select("kb.k", "kb.b")
-    lm = (
-        kb.groupBy("k", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(shared_subtree)
-    )
-    lm12 = lm.where(F.col("k") == 0).select(
-        F.col("b").alias("b12"), F.col("c").alias("pair_cnt")
-    )
-    lm1 = lm.where(F.col("k") == 1).select(
-        F.col("b").alias("b1"), F.col("c").alias("w1_cnt")
-    )
-    vocab = lm1.agg(F.count(F.lit(1)).cast("double").alias("v"))
-    avg_lp = F.round(
-        F.sum(
-            F.log(
-                (F.col("pair_cnt") + 1.0) / (F.col("w1_cnt") + F.col("v"))
-            ).cast("decimal(38,15)")
-        ).cast("double")
-        / F.count(F.lit(1)),
-        4,
-    )
-    scored = (
-        occ.join(F.broadcast(lm12), "b12")
-        .join(F.broadcast(lm1), "b1")
-        .crossJoin(F.broadcast(vocab))
-        .groupBy("doc_id", "lang")
-        .agg(F.round(avg_lp * 10000).cast("long").alias("lp"))
-        .transform(shared_subtree)
-    )
-    return _ccx_assign_buckets(scored)
-
-
-def _bucket_md5(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % _CCX_B
-
-
-def _bucket_fast(col: Column) -> Column:
-    return F.xxhash64(col).bitwiseAND(F.lit(_CCX_B - 1))
-
-
 @query("docs_ccnet_ppl_buckets_fast")
 def docs_ccnet_ppl_buckets_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet hashed tier with the production bucket hash (module comment
@@ -552,11 +289,13 @@ def docs_ccnet_ppl_buckets_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence — same bounded broadcast LM tables, same map-side
     scoring. Rows-only by design; quality gated by
     docs_ccnet_ppl_agreement_gate."""
-    return _ccx_self_lm_buckets(load_table(spark, sf_dir, "documents", parallel=True), _bucket_fast)
+    return ccnet.self_lm_buckets(
+        load_table(spark, sf_dir, "documents", parallel=True), ccnet.bucket_fast
+    )
 
 
 _CCA_GATE_ORACLE = rf"""
-    WITH {_CCX_TOKS_SQL}
+    WITH {ccnet.TOKS_SQL}
     SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
            TRUE AS agree_ok
     FROM bg
@@ -588,7 +327,7 @@ def docs_ccnet_ppl_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     because the fraction of docs containing >= 1 collided bigram grows
     with the distinct-pair count. That is collision arithmetic, not a
     defect: a production deployment sizes B with the vocabulary
-    (B ~ 16x distinct unigrams, the _bf_bits_for convention), which
+    (B ~ 16x distinct unigrams, the bloom.bits_for convention), which
     pins the collided-doc fraction — and therefore this band — flat.
     The registered tiers keep B fixed because the md5 oracle twin
     bakes B into cross-engine SQL; the gate's contract is the driver
@@ -597,11 +336,11 @@ def docs_ccnet_ppl_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     # one tokenize+bigram-explode pass feeds BOTH tiers (checkpointed:
     # two consuming subtrees would otherwise re-run it — the llm_ops5/6
     # multi-subtree precedent)
-    occ = _ccx_bigram_occurrences(docs).transform(shared_subtree)
-    fast = _ccx_self_lm_buckets(occ, _bucket_fast).select(
+    occ = ccnet.bigram_occurrences(docs).transform(shared_subtree)
+    fast = ccnet.self_lm_buckets(occ, ccnet.bucket_fast).select(
         "doc_id", F.col("bucket").alias("b_fast")
     )
-    md5t = _ccx_self_lm_buckets(occ, _bucket_md5).select(
+    md5t = ccnet.self_lm_buckets(occ, ccnet.bucket_md5).select(
         "doc_id", F.col("bucket").alias("b_md5")
     )
     return fast.join(md5t, "doc_id").agg(
@@ -618,61 +357,13 @@ def docs_ccnet_ppl_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame
 # docs_bloom_paragraph_dedup (+ gate)
 # ---------------------------------------------------------------------------
 
-_BF_MIN_BITS = 1 << 20  # m floor: 16 Ki packed words = 128 KB broadcast
-_BF_MAX_BITS = 1 << 27  # m ceiling: 2 Mi words = 16 MB — still broadcastable
-_BF_K = 7  # hash functions — optimal near m/n ~ 10-16 bits/item
-
-
-def _bf_bits_for(n_items: int) -> int:
-    """Bitset size for n expected items: next power of two >= 16n
-    (fpp ~ 1e-3 at k=7), clamped to [2^20, 2^27]. Power of two keeps
-    position extraction a mask. The count that feeds this is a bounded
-    scalar action over the REFERENCE shard only (the documented
-    bounded-scalar-collect class); a production pipeline that knows its
-    shard size passes it instead."""
-    return max(_BF_MIN_BITS, min(_BF_MAX_BITS, 1 << max(0, (16 * max(1, n_items) - 1).bit_length())))
-
-
-def _paragraphs(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, par): newline-split, trimmed, empties dropped —
-    the Dolma paragraph unit (docs_line_dedup's line convention)."""
-    text = F.coalesce(F.col("text"), F.lit(""))
-    return (
-        docs.select("doc_id", F.posexplode(F.split(text, "\n", -1)).alias("pos", "raw"))
-        .select("doc_id", "pos", F.trim(F.col("raw")).alias("par"))
-        .where(F.col("par") != "")
-    )
-
-
-def _bf_positions(par: Column, bits: int) -> list[Column]:
-    """k double-hashed bit positions (Kirsch-Mitzenmacher): pos_j =
-    (h1 + j*h2) & (m-1). Long overflow wraps deterministically (ANSI
-    off per registry confs); & with m-1 is non-negative for any sign."""
-    h1 = F.xxhash64(par)
-    h2 = F.xxhash64(par, F.lit(1))
-    return [(h1 + F.lit(j) * h2).bitwiseAND(F.lit(bits - 1)) for j in range(_BF_K)]
-
-
-def _bf_words(ref_pars: DataFrame, bits: int = _BF_MIN_BITS) -> DataFrame:
-    """OR-fold the reference paragraphs' bit positions into the packed
-    (wi, w) words table — <= m/64 rows, partial-aggregated map-side
-    (bit_or combines associatively), always broadcastable."""
-    pos = ref_pars.select(
-        F.explode(F.array(*_bf_positions(F.col("par"), bits))).alias("p")
-    )
-    return pos.groupBy(F.expr("shiftright(p, 6)").alias("wi")).agg(
-        F.expr("bit_or(shiftleft(1L, cast((p & 63) as int)))").alias("w")
-    )
-
-
-def _bf_flag_probe(
-    probe_pars: DataFrame,
-    words: DataFrame,
-    bits: int = _BF_MIN_BITS,
-    n_ref: int = 0,
-) -> DataFrame:
-    """Append might_contain as `dup`: k broadcast joins + bit tests —
-    whole-stage codegen, the probe stream never shuffles here."""
+def _probe_odd_half(pars: DataFrame) -> DataFrame:
+    """Bloom filter over the even-doc_id half's paragraphs, probed by
+    the odd half: the odd-half paragraph frame with the `dup` flag."""
+    ref = pars.where(F.col("doc_id") % 2 == 0)
+    n_ref = ref.count()  # bounded scalar action, sizes m
+    bits = bloom.bits_for(n_ref)
+    words = bloom.words(ref, bits)
     # each of the k broadcast builds evaluates its own copy of the words
     # subtree (the per-j renames defeat exchange reuse) — 7 full passes
     # of the reference-paragraph explode+agg without this checkpoint of
@@ -684,30 +375,14 @@ def _bf_flag_probe(
     # fired once per plan construction, and below ~10^5 reference
     # paragraphs the 7 rebuilds it saves are cheaper than the job it
     # costs (driver bench r12: docs_bloom_paragraph_dedup 0.66 -> 1.44 s
-    # at sf0.1, where the whole rebuild is a few-ms agg). Callers thread
-    # the reference-shard paragraph count they already computed for
-    # _bf_bits_for; past the threshold the r12 500k A/B stands (eager
-    # 3.1-3.7 s vs none 7.1-15.9 s). The threshold is the m floor's
-    # capacity (16n > 2^20): a filter bigger than the floor means the
-    # reference shard is big enough that 7 explode+agg rebuilds dominate
-    # one checkpoint job.
-    if n_ref * 16 > _BF_MIN_BITS:
+    # at sf0.1, where the whole rebuild is a few-ms agg). Past the
+    # threshold the r12 500k A/B stands (eager 3.1-3.7 s vs none
+    # 7.1-15.9 s). The threshold is the m floor's capacity (16n > 2^20):
+    # a filter bigger than the floor means the reference shard is big
+    # enough that 7 explode+agg rebuilds dominate one checkpoint job.
+    if n_ref * 16 > bloom.MIN_BITS:
         words = words.transform(shared_subtree_eager)
-    out = probe_pars
-    for j, pos in enumerate(_bf_positions(F.col("par"), bits)):
-        out = out.withColumn(f"_p{j}", pos)
-    flags = []
-    for j in range(_BF_K):
-        wj = words.select(F.col("wi").alias(f"_wi{j}"), F.col("w").alias(f"_w{j}"))
-        out = out.join(
-            F.broadcast(wj), F.expr(f"shiftright(_p{j}, 6)") == F.col(f"_wi{j}"), "left"
-        )
-        flags.append(
-            F.expr(f"coalesce(_w{j} & shiftleft(1L, cast((_p{j} & 63) as int)), 0L) != 0")
-        )
-    dup = reduce(lambda a, b: a & b, flags)
-    keep = [c for c in probe_pars.columns]
-    return out.select(*keep, dup.alias("dup"))
+    return bloom.flag_probe(pars.where(F.col("doc_id") % 2 == 1), words, bits)
 
 
 @query("docs_bloom_paragraph_dedup")
@@ -721,12 +396,8 @@ def docs_bloom_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     # checkpointed: the sizing count, the filter build, and the probe all
     # consume the paragraph frame
-    pars = _paragraphs(docs).transform(shared_subtree)
-    ref = pars.where(F.col("doc_id") % 2 == 0)
-    n_ref = ref.count()  # bounded scalar action, sizes m
-    bits = _bf_bits_for(n_ref)
-    words = _bf_words(ref, bits)
-    probe = _bf_flag_probe(pars.where(F.col("doc_id") % 2 == 1), words, bits, n_ref)
+    pars = bloom.paragraphs(docs).transform(shared_subtree)
+    probe = _probe_odd_half(pars)
     return (
         probe.groupBy("doc_id")
         .agg(
@@ -750,12 +421,8 @@ def docs_bloom_paragraph_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     removals regroup per doc as position lists, and the one
     text-bearing exchange is the doc-level join-back + output sort."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    pars = _paragraphs(docs).transform(shared_subtree)
-    ref = pars.where(F.col("doc_id") % 2 == 0)
-    n_ref = ref.count()
-    bits = _bf_bits_for(n_ref)
-    words = _bf_words(ref, bits)
-    probe = _bf_flag_probe(pars.where(F.col("doc_id") % 2 == 1), words, bits, n_ref)
+    pars = bloom.paragraphs(docs).transform(shared_subtree)
+    probe = _probe_odd_half(pars)
     stats = probe.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_paragraphs"),
         F.sum(F.col("dup").cast("long")).cast("long").alias("n_removed"),
@@ -811,12 +478,9 @@ def docs_bloom_paragraph_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFra
     false positives among true non-duplicates stay under 5% (target
     fpp at fixture load ~1e-10)."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    pars = _paragraphs(docs).transform(shared_subtree)
+    pars = bloom.paragraphs(docs).transform(shared_subtree)
+    probe = _probe_odd_half(pars)
     ref_pars = pars.where(F.col("doc_id") % 2 == 0)
-    n_ref = ref_pars.count()
-    bits = _bf_bits_for(n_ref)
-    words = _bf_words(ref_pars, bits)
-    probe = _bf_flag_probe(pars.where(F.col("doc_id") % 2 == 1), words, bits, n_ref)
     # no broadcast hint: the distinct reference TEXT frame grows with the
     # corpus (unlike the 128 KB words table) — let Spark's size-based
     # planning fall back to a shuffle join past the threshold (review r11)

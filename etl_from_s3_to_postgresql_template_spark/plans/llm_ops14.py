@@ -67,17 +67,20 @@ Reference scope: the reference pipeline (a 734-line pandas/boto3 ETL)
 has no dedup/CCNet surface; the funnel mirrors its main() composition
 pattern (etl_pipeline.py:252-545) over the extension operators.
 
-New module by policy (VERDICT r8 item 1): llm_ops13's helpers are
-re-declared, not imported, so its fingerprints stay decoupled.
+Module policy: helpers shared between plan modules live once in
+operators/ (or functions/) and are imported, never copied;
+plans/provenance.py follows imports transitively, so an edit to a
+shared helper re-checks every query that reaches it.
+The Bloom filter is operators/bloom and the CCNet scorer
+operators/ccnet, both shared with llm_ops13.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators import bloom, ccnet
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
@@ -92,244 +95,6 @@ __all__ = [
 
 # explicit whitespace class — RE2 \s omits \x0B (the repo convention)
 _WS = r"[ \t\n\x0B\f\r]+"
-
-# ---------------------------------------------------------------------------
-# Re-declared Bloom helpers (llm_ops13 text, independent fingerprint)
-# ---------------------------------------------------------------------------
-
-_BF_MIN_BITS = 1 << 20  # m floor: 16 Ki packed words = 128 KB broadcast
-_BF_MAX_BITS = 1 << 27  # m ceiling: 2 Mi words = 16 MB — still broadcastable
-_BF_K = 7  # hash functions — optimal near m/n ~ 10-16 bits/item
-
-
-def _bf_bits_for(n_items: int) -> int:
-    """Bitset size for n expected items: next power of two >= 16n
-    (fpp ~ 1e-3 at k=7), clamped to [2^20, 2^27]. The count that feeds
-    this is a bounded scalar action over the reference shard(s) only;
-    a pipeline that knows its shard size passes it instead. Shards that
-    will be OR-merged must share m — size for the UNION load."""
-    return max(
-        _BF_MIN_BITS,
-        min(_BF_MAX_BITS, 1 << max(0, (16 * max(1, n_items) - 1).bit_length())),
-    )
-
-
-def _paragraphs(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, par): newline-split, trimmed, empties dropped —
-    the Dolma paragraph unit; pos is the ORIGINAL line index so the
-    clean stage can reconstruct untouched lines verbatim."""
-    text = F.coalesce(F.col("text"), F.lit(""))
-    return (
-        docs.select("doc_id", F.posexplode(F.split(text, "\n", -1)).alias("pos", "raw"))
-        .select("doc_id", "pos", F.trim(F.col("raw")).alias("par"))
-        .where(F.col("par") != "")
-    )
-
-
-def _bf_positions(par: Column, bits: int) -> list[Column]:
-    """k double-hashed bit positions (Kirsch-Mitzenmacher): pos_j =
-    (h1 + j*h2) & (m-1). Long overflow wraps deterministically (ANSI
-    off per registry confs); & with m-1 is non-negative for any sign."""
-    h1 = F.xxhash64(par)
-    h2 = F.xxhash64(par, F.lit(1))
-    return [(h1 + F.lit(j) * h2).bitwiseAND(F.lit(bits - 1)) for j in range(_BF_K)]
-
-
-def _bf_words(ref_pars: DataFrame, bits: int = _BF_MIN_BITS) -> DataFrame:
-    """OR-fold the reference paragraphs' bit positions into the packed
-    (wi, w) words table — <= m/64 rows, partial-aggregated map-side
-    (bit_or combines associatively), always broadcastable."""
-    pos = ref_pars.select(
-        F.explode(F.array(*_bf_positions(F.col("par"), bits))).alias("p")
-    )
-    return pos.groupBy(F.expr("shiftright(p, 6)").alias("wi")).agg(
-        F.expr("bit_or(shiftleft(1L, cast((p & 63) as int)))").alias("w")
-    )
-
-
-def _bf_merge_words(*words: DataFrame) -> DataFrame:
-    """OR-merge per-shard packed words tables built at the SAME m:
-    union -> bit_or per word index. bit_or is associative and
-    commutative, so N per-shard filters merge in any order / any
-    grouping — the cross-shard deployment primitive. The merge input
-    is <= N * m/64 rows (never corpus-scale) and the result is the
-    same words-table shape, still broadcastable."""
-    return reduce(DataFrame.unionByName, words).groupBy("wi").agg(
-        F.expr("bit_or(w)").alias("w")
-    )
-
-
-def _bf_flag_probe(
-    probe_pars: DataFrame,
-    words: DataFrame,
-    bits: int = _BF_MIN_BITS,
-    n_ref: int = 0,
-) -> DataFrame:
-    """Append might_contain as `dup`: k broadcast joins + bit tests —
-    whole-stage codegen, the probe stream never shuffles here."""
-    # each of the k broadcast builds evaluates its own copy of the words
-    # subtree (the per-j renames defeat exchange reuse) — 7 full passes
-    # of the reference-paragraph explode+agg without this checkpoint of
-    # the <= m/64-row table. EAGER: the k broadcast jobs can launch
-    # concurrently, and a lazy checkpoint materializing under a
-    # concurrent first action lets the others compute from lineage
-    # (byte-measured at 500k docs: the 7 passes survived eager=False).
-    # UNCONDITIONAL here, unlike llm_ops13 (r13): this module's words
-    # subtrees are deeper — the shard-merge words table carries a union +
-    # second groupBy, and the funnel's probe nests under further
-    # checkpointed stages — and an A/B with the llm_ops13 size gate
-    # applied here regressed BOTH benched tiers at sf0.1
-    # (corpus_prep_funnel4_bloom 3.04 -> 4.46 s, docs_bloom_merge_shards
-    # 0.80 -> 1.03 s), so 7 rebuilds cost more than one eager job even at
-    # fixture scale. n_ref is accepted for signature parity with
-    # llm_ops13's probe (callers thread the count they already took).
-    words = words.transform(shared_subtree_eager)
-    out = probe_pars
-    for j, pos in enumerate(_bf_positions(F.col("par"), bits)):
-        out = out.withColumn(f"_p{j}", pos)
-    flags = []
-    for j in range(_BF_K):
-        wj = words.select(F.col("wi").alias(f"_wi{j}"), F.col("w").alias(f"_w{j}"))
-        out = out.join(
-            F.broadcast(wj), F.expr(f"shiftright(_p{j}, 6)") == F.col(f"_wi{j}"), "left"
-        )
-        flags.append(
-            F.expr(f"coalesce(_w{j} & shiftleft(1L, cast((_p{j} & 63) as int)), 0L) != 0")
-        )
-    dup = reduce(lambda a, b: a & b, flags)
-    keep = [c for c in probe_pars.columns]
-    return out.select(*keep, dup.alias("dup"))
-
-
-# ---------------------------------------------------------------------------
-# Re-declared CCNet helpers (llm_ops13 text, parameterized text column)
-# ---------------------------------------------------------------------------
-
-_CCX_B = 1_048_576  # 2^20 buckets per LM table
-
-
-def _bucket_md5(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % _CCX_B
-
-
-def _bigram_occurrences(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, lang, w1, w2) — one row per bigram OCCURRENCE of the
-    given text column (funnel stages score CLEANED text; the LM side
-    tokenizes raw text — same expression, different column)."""
-    tx = F.coalesce(F.col(text_col), F.lit(""))
-    toks = df.select(
-        "doc_id",
-        F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
-        F.filter(F.split(F.lower(F.trim(tx)), _WS), lambda x: x != "").alias("t"),
-    ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select("doc_id", "lang", F.explode(bigrams).alias("s")).select(
-        "doc_id", "lang", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2")
-    )
-
-
-def _bucketed_occ(occ: DataFrame) -> DataFrame:
-    return occ.select(
-        "doc_id",
-        "lang",
-        _bucket_md5(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))).alias("b12"),
-        _bucket_md5(F.col("w1")).alias("b1"),
-    )
-
-
-def _perlang_scored(lm_occ: DataFrame, occ: DataFrame) -> DataFrame:
-    """(doc_id, lang, lp): per-language external-LM scoring — LM bucket
-    tables from lm_occ only, bounded ((lang, bucket) keys, <= 2^20 rows
-    per lang table union) and broadcast; occ scored map-side; languages
-    without an LM drop (inner vocab join, CCNet semantics)."""
-    # ONE reference pass builds both per-lang bucket tables (r12): lm12,
-    # lm1 and vocab each consuming lm_occ re-ran its tokenize+explode+md5
-    # chain once per table. Counts byte-identical; the bounded result is
-    # lazily checkpointed so its readers share the single pass.
-    kb = lm_occ.select(
-        "lang",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("k"), F.col("b12").alias("b")),
-                F.struct(F.lit(1).alias("k"), F.col("b1").alias("b")),
-            )
-        ).alias("kb"),
-    ).select("lang", "kb.k", "kb.b")
-    lm = (
-        kb.groupBy("lang", "k", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(shared_subtree)
-    )
-    lm12 = lm.where(F.col("k") == 0).select(
-        "lang", F.col("b").alias("b12"), F.col("c").alias("pair_cnt")
-    )
-    lm1 = lm.where(F.col("k") == 1).select(
-        "lang", F.col("b").alias("b1"), F.col("c").alias("w1_cnt")
-    )
-    vocab = lm1.groupBy("lang").agg(F.count(F.lit(1)).cast("double").alias("v"))
-    # decimal accumulation: exact, order-free (the llm_ops2 convention)
-    avg_lp = F.round(
-        F.sum(
-            F.log(
-                (F.coalesce(F.col("pair_cnt"), F.lit(0)) + 1.0)
-                / (F.coalesce(F.col("w1_cnt"), F.lit(0)) + F.col("v"))
-            ).cast("decimal(38,15)")
-        ).cast("double")
-        / F.count(F.lit(1)),
-        4,
-    )
-    return (
-        occ.join(F.broadcast(lm12), ["lang", "b12"], "left")
-        .join(F.broadcast(lm1), ["lang", "b1"], "left")
-        .join(F.broadcast(vocab), "lang")  # inner: unscoreable langs drop
-        .groupBy("doc_id", "lang")
-        .agg(F.round(avg_lp * 10000).cast("long").alias("lp"))
-    )
-
-
-def _assign_buckets(scored: DataFrame) -> DataFrame:
-    """histogram -> per-lang tercile cutoffs -> head/middle/tail; the
-    window runs ON THE HISTOGRAM (bounded), never the doc stream."""
-    from pyspark.sql import Window as W
-
-    hist = scored.groupBy("lang", "lp").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    tot = hist.groupBy("lang").agg(F.sum("c").cast("long").alias("n"))
-    # explicit hint: tot is <= one row per language, always
-    # broadcastable; estimate-based planning demoted it to a
-    # sort-merge join after the r12 LM restructure (guide 3.1)
-    cum = hist.join(F.broadcast(tot), "lang").withColumn(
-        "cum",
-        F.sum("c").over(W.partitionBy("lang").orderBy(F.desc("lp"))).cast("long"),
-    )
-    cuts = cum.groupBy("lang").agg(
-        F.max(F.when(F.expr("cum >= (n + 2) div 3"), F.col("lp"))).alias("cut1"),
-        F.max(F.when(F.expr("cum >= (2 * n + 2) div 3"), F.col("lp"))).alias("cut2"),
-    )
-    return scored.join(F.broadcast(cuts), "lang").select(
-        "doc_id",
-        "lang",
-        "lp",
-        F.when(F.col("lp") >= F.col("cut1"), F.lit("head"))
-        .when(F.col("lp") >= F.col("cut2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
-
-
-#: deterministic 1-in-3 md5 coin on doc_id — identical on both engines
-def _coin() -> Column:
-    return (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 3
-        == 0
-    )
-
 
 # ---------------------------------------------------------------------------
 # corpus_prep_funnel4 — shared pipeline, parameterized clean stage
@@ -354,7 +119,7 @@ def _f4_cleaned(docs: DataFrame, exact: bool) -> DataFrame:
     False probes the Bloom filter (no corpus-to-corpus join)."""
     # checkpointed: ref build (and Bloom sizing count) + probe both
     # consume the paragraph frame (the llm_ops5/6 multi-subtree rule)
-    pars = _paragraphs(docs).transform(shared_subtree)
+    pars = bloom.paragraphs(docs).transform(shared_subtree)
     ref = pars.where(F.col("doc_id") % 2 == 0)
     probe_pars = pars.where(F.col("doc_id") % 2 == 1)
     if exact:
@@ -367,9 +132,20 @@ def _f4_cleaned(docs: DataFrame, exact: bool) -> DataFrame:
             "left",
         ).select("doc_id", "pos", "par", F.col("_rpar").isNotNull().alias("dup"))
     else:
-        n_ref = ref.count()  # bounded scalar action, sizes m
-        bits = _bf_bits_for(n_ref)
-        probe = _bf_flag_probe(probe_pars, _bf_words(ref, bits), bits, n_ref)
+        bits = bloom.bits_for(ref.count())  # bounded scalar action, sizes m
+        # the k broadcast builds would each rebuild the words subtree, so
+        # it is pinned EAGERLY (concurrent broadcast jobs would otherwise
+        # race a lazy checkpoint — llm_ops13's _probe_odd_half) and
+        # UNCONDITIONALLY, unlike llm_ops13's size gate (r13): this
+        # module's words subtrees are deeper — the shard-merge words
+        # table carries a union + second groupBy, and the funnel's probe
+        # nests under further checkpointed stages — and an A/B with the
+        # llm_ops13 size gate applied here regressed BOTH benched tiers
+        # at sf0.1 (corpus_prep_funnel4_bloom 3.04 -> 4.46 s,
+        # docs_bloom_merge_shards 0.80 -> 1.03 s), so 7 rebuilds cost
+        # more than one eager job even at fixture scale.
+        words = bloom.words(ref, bits).transform(shared_subtree_eager)
+        probe = bloom.flag_probe(probe_pars, words, bits)
     stats = probe.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_paragraphs"),
         F.sum(F.col("dup").cast("long")).cast("long").alias("n_removed"),
@@ -406,17 +182,21 @@ def _f4_pipeline(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
     # checkpointed: cleaned feeds the scoring subtree AND the output row
     cleaned = _f4_cleaned(docs, exact).transform(shared_subtree)
     # LM from the reference shard's RAW text; stream = CLEANED text
-    lm_occ = _bucketed_occ(_bigram_occurrences(docs.where(F.col("doc_id") % 2 == 0)))
-    occ = _bucketed_occ(_bigram_occurrences(cleaned, "cleaned_text"))
+    lm_occ = ccnet.bucketed_occ(
+        ccnet.bigram_occurrences(docs.where(F.col("doc_id") % 2 == 0))
+    )
+    occ = ccnet.bucketed_occ(ccnet.bigram_occurrences(cleaned, "cleaned_text"))
     # checkpointed: scored feeds the histogram AND the assignment join
-    scored = _perlang_scored(lm_occ, occ).transform(shared_subtree)
-    bkt = _assign_buckets(scored).select(
+    scored = ccnet.lm_scored(lm_occ, occ, per_lang=True, external=True).transform(
+        shared_subtree
+    )
+    bkt = ccnet.assign_buckets(scored).select(
         "doc_id",
         "lp",
         "bucket",
         (
             (F.col("bucket") == "head")
-            | ((F.col("bucket") == "middle") & _coin())
+            | ((F.col("bucket") == "middle") & ccnet.coin())
         ).alias("_ccnet_keep"),
     )
     # quality signals built with the Python Column API only — embedding
@@ -457,9 +237,8 @@ def _f4_pipeline(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
 
 # --- oracle SQL ------------------------------------------------------------
 
-_F4_BUCKET_SQL_12 = f"('0x' || substr(md5(s.w1 || ' ' || s.w2), 1, 8))::BIGINT % {_CCX_B}"
-_F4_BUCKET_SQL_1 = f"('0x' || substr(md5(s.w1), 1, 8))::BIGINT % {_CCX_B}"
-_F4_COIN_SQL = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 = 0"
+_F4_BUCKET_SQL_12 = ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")
+_F4_BUCKET_SQL_1 = ccnet.bucket_md5_sql("s.w1")
 _F4_TOKS_SQL = (
     "list_filter(string_split_regex(lower(trim(cleaned_text)),"
     f" '{_WS}'), x -> x <> '')"
@@ -559,7 +338,7 @@ _F4_ORACLE = rf"""
                    ELSE 'tail' END = 'head'
               OR (CASE WHEN s.lp >= c.cut1 THEN 'head'
                        WHEN s.lp >= c.cut2 THEN 'middle'
-                       ELSE 'tail' END = 'middle' AND {_F4_COIN_SQL}))
+                       ELSE 'tail' END = 'middle' AND {ccnet.COIN_SQL}))
                AS ccnet_keep
       FROM scored s JOIN cuts c USING (lang)
     ), q AS (
@@ -650,15 +429,15 @@ def _merge_probe(docs: DataFrame) -> DataFrame:
     """Shared core: per-shard filters over doc_id % 3 in (0, 1) built
     independently at a shared m, OR-merged, probed by doc_id % 3 == 2.
     Returns the probe paragraph frame with the `dup` flag."""
-    pars = _paragraphs(docs).transform(shared_subtree)
+    pars = bloom.paragraphs(docs).transform(shared_subtree)
     shard_a = pars.where(F.col("doc_id") % 3 == 0)
     shard_b = pars.where(F.col("doc_id") % 3 == 1)
     # shards that merge must share m, sized for the UNION load — one
     # bounded scalar count over the combined reference shards
-    n_ref = pars.where(F.col("doc_id") % 3 != 2).count()
-    bits = _bf_bits_for(n_ref)
-    merged = _bf_merge_words(_bf_words(shard_a, bits), _bf_words(shard_b, bits))
-    return _bf_flag_probe(pars.where(F.col("doc_id") % 3 == 2), merged, bits, n_ref)
+    bits = bloom.bits_for(pars.where(F.col("doc_id") % 3 != 2).count())
+    merged = bloom.merge_words(bloom.words(shard_a, bits), bloom.words(shard_b, bits))
+    merged = merged.transform(shared_subtree_eager)  # see _f4_cleaned
+    return bloom.flag_probe(pars.where(F.col("doc_id") % 3 == 2), merged, bits)
 
 
 @query("docs_bloom_merge_shards")
@@ -710,7 +489,7 @@ def docs_bloom_merge_shards_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits), and measured false positives among true non-duplicates stay
     under 5%."""
     docs = load_table(spark, sf_dir, "documents")
-    pars = _paragraphs(docs).transform(shared_subtree)
+    pars = bloom.paragraphs(docs).transform(shared_subtree)
     probe = _merge_probe(docs)
     # no broadcast hint: the distinct reference TEXT frame grows with
     # the corpus — size-based planning decides (llm_ops13 convention)

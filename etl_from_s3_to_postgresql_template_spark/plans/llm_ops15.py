@@ -69,10 +69,10 @@ Reference scope: the reference pipeline (etl_pipeline.py, 734-line
 pandas/boto3 ETL) has no LM/ANN/quality surface; these extend the
 north-star extension families (SURVEY.md section 2 E1/E2/E4).
 
-New module by policy (VERDICT r8 item 1): prior rounds' plan helpers
-are re-declared here, not imported, so their fingerprints stay
-decoupled; shared library code (functions/, operators/) imports as
-usual.
+Module policy: helpers shared between plan modules live once in
+operators/ (or functions/) and are imported, never copied;
+plans/provenance.py follows imports transitively, so an edit to a
+shared helper re-checks every query that reaches it.
 """
 
 from __future__ import annotations
@@ -82,7 +82,7 @@ from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "corpus_bigram_lm_kn",

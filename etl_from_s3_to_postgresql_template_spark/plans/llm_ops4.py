@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from etl_from_s3_to_postgresql_template_spark.plans.money import _dsum
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "window_rank_suite",

@@ -37,7 +37,7 @@ from etl_from_s3_to_postgresql_template_spark.plans.llm_ops4 import (
 )
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "dedup_semantic_clusters",

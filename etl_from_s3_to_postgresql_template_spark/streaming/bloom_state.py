@@ -20,15 +20,16 @@ Within-batch duplicates are NOT flagged (the state is updated after
 the probe) — the same only-prior-shards semantics the gate's exact
 oracle computes from the doc_id ranges.
 
-Bloom parameters mirror the batch family: k=7 Kirsch-Mitzenmacher
-double hashing on xxhash64, m sized for the FULL expected load (next
-power of two >= 16 bits per paragraph, clamped to [2^20, 2^27] — the
-batch family's _bf_bits_for rule) because every batch must share m for
-the OR-merge to be meaningful: this is the merge contract of the batch
-tier, and under-sizing it saturates the filter as batches accumulate
-(measured: a fixed 2^20 m at 500k paragraphs kept zero false negatives
-but blew the 5% fp bound; sized at 2^23 it passes). A deployment that
-knows its expected corpus passes the size instead of counting.
+The filter is the batch family's (operators/bloom: k=7
+Kirsch-Mitzenmacher double hashing on xxhash64), with m sized for the
+FULL expected load (bloom.bits_for over every paragraph) because every
+batch must share m for the OR-merge to be meaningful: this is the merge
+contract of the batch tier, and under-sizing it saturates the filter as
+batches accumulate (measured: a fixed 2^20 m at 500k paragraphs kept
+zero false negatives but blew the 5% fp bound; sized at 2^23 it
+passes). A deployment that knows its expected corpus passes the size
+instead of counting. The per-batch words table is never checkpointed:
+each batch reads a fresh state table and probes it once.
 """
 
 from __future__ import annotations
@@ -36,66 +37,16 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
 
-__all__ = ["run_incremental_bloom_stream", "N_SHARDS", "BF_K"]
+from etl_from_s3_to_postgresql_template_spark.operators import bloom
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
+
+__all__ = ["run_incremental_bloom_stream", "N_SHARDS"]
 
 N_SHARDS = 4
-_MIN_BITS = 1 << 20
-_MAX_BITS = 1 << 27
-BF_K = 7
-
-
-def _bits_for(n_items: int) -> int:
-    """m for the FULL expected load: next power of two >= 16n, clamped
-    to [2^20, 2^27] — the batch family's sizing rule (fpp ~ 1e-3)."""
-    return max(
-        _MIN_BITS,
-        min(_MAX_BITS, 1 << max(0, (16 * max(1, n_items) - 1).bit_length())),
-    )
-
-
-def _paragraphs(docs: DataFrame) -> DataFrame:
-    text = F.coalesce(F.col("text"), F.lit(""))
-    return (
-        docs.select("doc_id", F.posexplode(F.split(text, "\n", -1)).alias("pos", "raw"))
-        .select("doc_id", "pos", F.trim(F.col("raw")).alias("par"))
-        .where(F.col("par") != "")
-    )
-
-
-def _positions(par: Column, bits: int) -> list[Column]:
-    h1 = F.xxhash64(par)
-    h2 = F.xxhash64(par, F.lit(1))
-    return [(h1 + F.lit(j) * h2).bitwiseAND(F.lit(bits - 1)) for j in range(BF_K)]
-
-
-def _words(pars: DataFrame, bits: int) -> DataFrame:
-    pos = pars.select(F.explode(F.array(*_positions(F.col("par"), bits))).alias("p"))
-    return pos.groupBy(F.expr("shiftright(p, 6)").alias("wi")).agg(
-        F.expr("bit_or(shiftleft(1L, cast((p & 63) as int)))").alias("w")
-    )
-
-
-def _flag_probe(pars: DataFrame, words: DataFrame, bits: int) -> DataFrame:
-    out = pars
-    for j, pos in enumerate(_positions(F.col("par"), bits)):
-        out = out.withColumn(f"_p{j}", pos)
-    flags = []
-    for j in range(BF_K):
-        wj = words.select(F.col("wi").alias(f"_wi{j}"), F.col("w").alias(f"_w{j}"))
-        out = out.join(
-            F.broadcast(wj), F.expr(f"shiftright(_p{j}, 6)") == F.col(f"_wi{j}"), "left"
-        )
-        flags.append(
-            F.expr(f"coalesce(_w{j} & shiftleft(1L, cast((_p{j} & 63) as int)), 0L) != 0")
-        )
-    dup = reduce(lambda a, b: a & b, flags)
-    return out.select(*pars.columns, dup.alias("dup"))
 
 
 def shard_width(spark: SparkSession, docs: DataFrame) -> int:
@@ -116,9 +67,9 @@ def run_incremental_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # ONE setup pass (r13): max(doc_id) for the shard width and the
     # paragraph count for m used to be two separate scan+action pairs
-    # (shard_width's collect + _paragraphs(docs).count()); the paragraph
+    # (shard_width's collect + bloom.paragraphs(docs).count()); the paragraph
     # count folds into the same aggregate as the doc-local
-    # size(filter(trim(split)))) — identical to counting _paragraphs rows
+    # size(filter(trim(split)))) — identical to counting bloom.paragraphs rows
     # (both count non-empty trimmed lines; NULL text coalesces to '').
     text = F.coalesce(F.col("text"), F.lit(""))
     n_pars_col = F.size(
@@ -133,7 +84,7 @@ def run_incremental_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = (setup["mx"] or 0) // N_SHARDS + 1
     # size m for the full expected load (module comment); all batches
     # share this m
-    bits = _bits_for(int(setup["npars"] or 0))
+    bits = bloom.bits_for(int(setup["npars"] or 0))
     base = tempfile.mkdtemp(prefix="sbloom_")
     src, state, out, ckpt = (
         f"{base}/src",
@@ -147,7 +98,10 @@ def run_incremental_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitionBy write (r13) instead of N_SHARDS filtered scans — the
     # shard column lives in the directory name, so each moved part file
     # carries exactly (doc_id, text), the same bytes the per-shard
-    # coalesce(1) writes produced.
+    # coalesce(1) writes produced. A doc_id range with no documents
+    # (sparse ids, or max_id=4: width 2 leaves shard 3 empty) gets no
+    # directory from partitionBy; it is staged as an empty (doc_id, text)
+    # file so the stream still sees N_SHARDS files, one per trigger.
     tmp = f"{base}/stage"
     (
         docs.withColumn("shard", (F.col("doc_id") / width).cast("long"))
@@ -158,8 +112,11 @@ def run_incremental_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for s in range(N_SHARDS):
         sdir = f"{tmp}/shard={s}"
+        if not os.path.isdir(sdir):
+            docs.limit(0).coalesce(1).write.parquet(sdir)
         parts = [p for p in os.listdir(sdir) if p.endswith(".parquet")]
-        assert len(parts) == 1, parts  # one task per shard by construction
+        if len(parts) != 1:  # one task per shard by construction
+            raise RuntimeError(f"shard {s}: expected one staged file, got {parts}")
         dst = f"{src}/shard_{s}.parquet"
         shutil.move(f"{sdir}/{parts[0]}", dst)
         os.utime(dst, (1_000_000_000 + s, 1_000_000_000 + s))
@@ -167,18 +124,18 @@ def run_incremental_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _handle(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        pars = _paragraphs(batch_df).transform(shared_subtree)
+        pars = bloom.paragraphs(batch_df).transform(shared_subtree)
         if os.path.exists(state):
             merged = (
                 sess.read.parquet(state)
                 .groupBy("wi")
                 .agg(F.expr("bit_or(w)").alias("w"))
             )
-            flagged = _flag_probe(pars, merged, bits)
+            flagged = bloom.flag_probe(pars, merged, bits)
         else:
             flagged = pars.withColumn("dup", F.lit(False))
         flagged.select("doc_id", "pos", "dup").write.mode("append").parquet(out)
-        _words(pars, bits).write.mode("append").parquet(state)
+        bloom.words(pars, bits).write.mode("append").parquet(state)
 
     q = (
         spark.readStream.schema(docs.schema)

@@ -6,13 +6,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators import bloom, ccnet
 from etl_from_s3_to_postgresql_template_spark.plans import ORACLE, QUERIES
-from etl_from_s3_to_postgresql_template_spark.plans.llm_ops13 import (
-    _BF_K,
-    _bf_flag_probe,
-    _bf_words,
-    _paragraphs,
-)
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -89,18 +84,12 @@ def test_bloom_gate_matches_oracle_planted(spark, tmp_path):
 
 
 def test_bloom_bits_sizing():
-    from etl_from_s3_to_postgresql_template_spark.plans.llm_ops13 import (
-        _BF_MAX_BITS,
-        _BF_MIN_BITS,
-        _bf_bits_for,
-    )
-
-    assert _bf_bits_for(0) == _BF_MIN_BITS
-    assert _bf_bits_for(100) == _BF_MIN_BITS  # floor
+    assert bloom.bits_for(0) == bloom.MIN_BITS
+    assert bloom.bits_for(100) == bloom.MIN_BITS  # floor
     n = 2_000_000
-    bits = _bf_bits_for(n)
+    bits = bloom.bits_for(n)
     assert bits >= 16 * n and bits & (bits - 1) == 0  # pow2, >= 16 bits/item
-    assert _bf_bits_for(10**9) == _BF_MAX_BITS  # ceiling
+    assert bloom.bits_for(10**9) == bloom.MAX_BITS  # ceiling
 
 
 def test_bloom_words_table_bounded_and_mergeable(spark):
@@ -109,14 +98,14 @@ def test_bloom_words_table_bounded_and_mergeable(spark):
     the union — the cross-shard merge shape."""
     a = spark.createDataFrame([(i, 0, f"p{i}") for i in range(200)], "doc_id long, pos int, par string")
     b = spark.createDataFrame([(i, 0, f"q{i}") for i in range(200)], "doc_id long, pos int, par string")
-    wa, wb = _bf_words(a), _bf_words(b)
+    wa, wb = bloom.words(a), bloom.words(b)
     assert wa.count() <= (1 << 20) // 64
     merged = (
         wa.unionByName(wb)
         .groupBy("wi")
         .agg(F.expr("bit_or(w)").alias("w"))
     )
-    direct = _bf_words(a.unionByName(b))
+    direct = bloom.words(a.unionByName(b))
     assert merged.exceptAll(direct).count() == 0
     assert direct.exceptAll(merged).count() == 0
 
@@ -127,11 +116,11 @@ def test_bloom_probe_plan_is_broadcast_only(spark, tmp_path):
     rows = [(i, f"line {i}\nline {i+1}", "en", "web", 1) for i in range(20)]
     sf = _write_docs(spark, tmp_path, rows)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pars = _paragraphs(docs)
-    words = _bf_words(pars.where(F.col("doc_id") % 2 == 0))
-    probe = _bf_flag_probe(pars.where(F.col("doc_id") % 2 == 1), words)
+    pars = bloom.paragraphs(docs)
+    words = bloom.words(pars.where(F.col("doc_id") % 2 == 0))
+    probe = bloom.flag_probe(pars.where(F.col("doc_id") % 2 == 1), words)
     plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == _BF_K
+    assert plan.count("BroadcastHashJoin") == bloom.K
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
 
@@ -291,18 +280,12 @@ def test_ccnet_agreement_gate_empty_scoreable_matches_oracle(spark, tmp_path):
 def test_ccnet_fast_tier_identical_on_collision_free_corpus(spark, tmp_path):
     """With a small planted vocabulary neither bucketing collides, so the
     xxhash64 tier must reproduce the md5 tier row for row (lp included)."""
-    from etl_from_s3_to_postgresql_template_spark.plans.llm_ops13 import (
-        _bucket_fast,
-        _bucket_md5,
-        _ccx_self_lm_buckets,
-    )
-
     rows = [(i, f"tok{i % 7} tok{(i + 1) % 7} tok{(i + 2) % 7} common", "en", "web", 1)
             for i in range(40)]
     sf = _write_docs(spark, tmp_path, rows)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    fast = sorted(tuple(r) for r in _ccx_self_lm_buckets(docs, _bucket_fast).collect())
-    md5t = sorted(tuple(r) for r in _ccx_self_lm_buckets(docs, _bucket_md5).collect())
+    fast = sorted(tuple(r) for r in ccnet.self_lm_buckets(docs, ccnet.bucket_fast).collect())
+    md5t = sorted(tuple(r) for r in ccnet.self_lm_buckets(docs, ccnet.bucket_md5).collect())
     assert fast == md5t
 
 
@@ -339,17 +322,11 @@ def test_bloom_flags_equal_exact_membership_random_corpus(spark, tmp_path):
         rows.append((d, "\n".join(lines), "en", "web", 1))
     sf = _write_docs(spark, tmp_path, rows)
 
-    from etl_from_s3_to_postgresql_template_spark.plans.llm_ops13 import (
-        _bf_bits_for,
-        _bf_flag_probe,
-        _bf_words,
-    )
-
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pars = _paragraphs(docs)
+    pars = bloom.paragraphs(docs)
     ref = pars.where(F.col("doc_id") % 2 == 0)
-    bits = _bf_bits_for(ref.count())
-    flagged = _bf_flag_probe(pars.where(F.col("doc_id") % 2 == 1), _bf_words(ref, bits), bits)
+    bits = bloom.bits_for(ref.count())
+    flagged = bloom.flag_probe(pars.where(F.col("doc_id") % 2 == 1), bloom.words(ref, bits), bits)
     ref_set = {r.par for r in ref.collect()}
     for r in flagged.collect():
         assert r.dup == (r.par in ref_set), (r.doc_id, r.par)

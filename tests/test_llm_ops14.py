@@ -7,13 +7,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators import bloom
 from etl_from_s3_to_postgresql_template_spark.plans import ORACLE, QUERIES
-from etl_from_s3_to_postgresql_template_spark.plans.llm_ops14 import (
-    _bf_bits_for,
-    _bf_merge_words,
-    _bf_words,
-    _paragraphs,
-)
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -178,16 +173,16 @@ def test_merge_equals_jointly_built_filter(spark, tmp_path):
     deployment shape rests on, pinned at the DataFrame level."""
     sf = _write_docs(spark, tmp_path, _merge_rows())
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pars = _paragraphs(docs)
+    pars = bloom.paragraphs(docs)
     a = pars.where(F.col("doc_id") % 3 == 0)
     b = pars.where(F.col("doc_id") % 3 == 1)
     both = pars.where(F.col("doc_id") % 3 != 2)
-    bits = _bf_bits_for(both.count())
+    bits = bloom.bits_for(both.count())
     merged = {
         (r.wi, r.w)
-        for r in _bf_merge_words(_bf_words(a, bits), _bf_words(b, bits)).collect()
+        for r in bloom.merge_words(bloom.words(a, bits), bloom.words(b, bits)).collect()
     }
-    joint = {(r.wi, r.w) for r in _bf_words(both, bits).collect()}
+    joint = {(r.wi, r.w) for r in bloom.words(both, bits).collect()}
     assert merged == joint
 
 
@@ -204,22 +199,17 @@ def test_merged_probe_plan_is_broadcast_only(spark, tmp_path):
     shuffle of the probe stream before its per-doc aggregate — every
     probe join is a BroadcastHashJoin, and the merge itself never
     touches corpus-scale data (words tables only)."""
-    from etl_from_s3_to_postgresql_template_spark.plans.llm_ops14 import (
-        _BF_K,
-        _bf_flag_probe,
-    )
-
     rows = [(i, f"line {i}\nline {i+1}", "en", "web", 1) for i in range(21)]
     sf = _write_docs(spark, tmp_path, rows)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pars = _paragraphs(docs)
-    bits = _bf_bits_for(pars.where(F.col("doc_id") % 3 != 2).count())
-    merged = _bf_merge_words(
-        _bf_words(pars.where(F.col("doc_id") % 3 == 0), bits),
-        _bf_words(pars.where(F.col("doc_id") % 3 == 1), bits),
+    pars = bloom.paragraphs(docs)
+    bits = bloom.bits_for(pars.where(F.col("doc_id") % 3 != 2).count())
+    merged = bloom.merge_words(
+        bloom.words(pars.where(F.col("doc_id") % 3 == 0), bits),
+        bloom.words(pars.where(F.col("doc_id") % 3 == 1), bits),
     )
-    probe = _bf_flag_probe(pars.where(F.col("doc_id") % 3 == 2), merged, bits)
+    probe = bloom.flag_probe(pars.where(F.col("doc_id") % 3 == 2), merged, bits)
     plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == _BF_K
+    assert plan.count("BroadcastHashJoin") == bloom.K
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan

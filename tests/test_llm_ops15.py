@@ -486,6 +486,39 @@ def test_streaming_bloom_flags_prior_shard_dups_only(spark, tmp_path):
     ]
 
 
+# max_id = 4: width = 4 // 4 + 1 = 2, so the doc_id ranges are [0-1]
+# [2-3] [4-5] [6-7] and shard 3 holds no document
+_SBLOOM_EMPTY_SHARD_DOCS = [
+    (0, "alpha\nbeta", "en", "a", 1),
+    (1, "alpha", "en", "a", 1),  # same-shard dup: unflagged
+    (2, "beta\ngamma", "en", "a", 1),  # beta dup of shard 0
+    (3, "delta", "en", "a", 1),
+    (4, "gamma\ndelta\nomega", "en", "a", 1),  # gamma, delta dups of shard 1
+]
+
+
+def test_streaming_bloom_empty_shard_matches_oracle(spark, tmp_path):
+    """An empty doc_id-range shard is staged as an empty file instead of
+    crashing the staging step; flags still follow the exact
+    only-prior-shards semantics the gate's oracle computes."""
+    sf = _write_table(spark, tmp_path, "documents", _SBLOOM_EMPTY_SHARD_DOCS, _DOC_SCHEMA)
+    got = {(r[0], r[1]): r[2] for r in _spark_rows(spark, sf, "streaming_bloom_paragraph_dedup")}
+    assert got == {
+        (0, 0): False,
+        (0, 1): False,
+        (1, 0): False,
+        (2, 0): True,
+        (2, 1): False,
+        (3, 0): False,
+        (4, 0): True,
+        (4, 1): True,
+        (4, 2): False,
+    }
+    want = _oracle_rows(sf, "streaming_bloom_dedup_gate", "documents")
+    assert want == [(9, 3, 0, True)]
+    assert _spark_rows(spark, sf, "streaming_bloom_dedup_gate") == want
+
+
 def test_streaming_bloom_gate_green_on_fixture(spark):
     rows = _spark_rows(spark, "/root/testdata/sf0.001", "streaming_bloom_dedup_gate")
     assert rows[0][2] == 0 and rows[0][3] is True

@@ -20,6 +20,9 @@ With --json, writes the machine-readable full-registry sweep artifact
 (VERDICT r6 item 2): one record per entry with rows/schema/value/hash
 status plus the git commit stamp, so every round closes with an
 all-entries sweep on record (CORRECTNESS_local_r{N}.json at the repo root).
+Every record carries ``spark_hash``, the Spark side's value hash, rows-only
+entries included, so two sweeps (e.g. a parent and a change) can be diffed
+entry by entry.
 """
 
 from __future__ import annotations
@@ -29,8 +32,10 @@ import json
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import duckdb
 import numpy as np
@@ -138,6 +143,7 @@ def main() -> int:
             "value_match": None,
             "hash_match": None,
             "spark_rows": None,
+            "spark_hash": None,
             "oracle_rows": None,
             "err": None,
         }
@@ -151,6 +157,7 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             continue
         rec["spark_rows"] = len(sdf)
+        rec["spark_hash"] = value_hash(sdf)
         if name not in oracles:
             rec["rows_only"] = True
             print(f"ROWS  {name}: {len(sdf)} rows (no oracle)")
@@ -200,7 +207,7 @@ def main() -> int:
                 ["git", "rev-parse", "HEAD"],
                 capture_output=True,
                 text=True,
-                cwd="/root/repo",
+                cwd=REPO,
             ).stdout.strip()
         except Exception:
             commit = None
