@@ -19,6 +19,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 __all__ = [
+    "WS",
     "tokens_col",
     "token_count_col",
     "ws_token_count_col",
@@ -54,6 +55,10 @@ def tokens_col(text: Column | str) -> Column:
 def token_count_col(text: Column | str) -> Column:
     return F.size(tokens_col(text)).cast("long")
 
+
+#: explicit ASCII whitespace run: Java's \s is exactly this class, RE2's
+#: \s omits \x0B, so Spark and DuckDB tokenizers both spell it out
+WS = r"[ \t\n\x0B\f\r]+"
 
 #: maximal non-whitespace runs (explicit ASCII whitespace — the same
 #: byte set under Java regex and RE2) — each run IS one token

@@ -37,6 +37,7 @@ __all__ = [
     "words",
     "merge_words",
     "flag_probe",
+    "gate_summary",
 ]
 
 MIN_BITS = 1 << 20  # m floor: 16 Ki packed words = 128 KB broadcast
@@ -113,3 +114,35 @@ def flag_probe(probe_pars: DataFrame, words: DataFrame, bits: int = MIN_BITS) ->
         )
     dup = reduce(lambda a, b: a & b, flags)
     return out.select(*probe_pars.columns, dup.alias("dup"))
+
+
+def gate_summary(probe: DataFrame, ref_pars: DataFrame) -> DataFrame:
+    """One row (n_probe_paragraphs, n_true_dup, n_missed, fp_ok) for a
+    flagged probe frame against the exact reference paragraphs: a Bloom
+    filter has no false negatives, so every probe paragraph found in
+    ``ref_pars`` must be flagged (n_missed = 0), and false positives
+    among the true non-duplicates must stay under 5%."""
+    # no broadcast hint: the distinct reference TEXT frame grows with the
+    # corpus (unlike the words table) — let Spark's size-based planning
+    # fall back to a shuffle join past the threshold (review r11)
+    truth = probe.join(
+        ref_pars.select(F.col("par").alias("_rpar")).distinct(),
+        probe.par == F.col("_rpar"),
+        "left",
+    ).select("dup", F.col("_rpar").isNotNull().alias("is_dup"))
+    # empty probe stream: sums are NULL on 0 rows — coalesce to the
+    # oracle's vacuous constants (0 dups, 0 missed, fp trivially ok)
+    return truth.agg(
+        F.count(F.lit(1)).cast("long").alias("n_probe_paragraphs"),
+        F.coalesce(F.sum(F.col("is_dup").cast("long")), F.lit(0))
+        .cast("long")
+        .alias("n_true_dup"),
+        F.coalesce(F.sum((F.col("is_dup") & ~F.col("dup")).cast("long")), F.lit(0))
+        .cast("long")
+        .alias("n_missed"),
+        F.coalesce(
+            F.sum((F.col("dup") & ~F.col("is_dup")).cast("long")) * 20
+            <= F.sum((~F.col("is_dup")).cast("long")),
+            F.lit(True),
+        ).alias("fp_ok"),
+    )

@@ -27,6 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
@@ -38,8 +39,11 @@ __all__ = [
     "bucket_md5_sql",
     "bucket_fast",
     "coin",
+    "tokens",
+    "bigrams",
     "bigram_occurrences",
     "bucketed_occ",
+    "mean_lp",
     "lm_scored",
     "self_lm_buckets",
     "assign_buckets",
@@ -47,15 +51,12 @@ __all__ = [
 
 B = 1 << 20  # buckets per LM table
 
-# explicit whitespace class — RE2 \s omits \x0B (the repo convention)
-_WS = r"[ \t\n\x0B\f\r]+"
-
 #: tokenize + bigram CTE chain ending at `bg(doc_id, lang, s{{w1,w2}})` —
 #: the oracle twin of ``bigram_occurrences``
 TOKS_SQL = rf"""t AS (
       SELECT doc_id, COALESCE(lang, '') AS lang,
              list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS toks
+                  '{WS}'), x -> x <> '') AS toks
       FROM documents
     ), bg AS (
       SELECT doc_id, lang,
@@ -114,24 +115,34 @@ def coin() -> Column:
     )
 
 
+def tokens(text: Column) -> Column:
+    """lower(trim(text)) split on whitespace, empty tokens dropped, NULL
+    text as '' — TOKS_SQL's `toks`."""
+    tx = F.coalesce(text, F.lit(""))
+    return F.filter(F.split(F.lower(F.trim(tx)), WS), lambda x: x != "")
+
+
+def bigrams(t: Column) -> Column:
+    """array<struct<w1, w2>> of the adjacent token pairs of ``t``."""
+    n = F.size(t)
+    return F.zip_with(
+        F.slice(t, 1, n - 1),
+        F.slice(t, 2, n - 1),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+
+
 def bigram_occurrences(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, lang, w1, w2) — one row per bigram OCCURRENCE of the
     given text column, the Spark twin of TOKS_SQL's `bg` (funnel stages
     score CLEANED text; the LM side tokenizes raw text — same
     expression, different column)."""
-    tx = F.coalesce(F.col(text_col), F.lit(""))
     toks = df.select(
         "doc_id",
         F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
-        F.filter(F.split(F.lower(F.trim(tx)), _WS), lambda x: x != "").alias("t"),
+        tokens(F.col(text_col)).alias("t"),
     ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select("doc_id", "lang", F.explode(bigrams).alias("s")).select(
+    return toks.select("doc_id", "lang", F.explode(bigrams(F.col("t"))).alias("s")).select(
         "doc_id", "lang", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2")
     )
 
@@ -144,6 +155,15 @@ def bucketed_occ(occ: DataFrame, bucket: Callable[[Column], Column] = bucket_md5
         bucket(F.concat(F.col("w1"), F.lit(" "), F.col("w2"))).alias("b12"),
         bucket(F.col("w1")).alias("b1"),
     )
+
+
+def mean_lp(logp: Column) -> Column:
+    """Per-group mean of the natural-log probabilities ``logp``,
+    4-decimal rounded and lifted to an exact integer (x 1e4). The sum
+    accumulates in decimal: exact and order-free (the llm_ops2
+    convention)."""
+    avg = F.round(F.sum(logp.cast("decimal(38,15)")).cast("double") / F.count(F.lit(1)), 4)
+    return F.round(avg * 10000).cast("long")
 
 
 def lm_scored(
@@ -193,9 +213,6 @@ def lm_scored(
     pair_cnt, w1_cnt = F.col("pair_cnt"), F.col("w1_cnt")
     if external:
         pair_cnt, w1_cnt = F.coalesce(pair_cnt, F.lit(0)), F.coalesce(w1_cnt, F.lit(0))
-    # decimal accumulation: exact, order-free (the llm_ops2 convention)
-    lp_sum = F.sum(F.log((pair_cnt + 1.0) / (w1_cnt + F.col("v"))).cast("decimal(38,15)"))
-    avg_lp = F.round(lp_sum.cast("double") / F.count(F.lit(1)), 4)
     how = "left" if external else "inner"
     joined = occ.join(F.broadcast(lm12), [*keys, "b12"], how).join(
         F.broadcast(lm1), [*keys, "b1"], how
@@ -205,7 +222,7 @@ def lm_scored(
     else:
         joined = joined.crossJoin(F.broadcast(vocab))
     return joined.groupBy("doc_id", "lang").agg(
-        F.round(avg_lp * 10000).cast("long").alias("lp")
+        mean_lp(F.log((pair_cnt + 1.0) / (w1_cnt + F.col("v")))).alias("lp")
     )
 
 

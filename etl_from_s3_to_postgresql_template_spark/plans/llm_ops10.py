@@ -39,9 +39,13 @@ are north-star training-data surface with no reference counterpart.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
+from etl_from_s3_to_postgresql_template_spark.operators import ccnet
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
@@ -59,9 +63,6 @@ __all__ = [
 _LD_MIN_DOCS = 2
 
 _SD_N = 4  # SoftDeDup gram length in tokens (paper default n-gram size)
-
-#: ASCII whitespace pinned explicitly (the llm_ops8 convention)
-_WS_RE2 = r"[ \t\n\x0B\f\r]+"
 
 # ---------------------------------------------------------------------------
 # docs_line_dedup
@@ -195,7 +196,7 @@ def docs_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SD_ORACLE = rf"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '{_WS_RE2}'),
+             list_filter(string_split_regex(lower(trim(text)), '{WS}'),
                          x -> x <> '') AS t
       FROM documents
     ), g AS (
@@ -243,6 +244,23 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     same multiset barring a 64-bit collision (the repo-wide
     convention)."""
     docs = load_table(spark, sf_dir, "documents")
+    return _softdedup_weights(docs, "gh", F.xxhash64, null_guard=True, broadcast_lam=False)
+
+
+def _softdedup_weights(
+    docs: DataFrame,
+    key: str,
+    gram_key: Callable[[Column], Column],
+    null_guard: bool,
+    broadcast_lam: bool,
+) -> DataFrame:
+    """(doc_id, n_grams, logp_micro): the two-pass SoftDeDup program of
+    both tiers. The FIT pass counts grams under ``gram_key`` (column
+    ``key``); the SCORE pass joins the gram stream back to the count
+    table, with a broadcast hint iff ``broadcast_lam``. ``null_guard``
+    nulls the key of gram-less rows, for a ``gram_key`` that maps NULL
+    to a value (xxhash64(NULL) is a seed constant), so they can never
+    match the table."""
     n = _SD_N
     # collapse-then-trim (the llm_ops8 discipline: F.trim strips 0x20
     # only, so "\tfoo" must collapse before trimming)
@@ -254,18 +272,17 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.regexp_extract_all(F.col("norm"), F.lit(pat), F.lit(1))
         ).alias("gs"),
-    ).select("doc_id", F.xxhash64("gs").alias("gh"))
-    # the count table is linear in DISTINCT grams — much smaller than
-    # the gram stream but corpus-sized; materialize it once so lam, the
-    # total, and the score join don't each re-run the tokenize+count
-    # subtree (8 parquet scans collapse to 2: fit + score)
+    ).select("doc_id", gram_key(F.col("gs")).alias(key))
+    # the count table is linear in DISTINCT grams (or buckets); materialize
+    # it once so lam, the total, and the score join don't each re-run the
+    # tokenize+count subtree (8 parquet scans collapse to 2: fit + score)
     freq = (
-        grams.groupBy("gh")
+        grams.groupBy(key)
         .agg(F.count(F.lit(1)).alias("c"))
         .transform(shared_subtree)
     )
     lam = freq.select(
-        "gh", F.floor(F.log("c") * 1e6 + 0.5).cast("long").alias("lam")
+        key, F.floor(F.log("c") * 1e6 + 0.5).cast("long").alias("lam")
     )
     tot = freq.agg(
         F.floor(F.log(F.sum("c")) * 1e6 + 0.5).cast("long").alias("logn")
@@ -273,10 +290,12 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Score pass (r12): OUTER-exploded twin of `grams` — explode_outer
     # keeps exactly one null-gram row per gram-less doc, so the per-doc
     # aggregate covers EVERY doc and the corpus-scale doc_id re-attach
-    # join (+ a third documents scan) disappears. lam covers every gh
+    # join (+ a third documents scan) disappears. lam covers every key
     # the fit observed, so the LEFT join hits on every real gram; null
-    # gh rows pass through unmatched and the null-skipping aggregates
+    # gram rows pass through unmatched and the null-skipping aggregates
     # ignore them.
+    gs = F.col("gs")
+    score_key = F.when(gs.isNotNull(), gram_key(gs)) if null_guard else gram_key(gs)
     grams_o = base.select(
         "doc_id",
         F.explode_outer(
@@ -285,15 +304,9 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.regexp_extract_all(F.col("norm"), F.lit(pat), F.lit(1)),
             )
         ).alias("gs"),
-    ).select(
-        "doc_id",
-        "gs",
-        # xxhash64(NULL) is a seed constant, not NULL — null out the
-        # gram-less rows' key explicitly so they can never match lam
-        F.when(F.col("gs").isNotNull(), F.xxhash64("gs")).alias("gh"),
-    )
+    ).select("doc_id", "gs", score_key.alias(key))
     sc = (
-        grams_o.join(lam, "gh", "left")
+        grams_o.join(F.broadcast(lam) if broadcast_lam else lam, key, "left")
         .groupBy("doc_id")
         .agg(F.sum("lam").alias("s"), F.count("gs").alias("nf"))
     )
@@ -492,7 +505,7 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_ENC1_ORACLE = rf"""
     WITH w AS (
-      SELECT UNNEST(string_split_regex(lower(trim(text)), '{_WS_RE2}')) AS word
+      SELECT UNNEST(string_split_regex(lower(trim(text)), '{WS}')) AS word
       FROM documents
     ), ch AS (
       SELECT word, len(word) AS n FROM w WHERE len(word) >= 2
@@ -508,7 +521,7 @@ _BPE_ENC1_ORACLE = rf"""
       -- COALESCE: DuckDB array_to_string([]) is NULL, not '' (empty doc)
       SELECT doc_id,
              COALESCE(array_to_string(list_filter(
-               string_split_regex(lower(trim(text)), '{_WS_RE2}'),
+               string_split_regex(lower(trim(text)), '{WS}'),
                x -> x <> ''), ' '), '') AS norm
       FROM documents
     )
@@ -558,7 +571,7 @@ def corpus_bpe_encode_step1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SCALING.md r9 extension). That is the honest cost of per-occurrence
 # EXACT commonness, in the same cost family as docs_decontaminate_ngram.
 # The scale path is the hashing trick (the docs_hashing_vectorizer /
-# DSIR convention): fold grams into _SDH_B md5-derived buckets, so the
+# DSIR convention): fold grams into ccnet.B = 2^20 md5 buckets, so the
 # count table is <= B rows — broadcastable — and the score pass joins
 # WITHOUT shuffling the gram stream at all. Commonness becomes a
 # count-min-style estimator (collisions merge counts: rare grams in a
@@ -567,19 +580,16 @@ def corpus_bpe_encode_step1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Both engines bucket with the identical md5 prefix, so the tier is
 # hash-exact oracle-paired like the exact one.
 
-_SDH_B = 1_048_576  # 2^20 buckets: ~16 MB broadcast table
-
-
 _SDH_ORACLE = rf"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '{_WS_RE2}'),
+             list_filter(string_split_regex(lower(trim(text)), '{WS}'),
                          x -> x <> '') AS t
       FROM documents
     ), g AS (
       SELECT doc_id,
              ('0x' || substr(md5(array_to_string(t[j:j+{_SD_N - 1}], ' ')), 1, 8))::BIGINT
-               % {_SDH_B} AS b
+               % {ccnet.B} AS b
       FROM t, LATERAL (SELECT UNNEST(generate_series(1, len(t) - {_SD_N - 1})) AS j)
       WHERE len(t) >= {_SD_N}
     ), c AS (
@@ -614,67 +624,4 @@ def docs_softdedup_weights_hashed(spark: SparkSession, sf_dir: str) -> DataFrame
     gram's apparent count (count-min bias direction), shrinking as B
     grows; the exact tier is the semantics reference."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    n = _SD_N
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    base = docs.select("doc_id", norm.alias("norm"))
-    pat = r"(?:^| )(?=(\S+" + r" \S+" * (n - 1) + r"))"
-    grams = base.where(F.length("norm") > 0).select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.col("norm"), F.lit(pat), F.lit(1))
-        ).alias("gs"),
-    ).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("gs"), 1, 8), 16, 10).cast("long") % _SDH_B
-        ).alias("b"),
-    )
-    freq = (
-        grams.groupBy("b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .transform(shared_subtree)
-    )
-    lam = freq.select(
-        "b", F.floor(F.log("c") * 1e6 + 0.5).cast("long").alias("lam")
-    )
-    tot = freq.agg(
-        F.floor(F.log(F.sum("c")) * 1e6 + 0.5).cast("long").alias("logn")
-    )
-    # Score pass (r12): OUTER-exploded twin of `grams` — explode_outer
-    # keeps exactly one null-gram row for a doc with no grams (empty or
-    # sub-n-token text), so the per-doc aggregate covers EVERY doc and
-    # the corpus-scale doc_id re-attach join (+ a third documents scan)
-    # disappears. lam covers every bucket the fit observed, so the LEFT
-    # join hits on every real gram; null grams fall through with null
-    # lam/gs that the null-skipping aggregates ignore.
-    grams_o = base.select(
-        "doc_id",
-        F.explode_outer(
-            F.when(
-                F.length("norm") > 0,
-                F.regexp_extract_all(F.col("norm"), F.lit(pat), F.lit(1)),
-            )
-        ).alias("gs"),
-    ).select(
-        "doc_id",
-        "gs",
-        (
-            F.conv(F.substring(F.md5("gs"), 1, 8), 16, 10).cast("long") % _SDH_B
-        ).alias("b"),
-    )
-    sc = (
-        grams_o.join(F.broadcast(lam), "b", "left")
-        .groupBy("doc_id")
-        .agg(F.sum("lam").alias("s"), F.count("gs").alias("nf"))
-    )
-    return (
-        sc.crossJoin(F.broadcast(tot))
-        .select(
-            "doc_id",
-            F.col("nf").cast("long").alias("n_grams"),
-            F.coalesce(F.col("s") - F.col("nf") * F.col("logn"), F.lit(0))
-            .cast("long")
-            .alias("logp_micro"),
-        )
-        .orderBy("doc_id")
-    )
+    return _softdedup_weights(docs, "b", ccnet.bucket_md5, null_guard=False, broadcast_lam=True)

@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_from_s3_to_postgresql_template_spark.functions.text import ws_token_count_col
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS, ws_token_count_col
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
@@ -82,10 +82,6 @@ __all__ = [
     "docs_gopher_repetition_cjk",
     "dedup_keep_best_quality",
 ]
-
-#: explicit ASCII whitespace — identical byte set under Java regex and
-#: RE2 (the llm_ops8 convention)
-_WS = r"[ \t\n\x0B\f\r]+"
 
 # ---------------------------------------------------------------------------
 # docs_gopher_repetition
@@ -127,11 +123,11 @@ _GR_BODY_TPL = rf"""d AS (
       FROM lg GROUP BY doc_id
     ), ts AS (
       SELECT doc_id,
-             list_filter(string_split_regex(t, '{_WS}'), x -> x <> '') AS toks,
-             CAST(len(list_filter(string_split_regex(t, '{_WS}'), x -> x <> ''))
+             list_filter(string_split_regex(t, '{WS}'), x -> x <> '') AS toks,
+             CAST(len(list_filter(string_split_regex(t, '{WS}'), x -> x <> ''))
                   AS BIGINT) AS n_tok,
              CAST(COALESCE(list_sum(list_transform(
-                  list_filter(string_split_regex(t, '{_WS}'), x -> x <> ''),
+                  list_filter(string_split_regex(t, '{WS}'), x -> x <> ''),
                   x -> CAST(len(x) AS BIGINT))), 0) AS BIGINT) AS tok_chars
       FROM d
     ), g2 AS (
@@ -389,7 +385,7 @@ _UM_BUDGET_EPOCHS = 2  # token budget as a multiple of total corpus tokens
 _UM_BODY = rf"""tk AS (
       SELECT doc_id,
              COALESCE(source, '') || '/' || COALESCE(lang, '') AS domain,
-             CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '{_WS}'),
+             CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '{WS}'),
                   x -> x <> '')) AS BIGINT) AS n_tok
       FROM documents
     ), dom AS (
@@ -726,7 +722,7 @@ _TF_ORACLE = rf"""
              len(list_filter(
                  string_split_regex(
                    regexp_replace(COALESCE(text, ''), '{_CJK_RE2}', ' ', 'g'),
-                   '{_WS}'),
+                   '{WS}'),
                  x -> x <> '')) AS n_ws
       FROM documents
     ), a AS (
@@ -992,7 +988,7 @@ _SHARD_TOKENS = 1000  # tokens per training shard at fixture scale
 _SP_ORACLE = rf"""
     WITH t AS (
       SELECT doc_id,
-             CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '{_WS}'),
+             CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '{WS}'),
                   x -> x <> '')) AS BIGINT) AS n_tok
       FROM documents
     ), w AS (
@@ -1102,7 +1098,7 @@ _FG_SHAPE_CTE = rf"""shape AS (
               AND CAST(len(list_filter(toks,
                    x -> x IN ('the','and','of','to','in','is','a','that'))) AS BIGINT)
                   >= 2, FALSE) AS passes_shape
-      FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '{_WS}') AS toks
+      FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '{WS}') AS toks
             FROM documents)
     )"""
 
@@ -1129,7 +1125,7 @@ def _full_gate_cols(docs: DataFrame) -> DataFrame:
     from etl_from_s3_to_postgresql_template_spark.functions.gopher_rep import rep_stats_counts
     from etl_from_s3_to_postgresql_template_spark.functions.text import LANG_STOPWORDS
 
-    toks = F.split(F.lower(F.trim("text")), _WS)
+    toks = F.split(F.lower(F.trim("text")), WS)
     n_tokens = F.size(toks).cast("long")
     mean_len = F.round(
         F.aggregate(
@@ -1305,7 +1301,7 @@ _SM_ORACLE = rf"""
       FROM s
     )
     SELECT doc_id,
-           trim(regexp_replace(t2, '{_WS}', ' ', 'g'), ' ') AS clean_text,
+           trim(regexp_replace(t2, '{WS}', ' ', 'g'), ' ') AS clean_text,
            CAST((length(t0) - length(regexp_replace(t0, '{_SM_TAG}', '', 'g')))
                 AS BIGINT) AS n_tag_chars,
            CAST(length(t1) - length(t2) AS BIGINT) AS n_entity_chars
@@ -1334,7 +1330,7 @@ def docs_strip_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("&amp;", "&"),
     ):
         t2 = F.replace(t2, F.lit(ent), F.lit(ch))
-    clean = F.trim(F.regexp_replace(t2, _WS, " "))
+    clean = F.trim(F.regexp_replace(t2, WS, " "))
     n_tag_chars = (
         F.length(t0) - F.length(F.regexp_replace(t0, _SM_TAG, ""))
     ).cast("long")

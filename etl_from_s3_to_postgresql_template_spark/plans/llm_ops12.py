@@ -61,7 +61,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_from_s3_to_postgresql_template_spark.functions.text import ws_token_count_col
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS, ws_token_count_col
 from etl_from_s3_to_postgresql_template_spark.operators import ccnet
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
@@ -76,9 +76,6 @@ __all__ = [
     "docs_ccnet_ppl_buckets",
     "docs_ccnet_ppl_buckets_hashed",
 ]
-
-#: explicit ASCII whitespace (the llm_ops8 convention; RE2 \s omits \x0B)
-_WS = r"[ \t\n\x0B\f\r]+"
 
 
 # ---------------------------------------------------------------------------
@@ -427,7 +424,7 @@ def _ratio_micro(c: str, t: str, d: str) -> str:
 
 _DM_BODY = rf"""tk AS (
       SELECT COALESCE(source, '') || '/' || COALESCE(lang, '') AS domain,
-             CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '{_WS}'),
+             CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '{WS}'),
                   x -> x <> '')) AS BIGINT) AS n_tok,
              CAST(length(COALESCE(text, '')) AS BIGINT) AS n_chars
       FROM documents
@@ -696,7 +693,7 @@ def _sm_ent_sql(src: str) -> str:
 
 
 def _sm_clean_sql(src: str) -> str:
-    return f"trim(regexp_replace({src}, '{_WS}', ' ', 'g'), ' ')"
+    return f"trim(regexp_replace({src}, '{WS}', ' ', 'g'), ' ')"
 
 
 _SMF_ORACLE = f"""
@@ -768,7 +765,7 @@ _FW_ORACLE = f"""
       SELECT doc_id, {_FW_STRIP_SQL} AS clean_text FROM documents
     ), gated AS (
       SELECT v.doc_id, v.registered_domain, s.clean_text,
-             CAST(len(list_filter(string_split_regex(s.clean_text, '{_WS}'),
+             CAST(len(list_filter(string_split_regex(s.clean_text, '{WS}'),
                   x -> x <> '')) AS BIGINT) AS n_tok
       FROM verdict v JOIN strip s USING (doc_id)
       WHERE NOT v.blocked

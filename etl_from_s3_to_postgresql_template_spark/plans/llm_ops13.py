@@ -480,31 +480,7 @@ def docs_bloom_paragraph_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     pars = bloom.paragraphs(docs).transform(shared_subtree)
     probe = _probe_odd_half(pars)
-    ref_pars = pars.where(F.col("doc_id") % 2 == 0)
-    # no broadcast hint: the distinct reference TEXT frame grows with the
-    # corpus (unlike the 128 KB words table) — let Spark's size-based
-    # planning fall back to a shuffle join past the threshold (review r11)
-    truth = probe.join(
-        ref_pars.select(F.col("par").alias("_rpar")).distinct(),
-        probe.par == F.col("_rpar"),
-        "left",
-    ).select("dup", F.col("_rpar").isNotNull().alias("is_dup"))
-    # empty probe stream: sums are NULL on 0 rows — coalesce to the
-    # oracle's vacuous constants (0 dups, 0 missed, fp trivially ok)
-    return truth.agg(
-        F.count(F.lit(1)).cast("long").alias("n_probe_paragraphs"),
-        F.coalesce(F.sum(F.col("is_dup").cast("long")), F.lit(0))
-        .cast("long")
-        .alias("n_true_dup"),
-        F.coalesce(F.sum((F.col("is_dup") & ~F.col("dup")).cast("long")), F.lit(0))
-        .cast("long")
-        .alias("n_missed"),
-        F.coalesce(
-            F.sum((F.col("dup") & ~F.col("is_dup")).cast("long")) * 20
-            <= F.sum((~F.col("is_dup")).cast("long")),
-            F.lit(True),
-        ).alias("fp_ok"),
-    )
+    return bloom.gate_summary(probe, pars.where(F.col("doc_id") % 2 == 0))
 
 
 # ---------------------------------------------------------------------------

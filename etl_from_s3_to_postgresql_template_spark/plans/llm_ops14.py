@@ -81,6 +81,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.operators import bloom, ccnet
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
@@ -92,9 +93,6 @@ __all__ = [
     "docs_bloom_merge_shards",
     "docs_bloom_merge_shards_gate",
 ]
-
-# explicit whitespace class — RE2 \s omits \x0B (the repo convention)
-_WS = r"[ \t\n\x0B\f\r]+"
 
 # ---------------------------------------------------------------------------
 # corpus_prep_funnel4 — shared pipeline, parameterized clean stage
@@ -200,9 +198,9 @@ def _f4_pipeline(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
         ).alias("_ccnet_keep"),
     )
     # quality signals built with the Python Column API only — embedding
-    # _WS inside an F.expr string literal would re-escape the regex
+    # WS inside an F.expr string literal would re-escape the regex
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col("cleaned_text"))), _WS), lambda x: x != ""
+        F.split(F.lower(F.trim(F.col("cleaned_text"))), WS), lambda x: x != ""
     )
     n_tok = F.size(toks).cast("long")
     wl_sum = F.aggregate(toks, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
@@ -241,7 +239,7 @@ _F4_BUCKET_SQL_12 = ccnet.bucket_md5_sql("s.w1 || ' ' || s.w2")
 _F4_BUCKET_SQL_1 = ccnet.bucket_md5_sql("s.w1")
 _F4_TOKS_SQL = (
     "list_filter(string_split_regex(lower(trim(cleaned_text)),"
-    f" '{_WS}'), x -> x <> '')"
+    f" '{WS}'), x -> x <> '')"
 )
 
 _F4_ORACLE = rf"""
@@ -277,7 +275,7 @@ _F4_ORACLE = rf"""
     ), rt AS (
       SELECT doc_id, COALESCE(lang, '') AS lang,
              list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS toks
+                  '{WS}'), x -> x <> '') AS toks
       FROM documents WHERE doc_id % 2 = 0
     ), rbg AS (
       SELECT doc_id, lang,
@@ -491,26 +489,4 @@ def docs_bloom_merge_shards_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pars = bloom.paragraphs(docs).transform(shared_subtree)
     probe = _merge_probe(docs)
-    # no broadcast hint: the distinct reference TEXT frame grows with
-    # the corpus — size-based planning decides (llm_ops13 convention)
-    truth = probe.join(
-        pars.where(F.col("doc_id") % 3 != 2)
-        .select(F.col("par").alias("_rpar"))
-        .distinct(),
-        probe.par == F.col("_rpar"),
-        "left",
-    ).select("dup", F.col("_rpar").isNotNull().alias("is_dup"))
-    return truth.agg(
-        F.count(F.lit(1)).cast("long").alias("n_probe_paragraphs"),
-        F.coalesce(F.sum(F.col("is_dup").cast("long")), F.lit(0))
-        .cast("long")
-        .alias("n_true_dup"),
-        F.coalesce(F.sum((F.col("is_dup") & ~F.col("dup")).cast("long")), F.lit(0))
-        .cast("long")
-        .alias("n_missed"),
-        F.coalesce(
-            F.sum((F.col("dup") & ~F.col("is_dup")).cast("long")) * 20
-            <= F.sum((~F.col("is_dup")).cast("long")),
-            F.lit(True),
-        ).alias("fp_ok"),
-    )
+    return bloom.gate_summary(probe, pars.where(F.col("doc_id") % 3 != 2))

@@ -2,37 +2,15 @@
 operator families that round out existing groups with their
 published-production variants.
 
-1. ``corpus_bigram_lm_kn`` — interpolated Kneser-Ney smoothing over the
-   bigram LM (Kneser & Ney 1995; Chen & Goodman 1998 eq. 4.ledger) — the
+1. ``corpus_bigram_lm_kn`` (+ trigram, bucketed, fast, agreement-gate
+   and document-scoring tiers) — interpolated Kneser-Ney smoothing, the
    smoother KenLM ships and CCNet's quality LM actually uses, extending
-   ``corpus_bigram_lm`` (add-one) and the CCNet family (llm_ops12/13):
-
-     p_KN(w2|w1) = max(c(w1,w2) - d, 0) / c(w1)
-                 + d * N1+(w1,*) / c(w1) * N1+(*,w2) / T        (d = 3/4)
-
-   where N1+(w1,*) = distinct continuations of w1, N1+(*,w2) = distinct
-   left-contexts of w2 (the continuation count), T = distinct bigram
-   types. All four stats come from ONE aggregated (w1, w2, c12) pairs
-   frame: two windows over the pairs frame (vocab-squared-bounded, never
-   the corpus) and one broadcast scalar total — the repo's
-   windows-not-broadcasts rule on bounded frames. The probability is
-   emitted in exact integer micro-units via the staged truncating-div
-   convention (llm_ops12 ``_mul_div_staged`` rationale): each stage
-   guards its own int64 bound with a loud ``raise_error`` (never a
-   silent wrap), and the oracle runs the IDENTICAL staging so the two
-   engines agree bit-for-bit:
-
-     pc_micro  = (1e6 * N1+(*,w2)) div T
-     t1_micro  = (1e6 * max(4*c12 - 3, 0)) div (4 * c1)
-     t2_micro  = (3 * N1+(w1,*) * pc_micro) div (4 * c1)
-     pkn_micro = t1_micro + t2_micro          -- off the true rational
-                                              -- by < 2 micro (2 truncs)
-
-   Scale: at 100 TB the unbucketed type counts outgrow int64 guards by
-   design — the production tier is the SAME expression over the 2^20
-   md5/xxhash64 bucket space (llm_ops13 CCNet convention), which caps T
-   and every N1+; this exact-vocabulary tier is the cross-engine oracle
-   twin, like docs_ccnet_ppl_buckets is for the hashed/fast tiers.
+   ``corpus_bigram_lm`` (add-one) and the CCNet family (llm_ops12/13).
+   The LM, its staged exact-integer program and the DuckDB fragments
+   that replay it live once in operators/knlm.py; the queries here pick
+   the tier: exact words (the cross-engine oracle twin), 2^20 md5 or
+   xxhash64 word buckets (the production tiers, int64-safe at any
+   corpus size), or per-language external-LM document scoring.
 
 2. ``similarity_topk_matryoshka`` (+ ``_recall_gate``) — two-stage
    coarse-to-fine retrieval over Matryoshka-style prefix dimensions
@@ -80,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators import ccnet, knlm
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
@@ -102,246 +81,50 @@ __all__ = [
     "corpus_unigram_encode_gate",
 ]
 
-# explicit whitespace class — RE2 \s omits \x0B (the repo convention)
-_WS = r"[ \t\n\x0B\f\r]+"
-
-_BIGMAX = 9223372036854775807
-
 # ---------------------------------------------------------------------------
-# corpus_bigram_lm_kn
+# Kneser-Ney tiers (operators/knlm.py)
 # ---------------------------------------------------------------------------
 
 _KN_TOP = 30
 
-# staged KN arithmetic (module comment) — shared between the Spark
-# F.expr and the DuckDB oracle so both engines run the same integer
-# program; each stage fails loudly past its int64 precondition (Spark
-# would otherwise wrap silently with ANSI off; DuckDB errors natively,
-# so the CASE keeps the two engines' failure behavior aligned too).
-_KN_PC = (
-    "CASE WHEN n1p_w2 > {max} {div} 1000000"
-    "  THEN {err}('kn p_cont stage would overflow int64')"
-    "  ELSE (1000000 * n1p_w2) {div} t END"
-)
-_KN_T1 = (
-    "CASE WHEN pair_cnt > {max} {div} 4000000"
-    "  THEN {err}('kn discount stage would overflow int64')"
-    "  ELSE (1000000 * greatest(4 * pair_cnt - 3, CAST(0 AS BIGINT)))"
-    "       {div} (4 * w1_cnt) END"
-)
-_KN_T2 = (
-    "CASE WHEN n1p_w1 > {max} {div} 3000000"
-    "  THEN {err}('kn backoff stage would overflow int64')"
-    "  ELSE (3 * n1p_w1 * pc_micro) {div} (4 * w1_cnt) END"
-)
+
+def _kn_top(occ: DataFrame, k1: str, k2: str) -> DataFrame:
+    """The top-30 (k1, k2) pairs by raw count with their KN statistics."""
+    return knlm.pair_stats(occ, k1, k2).orderBy(F.desc("pair_cnt"), k1, k2).limit(_KN_TOP)
 
 
-def _kn_spark_expr(tmpl: str) -> str:
-    # Spark needs the raise_error wrapped in a CAST to type-check the CASE
-    body = tmpl.format(max=_BIGMAX, div="div", err="__ERR__")
-    return body.replace(
-        "__ERR__('", "CAST(raise_error('"
-    ).replace("overflow int64')", "overflow int64') AS BIGINT)")
-
-
-def _kn_duck_expr(tmpl: str) -> str:
-    return tmpl.format(max=_BIGMAX, div="//", err="error")
-
-
-_KN_ORACLE = rf"""
-    WITH toks AS (
-      SELECT list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS t
-      FROM documents
-    ), bg AS (
-      SELECT UNNEST(list_transform(range(len(t) - 1),
-                    i -> {{'w1': t[i+1], 'w2': t[i+2]}})) AS s
-      FROM toks WHERE len(t) >= 2
-    ), pairs AS (
-      SELECT s.w1 AS w1, s.w2 AS w2, CAST(COUNT(*) AS BIGINT) AS pair_cnt
-      FROM bg GROUP BY 1, 2
-    ), stats AS (
-      SELECT w1, w2, pair_cnt,
-             CAST(SUM(pair_cnt) OVER (PARTITION BY w1) AS BIGINT) AS w1_cnt,
-             CAST(COUNT(*) OVER (PARTITION BY w1) AS BIGINT) AS n1p_w1,
-             CAST(COUNT(*) OVER (PARTITION BY w2) AS BIGINT) AS n1p_w2,
-             CAST(COUNT(*) OVER () AS BIGINT) AS t
-      FROM pairs
-    ), pc AS (
-      SELECT *, {_kn_duck_expr(_KN_PC)} AS pc_micro FROM stats
-    )
-    SELECT w1, w2, pair_cnt, w1_cnt, n1p_w1, n1p_w2,
-           CAST({_kn_duck_expr(_KN_T1)}
-                + {_kn_duck_expr(_KN_T2)} AS BIGINT) AS pkn_micro
-    FROM pc
-    ORDER BY pair_cnt DESC, w1, w2
+def _kn_top_sql(occ: str, k1: str, k2: str) -> str:
+    """The DuckDB twin of ``_kn_top``; ``occ`` defines the `occ(k1, k2)`
+    CTE over ccnet.TOKS_SQL's `bg`."""
+    return f"""
+    WITH {ccnet.TOKS_SQL}, {occ}, {knlm.pair_stats_sql(k1, k2)}
+    SELECT * FROM kn
+    ORDER BY pair_cnt DESC, {k1}, {k2}
     LIMIT {_KN_TOP}
     """
 
 
+_KN_ORACLE = _kn_top_sql("occ AS (SELECT s.w1 AS w1, s.w2 AS w2 FROM bg)", "w1", "w2")
+
+
 @query("corpus_bigram_lm_kn", oracle=_KN_ORACLE)
 def corpus_bigram_lm_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram LM (module comment): the top-30
+    """Interpolated Kneser-Ney bigram LM over exact words: the top-30
     bigrams by raw count with their KN-smoothed probability in exact
     integer micro-units. One corpus tokenize -> one (w1,w2) groupBy;
     every LM statistic after that lives on the aggregated pairs frame
     (two windows + one broadcast scalar total), so the corpus is read
-    once and shuffled once — the count shuffle any bigram LM needs."""
+    once and shuffled once — the count shuffle any bigram LM needs.
+    At 100 TB the word type counts outgrow the int64 guards by design;
+    the bucketed tiers below are the production shape and this one is
+    their cross-engine oracle twin."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.filter(
-            F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), _WS),
-            lambda x: x != "",
-        ).alias("t")
-    ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    # pairs feeds the window stats AND the broadcast total — the lazy
-    # checkpoint shares one corpus pass between them (r12)
-    pairs = (
-        toks.select(F.explode(bigrams).alias("s"))
-        .groupBy(F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).cast("long").alias("pair_cnt"))
-        .transform(shared_subtree)
-    )
-    stats = pairs.select(
-        "w1",
-        "w2",
-        "pair_cnt",
-        F.sum("pair_cnt").over(W.partitionBy("w1")).cast("long").alias("w1_cnt"),
-        F.count(F.lit(1)).over(W.partitionBy("w1")).cast("long").alias("n1p_w1"),
-        F.count(F.lit(1)).over(W.partitionBy("w2")).cast("long").alias("n1p_w2"),
-    ).crossJoin(
-        F.broadcast(pairs.agg(F.count(F.lit(1)).cast("long").alias("t")))
-    )
-    pc = stats.withColumn("pc_micro", F.expr(_kn_spark_expr(_KN_PC)).cast("long"))
-    return (
-        pc.select(
-            "w1",
-            "w2",
-            "pair_cnt",
-            "w1_cnt",
-            "n1p_w1",
-            "n1p_w2",
-            (
-                F.expr(_kn_spark_expr(_KN_T1)).cast("long")
-                + F.expr(_kn_spark_expr(_KN_T2)).cast("long")
-            ).alias("pkn_micro"),
-        )
-        .orderBy(F.desc("pair_cnt"), "w1", "w2")
-        .limit(_KN_TOP)
-    )
+    return _kn_top(ccnet.bigram_occurrences(docs).select("w1", "w2"), "w1", "w2")
 
 
-# ---------------------------------------------------------------------------
-# corpus_trigram_lm_kn — the full KN recursion
-# ---------------------------------------------------------------------------
-# Interpolated KN is defined recursively (Chen & Goodman 1998 §4.1.6):
-# the HIGHEST order discounts raw counts; every lower order discounts
-# CONTINUATION (type) counts — the property that makes KN the smoother
-# of record and what "Kneser-Ney" actually means beyond absolute
-# discounting. Trigram level exercises the full recursion (KenLM's
-# 5-gram is this shape iterated):
-#
-#   p(w3|w1w2) = max(c123 - d, 0)/c12 + d*N1+(w1w2,*)/c12 * p_mid(w3|w2)
-#   p_mid(w3|w2) = max(N1+(*,w2w3) - d, 0)/N1+(*,w2,*)
-#                + d*N1+(w2,*)/N1+(*,w2,*) * p_cont(w3)
-#   p_cont(w3)   = N1+(*,w3) / T_bi
-#
-# Statistics: c123/c12 from the raw trigram counts; N1+(w1w2,*) =
-# trigram types per (w1,w2) context; N1+(*,w2w3) = distinct w1 before
-# the bigram (w2,w3); N1+(*,w2,*) = trigram types with middle w2;
-# N1+(w2,*) = bigram types starting w2; N1+(*,w3)/T_bi = the bigram
-# tier's continuation unigram. Every one is a window over the
-# AGGREGATED trigram/bigram type frames (vocab-bounded, never the
-# corpus) and the corpus is tokenized once — the same scale class as
-# the bigram tier, one extra explode. The integer program stages the
-# recursion bottom-up (pc -> pmid -> ptri), each stage guarded at its
-# int64 bound; the micro truncation error compounds to < 3 micro over
-# the three stages, and the oracle runs the identical program.
-
-_KN3_PMID = (
-    "CASE WHEN ncw2w3 > {max} {div} 1000000"
-    "  THEN {err}('kn3 mid stage would overflow int64')"
-    "  ELSE (1000000 * greatest(4 * ncw2w3 - 3, CAST(0 AS BIGINT)))"
-    "       {div} (4 * nmidw2)"
-    "     + (3 * nw2dot * pc_micro) {div} (4 * nmidw2) END"
-)
-_KN3_PTRI = (
-    "CASE WHEN tri_cnt > {max} {div} 4000000"
-    "  THEN {err}('kn3 top stage would overflow int64')"
-    "  ELSE (1000000 * greatest(4 * tri_cnt - 3, CAST(0 AS BIGINT)))"
-    "       {div} (4 * c12)"
-    "     + (3 * n1p_ctx * pmid_micro) {div} (4 * c12) END"
-)
-
-
-def _kn3_spark(tmpl: str) -> str:
-    body = tmpl.format(max=_BIGMAX, div="div", err="__ERR__")
-    return body.replace("__ERR__('", "CAST(raise_error('").replace(
-        "overflow int64')", "overflow int64') AS BIGINT)"
-    )
-
-
-def _kn3_duck(tmpl: str) -> str:
-    return tmpl.format(max=_BIGMAX, div="//", err="error")
-
-
-_KN3_ORACLE = rf"""
-    WITH toks AS (
-      SELECT list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS t
-      FROM documents
-    ), tg AS (
-      SELECT UNNEST(list_transform(range(len(t) - 2),
-             i -> {{'w1': t[i+1], 'w2': t[i+2], 'w3': t[i+3]}})) AS s
-      FROM toks WHERE len(t) >= 3
-    ), tri AS (
-      SELECT s.w1 AS w1, s.w2 AS w2, s.w3 AS w3,
-             CAST(COUNT(*) AS BIGINT) AS tri_cnt
-      FROM tg GROUP BY 1, 2, 3
-    ), bgt AS (
-      SELECT s.w1 AS w1, s.w2 AS w2
-      FROM (
-        SELECT UNNEST(list_transform(range(len(t) - 1),
-               i -> {{'w1': t[i+1], 'w2': t[i+2]}})) AS s
-        FROM toks WHERE len(t) >= 2
-      ) GROUP BY 1, 2
-    ), bstat AS (
-      SELECT w1, w2,
-             CAST(COUNT(*) OVER (PARTITION BY w1) AS BIGINT) AS nw1dot,
-             CAST(COUNT(*) OVER (PARTITION BY w2) AS BIGINT) AS ndotw2,
-             CAST(COUNT(*) OVER () AS BIGINT) AS t_bi
-      FROM bgt
-    ), tstat AS (
-      SELECT w1, w2, w3, tri_cnt,
-             CAST(SUM(tri_cnt) OVER (PARTITION BY w1, w2) AS BIGINT) AS c12,
-             CAST(COUNT(*) OVER (PARTITION BY w1, w2) AS BIGINT) AS n1p_ctx,
-             CAST(COUNT(*) OVER (PARTITION BY w2, w3) AS BIGINT) AS ncw2w3,
-             CAST(COUNT(*) OVER (PARTITION BY w2) AS BIGINT) AS nmidw2
-      FROM tri
-    ), joined AS (
-      SELECT t.*, b2.nw1dot AS nw2dot, b3.ndotw2 AS ndotw3, b3.t_bi
-      FROM tstat t
-      JOIN (SELECT DISTINCT w1, nw1dot FROM bstat) b2 ON t.w2 = b2.w1
-      JOIN (SELECT DISTINCT w2, ndotw2, t_bi FROM bstat) b3 ON t.w3 = b3.w2
-    ), pc AS (
-      SELECT *,
-             CASE WHEN ndotw3 > {_BIGMAX} // 1000000
-                  THEN error('kn3 p_cont stage would overflow int64')
-                  ELSE (1000000 * ndotw3) // t_bi END AS pc_micro
-      FROM joined
-    ), pm AS (
-      SELECT *, {_kn3_duck(_KN3_PMID)} AS pmid_micro FROM pc
-    )
-    SELECT w1, w2, w3, tri_cnt, c12, n1p_ctx, ncw2w3, nmidw2, nw2dot,
-           ndotw3, t_bi,
-           CAST({_kn3_duck(_KN3_PTRI)} AS BIGINT) AS pkn_micro
-    FROM pm
+_KN3_ORACLE = f"""
+    WITH {ccnet.TOKS_SQL}, {knlm.TRIGRAM_SQL}
+    SELECT * FROM kn3
     ORDER BY tri_cnt DESC, w1, w2, w3
     LIMIT {_KN_TOP}
     """
@@ -349,282 +132,41 @@ _KN3_ORACLE = rf"""
 
 @query("corpus_trigram_lm_kn", oracle=_KN3_ORACLE)
 def corpus_trigram_lm_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trigram interpolated Kneser-Ney (section comment): the full KN
-    recursion — raw counts at the top order, continuation counts below,
-    staged bottom-up in exact integer micro-units. One tokenize, one
-    trigram and one bigram type aggregation; every statistic is a
-    window over those bounded type frames."""
+    """Trigram interpolated Kneser-Ney: the full KN recursion — raw
+    counts at the top order, continuation counts below, staged
+    bottom-up in exact integer micro-units (operators/knlm.py)."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    toks = docs.select(
-        F.filter(
-            F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), _WS),
-            lambda x: x != "",
-        ).alias("t")
-    ).transform(shared_subtree)  # feeds the trigram AND bigram subtrees
-    n = F.size("t")
-    tri_structs = F.zip_with(
-        F.zip_with(
-            F.slice("t", 1, n - 2),
-            F.slice("t", 2, n - 2),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        ),
-        F.slice("t", 3, n - 2),
-        lambda p, c: F.struct(
-            p["w1"].alias("w1"), p["w2"].alias("w2"), c.alias("w3")
-        ),
-    )
-    tri = (
-        toks.where(n >= 3)
-        .select(F.explode(tri_structs).alias("s"))
-        .groupBy(
-            F.col("s.w1").alias("w1"),
-            F.col("s.w2").alias("w2"),
-            F.col("s.w3").alias("w3"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("tri_cnt"))
-    )
-    bg_structs = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    bgt = (
-        toks.where(n >= 2)
-        .select(F.explode(bg_structs).alias("s"))
-        .groupBy(F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .drop("_c")
-    )
-    bstat = bgt.select(
-        "w1",
-        "w2",
-        F.count(F.lit(1)).over(W.partitionBy("w1")).cast("long").alias("nw1dot"),
-        F.count(F.lit(1)).over(W.partitionBy("w2")).cast("long").alias("ndotw2"),
-    ).crossJoin(
-        F.broadcast(bgt.agg(F.count(F.lit(1)).cast("long").alias("t_bi")))
-    ).transform(shared_subtree)  # feeds both lower-order join legs
-    tstat = tri.select(
-        "w1",
-        "w2",
-        "w3",
-        "tri_cnt",
-        F.sum("tri_cnt").over(W.partitionBy("w1", "w2")).cast("long").alias("c12"),
-        F.count(F.lit(1)).over(W.partitionBy("w1", "w2")).cast("long").alias("n1p_ctx"),
-        F.count(F.lit(1)).over(W.partitionBy("w2", "w3")).cast("long").alias("ncw2w3"),
-        F.count(F.lit(1)).over(W.partitionBy("w2")).cast("long").alias("nmidw2"),
-    )
-    b2 = bstat.select(F.col("w1").alias("_bw"), "nw1dot").distinct()
-    b3 = bstat.select(F.col("w2").alias("_cw"), "ndotw2", "t_bi").distinct()
-    joined = (
-        tstat.join(b2, tstat.w2 == b2._bw)
-        .join(b3, tstat.w3 == b3._cw)
-        .select(
-            "w1", "w2", "w3", "tri_cnt", "c12", "n1p_ctx", "ncw2w3", "nmidw2",
-            F.col("nw1dot").alias("nw2dot"),
-            F.col("ndotw2").alias("ndotw3"),
-            "t_bi",
-        )
-    )
-    pc = joined.withColumn(
-        "pc_micro",
-        F.expr(
-            f"CASE WHEN ndotw3 > {_BIGMAX} div 1000000"
-            " THEN CAST(raise_error('kn3 p_cont stage would overflow int64') AS BIGINT)"
-            " ELSE (1000000 * ndotw3) div t_bi END"
-        ).cast("long"),
-    )
-    pm = pc.withColumn("pmid_micro", F.expr(_kn3_spark(_KN3_PMID)).cast("long"))
     return (
-        pm.withColumn("pkn_micro", F.expr(_kn3_spark(_KN3_PTRI)).cast("long"))
-        .select(
-            "w1", "w2", "w3", "tri_cnt", "c12", "n1p_ctx", "ncw2w3", "nmidw2",
-            "nw2dot", "ndotw3", "t_bi", "pkn_micro",
-        )
+        knlm.trigram_stats(docs)
         .orderBy(F.desc("tri_cnt"), "w1", "w2", "w3")
         .limit(_KN_TOP)
     )
 
 
-# ---------------------------------------------------------------------------
-# corpus_bigram_lm_kn_bucketed + docs_ccnet_ppl_score_kn — the 100 TB tiers
-# ---------------------------------------------------------------------------
-# The exact-vocabulary KN tier's int64 guards are load-bearing only
-# because word/bigram type counts grow with the corpus. The production
-# tiers quantize WORDS onto the 2^20 md5 bucket space (the llm_ops13
-# CCNet convention — md5 bucketing has a bit-exact DuckDB twin, so
-# unlike xxhash64 tiers these stay FULLY oracle-paired): every N1+
-# statistic is then structurally <= 2^20 and p_cont's denominator T is
-# <= the observed (b1,b2) type count, so the staged arithmetic can
-# never leave int64 no matter the corpus size. docs_ccnet_ppl_score_kn
-# is the consuming shape: per-language external-LM document scoring
-# (Wenzek et al. 2020 §3.3 split: doc_id % 10 == 0 builds the LM, the
-# rest are scored) with the add-one smoother of the llm_ops13 family
-# upgraded to interpolated KN — the smoother KenLM, and therefore
-# CCNet, actually ships. Unseen contexts back off to the continuation
-# unigram; a 1-micro floor keeps log() defined for fully-unseen
-# bigrams. All LM-side tables (pairs, contexts, continuations, per-lang
-# type totals) are bounded and broadcast; the crawl stream is scored
-# map-side with ZERO LM-construction shuffle from the crawl.
-
-_KNB_B = 1_048_576  # 2^20 word buckets
-
-
-def _knb_bucket(col):
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % _KNB_B
-
-
-def _knb_bucket_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT % {_KNB_B}"
-
-
-def _knb_occurrences(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, b1, b2): one row per bigram occurrence with both
-    words quantized to their md5 bucket."""
-    toks = docs.select(
-        "doc_id",
-        F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
-        F.filter(
-            F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), _WS),
-            lambda x: x != "",
-        ).alias("t"),
-    ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select("doc_id", "lang", F.explode(bigrams).alias("s")).select(
-        "doc_id",
-        "lang",
-        _knb_bucket(F.col("s.w1")).alias("b1"),
-        _knb_bucket(F.col("s.w2")).alias("b2"),
-    )
-
-
-_KNB_TOKS_SQL = rf"""toks AS (
-      SELECT doc_id, COALESCE(lang, '') AS lang,
-             list_filter(string_split_regex(lower(trim(COALESCE(text, ''))),
-                  '{_WS}'), x -> x <> '') AS t
-      FROM documents
-    ), bg AS (
-      SELECT doc_id, lang,
-             UNNEST(list_transform(range(len(t) - 1),
-                    i -> {{'w1': t[i+1], 'w2': t[i+2]}})) AS s
-      FROM toks WHERE len(t) >= 2
-    ), bocc AS (
-      SELECT doc_id, lang,
-             {_knb_bucket_sql('s.w1')} AS b1,
-             {_knb_bucket_sql('s.w2')} AS b2
-      FROM bg
-    )"""
-
-_KNB_ORACLE = rf"""
-    WITH {_KNB_TOKS_SQL}, pairs AS (
-      SELECT b1, b2, CAST(COUNT(*) AS BIGINT) AS pair_cnt
-      FROM bocc GROUP BY 1, 2
-    ), stats AS (
-      SELECT b1, b2, pair_cnt,
-             CAST(SUM(pair_cnt) OVER (PARTITION BY b1) AS BIGINT) AS w1_cnt,
-             CAST(COUNT(*) OVER (PARTITION BY b1) AS BIGINT) AS n1p_w1,
-             CAST(COUNT(*) OVER (PARTITION BY b2) AS BIGINT) AS n1p_w2,
-             CAST(COUNT(*) OVER () AS BIGINT) AS t
-      FROM pairs
-    ), pc AS (
-      SELECT *, {_kn_duck_expr(_KN_PC)} AS pc_micro FROM stats
-    )
-    SELECT b1, b2, pair_cnt, w1_cnt, n1p_w1 AS n1p_b1, n1p_w2 AS n1p_b2,
-           CAST({_kn_duck_expr(_KN_T1)}
-                + {_kn_duck_expr(_KN_T2)} AS BIGINT) AS pkn_micro
-    FROM pc
-    ORDER BY pair_cnt DESC, b1, b2
-    LIMIT {_KN_TOP}
-    """
+_KNB_ORACLE = _kn_top_sql(f"{knlm.BOCC_SQL}, occ AS (SELECT b1, b2 FROM bocc)", "b1", "b2")
 
 
 @query("corpus_bigram_lm_kn_bucketed", oracle=_KNB_ORACLE)
 def corpus_bigram_lm_kn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed-vocabulary KN tier (section comment): the exact tier's
-    staged program over 2^20 md5 word buckets — N1+ stats structurally
-    int64-safe at any corpus size, and still fully oracle-paired."""
+    """Bucketed-vocabulary KN tier: the exact tier's staged program over
+    2^20 md5 word buckets — N1+ stats structurally int64-safe at any
+    corpus size, and still fully oracle-paired (md5 bucketing has a
+    bit-exact DuckDB twin)."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    occ = _knb_occurrences(docs).select("b1", "b2")
-    return (
-        _knb_pairs_stats(occ)
-        .orderBy(F.desc("pair_cnt"), "b1", "b2")
-        .limit(_KN_TOP)
-    )
-
-
-def _knb_pairs_stats(occ: DataFrame) -> DataFrame:
-    """(b1, b2, pair_cnt, w1_cnt, n1p_w1, n1p_w2, t) + staged pkn_micro
-    — the bucketed KN program, shared by the md5 and xxhash64 tiers."""
-    # pairs feeds the window stats AND the broadcast total — the lazy
-    # checkpoint shares one corpus pass between them (r12)
-    pairs = (
-        occ.groupBy("b1", "b2")
-        .agg(F.count(F.lit(1)).cast("long").alias("pair_cnt"))
-        .transform(shared_subtree)
-    )
-    stats = pairs.select(
-        "b1",
-        "b2",
-        "pair_cnt",
-        F.sum("pair_cnt").over(W.partitionBy("b1")).cast("long").alias("w1_cnt"),
-        F.count(F.lit(1)).over(W.partitionBy("b1")).cast("long").alias("n1p_w1"),
-        F.count(F.lit(1)).over(W.partitionBy("b2")).cast("long").alias("n1p_w2"),
-    ).crossJoin(
-        F.broadcast(pairs.agg(F.count(F.lit(1)).cast("long").alias("t")))
-    )
-    pc = stats.withColumn("pc_micro", F.expr(_kn_spark_expr(_KN_PC)).cast("long"))
-    return pc.select(
-        "b1",
-        "b2",
-        "pair_cnt",
-        "w1_cnt",
-        F.col("n1p_w1").alias("n1p_b1"),
-        F.col("n1p_w2").alias("n1p_b2"),
-        (
-            F.expr(_kn_spark_expr(_KN_T1)).cast("long")
-            + F.expr(_kn_spark_expr(_KN_T2)).cast("long")
-        ).alias("pkn_micro"),
-    )
-
-
-def _knf_occurrences(docs: DataFrame) -> DataFrame:
-    """xxhash64 twin of _knb_occurrences — the production hash (one
-    8-byte mix per word vs md5's full digest; the llm_ops13 _fast
-    convention). pmod keeps the signed xxhash64 in [0, 2^20)."""
-    toks = docs.select(
-        F.filter(
-            F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), _WS),
-            lambda x: x != "",
-        ).alias("t")
-    ).where(F.size("t") >= 2)
-    n = F.size("t")
-    bigrams = F.zip_with(
-        F.slice("t", 1, n - 1),
-        F.slice("t", 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select(F.explode(bigrams).alias("s")).select(
-        F.pmod(F.xxhash64(F.col("s.w1")), F.lit(_KNB_B)).alias("b1"),
-        F.pmod(F.xxhash64(F.col("s.w2")), F.lit(_KNB_B)).alias("b2"),
-    )
+    occ = knlm.bucket_occ(ccnet.bigram_occurrences(docs)).select("b1", "b2")
+    return _kn_top(occ, "b1", "b2")
 
 
 @query("corpus_bigram_lm_kn_fast")
 def corpus_bigram_lm_kn_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 production tier of the bucketed KN LM — identical
-    staged program, production hash. Rows-only (xxhash64 has no DuckDB
-    twin); corpus_bigram_lm_kn_agreement_gate is its oracle-paired
-    quality check."""
+    staged program, production hash (one 8-byte mix per word vs md5's
+    full digest). Rows-only (xxhash64 has no DuckDB twin);
+    corpus_bigram_lm_kn_agreement_gate is its oracle-paired quality
+    check."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        _knb_pairs_stats(_knf_occurrences(docs))
-        .orderBy(F.desc("pair_cnt"), "b1", "b2")
-        .limit(_KN_TOP)
-    )
+    occ = knlm.bucket_occ(ccnet.bigram_occurrences(docs), ccnet.bucket_fast)
+    return _kn_top(occ.select("b1", "b2"), "b1", "b2")
 
 
 #: the gate compares the two bucketings' top-30 STATISTICS TUPLES as
@@ -687,128 +229,31 @@ def corpus_bigram_lm_kn_agreement_gate(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-#: per-bigram smoothed probability for the scoring tier — the same
-#: staged stages with stream-side NULL semantics: unseen context backs
-#: off to p_cont; a 1-micro floor keeps ln() defined.
-_KNS_PKN = (
-    "CASE WHEN w1_cnt IS NULL THEN greatest(pc_micro, CAST(1 AS BIGINT))"
-    "  ELSE greatest(({t1}) + ({t2}), CAST(1 AS BIGINT)) END"
-)
 
-_KNS_ORACLE = rf"""
-    WITH {_KNB_TOKS_SQL}, lm12 AS (
-      SELECT lang, b1, b2, CAST(COUNT(*) AS BIGINT) AS pair_cnt
-      FROM bocc WHERE doc_id % 10 = 0 GROUP BY 1, 2, 3
-    ), lm1 AS (
-      SELECT lang, b1, CAST(SUM(pair_cnt) AS BIGINT) AS w1_cnt,
-             CAST(COUNT(*) AS BIGINT) AS n1p_w1
-      FROM lm12 GROUP BY 1, 2
-    ), lmc AS (
-      SELECT lang, b2, CAST(COUNT(*) AS BIGINT) AS n1p_w2
-      FROM lm12 GROUP BY 1, 2
-    ), tt AS (
-      SELECT lang, CAST(COUNT(*) AS BIGINT) AS t FROM lm12 GROUP BY 1
+_KNS_ORACLE = f"""
+    WITH {ccnet.TOKS_SQL}, {knlm.BOCC_SQL}, lm_occ AS (
+      SELECT lang, b1, b2 FROM bocc WHERE doc_id % 10 = 0
     ), occ AS (
       SELECT doc_id, lang, b1, b2 FROM bocc WHERE doc_id % 10 <> 0
-    ), joined AS (
-      SELECT o.doc_id, o.lang,
-             COALESCE(l12.pair_cnt, 0) AS pair_cnt,
-             l1.w1_cnt, l1.n1p_w1,
-             COALESCE(lc.n1p_w2, 0) AS n1p_w2, tt.t
-      FROM occ o
-      LEFT JOIN lm12 l12 USING (lang, b1, b2)
-      LEFT JOIN lm1 l1 USING (lang, b1)
-      LEFT JOIN lmc lc USING (lang, b2)
-      JOIN tt USING (lang)
-    ), pc AS (
-      SELECT *, {_kn_duck_expr(_KN_PC)} AS pc_micro FROM joined
-    ), p AS (
-      SELECT doc_id, lang,
-             {_KNS_PKN.format(t1=_kn_duck_expr(_KN_T1), t2=_kn_duck_expr(_KN_T2))}
-               AS pkn_micro
-      FROM pc
-    )
-    SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           CAST(round(ROUND(CAST(SUM(CAST(ln(pkn_micro / 1000000.0)
-                     AS DECIMAL(38,15))) AS DOUBLE) / COUNT(*), 4) * 10000)
-                AS BIGINT) AS lp
-    FROM p GROUP BY doc_id, lang
-    ORDER BY doc_id
+    ), {knlm.LM_SCORED_SQL}
+    SELECT * FROM scored ORDER BY doc_id
     """
 
 
 @query("docs_ccnet_ppl_score_kn", oracle=_KNS_ORACLE)
 def docs_ccnet_ppl_score_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language external-LM document scoring with interpolated KN
-    smoothing (section comment): LM tables from the held-out slice
-    only, all bounded (<= 2^20-keyed) and broadcast; the stream is
-    scored map-side; languages without an LM drop (CCNet semantics)."""
-    occ_all = _knb_occurrences(load_table(spark, sf_dir, "documents", parallel=True))
-    # lm12 feeds its own broadcast AND the lm1/lmc/tt derivations — each
-    # a separate broadcast build that re-ran the reference slice's
-    # tokenize+explode+md5 chain (4 extra passes, r12). The lazy
-    # checkpoint pins the bounded (<= 2^20-keyed) table once.
-    lm12 = (
-        occ_all.where(F.col("doc_id") % 10 == 0)
-        .groupBy("lang", "b1", "b2")
-        .agg(F.count(F.lit(1)).cast("long").alias("pair_cnt"))
-        .transform(shared_subtree)
-    )
-    lm1 = lm12.groupBy("lang", "b1").agg(
-        F.sum("pair_cnt").cast("long").alias("w1_cnt"),
-        F.count(F.lit(1)).cast("long").alias("n1p_w1"),
-    )
-    lmc = lm12.groupBy("lang", "b2").agg(
-        F.count(F.lit(1)).cast("long").alias("n1p_w2")
-    )
-    tt = lm12.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("t"))
-    occ = occ_all.where(F.col("doc_id") % 10 != 0)
-    joined = (
-        occ.join(F.broadcast(lm12), ["lang", "b1", "b2"], "left")
-        .join(F.broadcast(lm1), ["lang", "b1"], "left")
-        .join(F.broadcast(lmc), ["lang", "b2"], "left")
-        .join(F.broadcast(tt), "lang")  # inner: unscoreable langs drop
-        .select(
-            "doc_id",
-            "lang",
-            F.coalesce(F.col("pair_cnt"), F.lit(0)).cast("long").alias("pair_cnt"),
-            "w1_cnt",
-            "n1p_w1",
-            F.coalesce(F.col("n1p_w2"), F.lit(0)).cast("long").alias("n1p_w2"),
-            "t",
-        )
-    )
-    pkn = joined.withColumn(
-        "pc_micro", F.expr(_kn_spark_expr(_KN_PC)).cast("long")
-    ).withColumn(
-        "pkn_micro",
-        F.expr(
-            _KNS_PKN.format(
-                t1=_kn_spark_expr(_KN_T1), t2=_kn_spark_expr(_KN_T2)
-            )
-        ).cast("long"),
-    )
-    return (
-        pkn.groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(
-                F.round(
-                    F.sum(
-                        F.log(F.col("pkn_micro") / F.lit(1000000.0)).cast(
-                            "decimal(38,15)"
-                        )
-                    ).cast("double")
-                    / F.count(F.lit(1)),
-                    4,
-                )
-                * 10000
-            )
-            .cast("long")
-            .alias("lp"),
-        )
-        .orderBy("doc_id")
-    )
+    smoothing — the add-one smoother of the llm_ops13 CCNet family
+    upgraded to the one KenLM, and therefore CCNet, actually ships.
+    doc_id % 10 == 0 builds the md5-bucketed LMs (Wenzek et al. 2020
+    §3.3 split), the rest are scored map-side against them with ZERO
+    LM-construction shuffle from the crawl; languages without an LM
+    drop (CCNet semantics)."""
+    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    occ = knlm.bucket_occ(ccnet.bigram_occurrences(docs))
+    return knlm.lm_scored(
+        occ.where(F.col("doc_id") % 10 == 0), occ.where(F.col("doc_id") % 10 != 0)
+    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

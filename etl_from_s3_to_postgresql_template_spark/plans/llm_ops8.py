@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
@@ -68,16 +69,10 @@ _ESS_N = 8  # gram length in tokens
 #: and the 500k-doc stress corpus never reach it (oracle unchanged).
 _ESS_MAX_HITS_PER_DOC = 100_000
 
-#: ASCII whitespace, pinned EXPLICITLY on the oracle side (ADVICE r8):
-#: Java's \s is [ \t\n\x0B\f\r] but RE2's \s omits \x0B (vertical tab),
-#: so a bare '\s+' in the DuckDB twin silently diverges on \x0B-bearing
-#: text. Both engines now split on the identical byte set.
-_WS_RE2 = r"[ \t\n\x0B\f\r]+"
-
 _ESS_ORACLE = rf"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(text), '{_WS_RE2}'), x -> x <> '') AS t
+             list_filter(string_split_regex(trim(text), '{WS}'), x -> x <> '') AS t
       FROM documents
     ), base AS (
       SELECT doc_id, len(t) AS n_tokens, t FROM t WHERE len(t) >= 1
@@ -274,7 +269,7 @@ _CJK_ORACLE = rf"""
                AS n_cjk,
              len(list_filter(
                  string_split_regex(regexp_replace(text, '{_CJK_RE2}', ' ', 'g'),
-                                    '{_WS_RE2}'),
+                                    '{WS}'),
                  x -> x <> '')) AS n_ws
       FROM documents
     )
@@ -349,11 +344,11 @@ _GQC_ORACLE = rf"""
              length(lo) - length(regexp_replace(lo, '{_CJK_RE2}', '', 'g'))
                AS n_cjk,
              list_filter(string_split_regex(
-                 regexp_replace(lo, '{_CJK_RE2}', ' ', 'g'), '{_WS_RE2}'),
+                 regexp_replace(lo, '{_CJK_RE2}', ' ', 'g'), '{WS}'),
                  x -> x <> '') AS ws_toks,
              length(lo) - length(regexp_replace(lo, '[a-z]', '', 'g'))
                AS n_alpha,
-             length(regexp_replace(lo, '{_WS_RE2}', '', 'g')) AS n_nonspace
+             length(regexp_replace(lo, '{WS}', '', 'g')) AS n_nonspace
       FROM t
     ), s AS (
       SELECT doc_id, n_cjk, n_alpha, n_nonspace,

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
@@ -74,17 +75,13 @@ _DSIR_B = 4096        # hashed feature buckets (paper: 10k; fixture-sized here)
 _DSIR_TARGET = "en"   # target-domain predicate: lang = 'en'
 _DSIR_K = 64          # selection size for the top-k / resample entries
 
-#: ASCII whitespace pinned explicitly (the llm_ops8 convention): Java \s
-#: is [ \t\n\x0B\f\r]; RE2's \s omits \x0B, so the oracle spells the class.
-_WS_RE2 = r"[ \t\n\x0B\f\r]+"
-
 # Shared oracle CTE: per-doc (n_feats, logw_micro) for EVERY doc.
 # cp <= cq always (target is a subset of the pool), so lam <= 0 and the
 # floor(x + 0.5) half-up quantizer is applied identically on both sides.
 _DSIR_WEIGHTS_CTE = rf"""
     t AS (
       SELECT doc_id, lang,
-             list_filter(string_split_regex(lower(trim(text)), '{_WS_RE2}'),
+             list_filter(string_split_regex(lower(trim(text)), '{WS}'),
                          x -> x <> '') AS toks
       FROM documents
     ), f AS (
@@ -401,7 +398,7 @@ _DCN_ORACLE = rf"""
       SELECT doc_id,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
                % {_DCN_MOD} = 0 AS is_holdout,
-             list_filter(string_split_regex(trim(text), '{_WS_RE2}'),
+             list_filter(string_split_regex(trim(text), '{WS}'),
                          x -> x <> '') AS t
       FROM documents
     ), g AS (

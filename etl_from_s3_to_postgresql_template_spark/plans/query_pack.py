@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from etl_from_s3_to_postgresql_template_spark.plans.money import _davg, _dec, _dsum  # noqa: F401
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
+from etl_from_s3_to_postgresql_template_spark.streaming.ingest import tumbling_counts
 
 
 @query(
@@ -723,27 +724,18 @@ def agg_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "window_tumbling_events",
-    oracle="""
+#: shared with the streaming twin streaming_window_counts
+WINDOW_TUMBLING_ORACLE = """
     SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS w_start, event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(ROUND(SUM(CAST("value" AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_value
     FROM events
     GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@query("window_tumbling_events", oracle=WINDOW_TUMBLING_ORACLE)
 def window_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows (batch form; streaming/ingest.py
-    runs the identical plan as a Structured Streaming query)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _dsum(F.col("value")).alias("total_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+    runs the identical aggregation as a Structured Streaming query)."""
+    return tumbling_counts(load_table(spark, sf_dir, "events"), "1 hour")

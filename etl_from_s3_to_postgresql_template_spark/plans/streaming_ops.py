@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.plans.query_pack import WINDOW_TUMBLING_ORACLE
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.streaming.ingest import (
@@ -19,19 +20,46 @@ from etl_from_s3_to_postgresql_template_spark.streaming.ingest import (
     run_stateful_user_counts_stream,
     run_stream_stream_join,
     run_tumbling_counts_stream,
+    session_counts,
+    sliding_counts,
 )
 
-
-@query(
-    "streaming_window_counts",
-    oracle="""
-    SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS w_start, event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(ROUND(SUM(CAST("value" AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_value
-    FROM events
+#: one oracle per window family: the batch query and its streaming twin
+#: run the same aggregation (streaming/ingest.py), so they share it
+_SLIDING_ORACLE = """
+    SELECT strftime(time_bucket(INTERVAL '30 minutes', ts) - INTERVAL (i * 30) MINUTE,
+                    '%Y-%m-%d %H:%M:%S') AS w_start,
+           event_type,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM events CROSS JOIN (VALUES (0), (1)) AS offsets(i)
     GROUP BY 1, 2
-    """,
-)
+    """
+
+_SESSION_ORACLE = """
+    WITH s AS (
+      SELECT user_id, ts,
+             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                    OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                       >= INTERVAL '5 minutes'
+                  THEN 1 ELSE 0 END AS new_sess
+      FROM events
+    ),
+    g AS (
+      SELECT user_id, ts,
+             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
+                                 ROWS UNBOUNDED PRECEDING) AS sess_id
+      FROM s
+    )
+    SELECT user_id,
+           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
+           strftime(MAX(ts) + INTERVAL '5 minutes', '%Y-%m-%d %H:%M:%S.%f') AS session_end,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM g
+    GROUP BY user_id, sess_id
+    """
+
+
+@query("streaming_window_counts", oracle=WINDOW_TUMBLING_ORACLE)
 def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window counts via an actual streaming query (same oracle as
     the batch twin window_tumbling_events)."""
@@ -72,17 +100,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_stream_join(spark, sf_dir)
 
 
-@query(
-    "streaming_sliding_counts",
-    oracle="""
-    SELECT strftime(time_bucket(INTERVAL '30 minutes', ts) - INTERVAL (i * 30) MINUTE,
-                    '%Y-%m-%d %H:%M:%S') AS w_start,
-           event_type,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM events CROSS JOIN (VALUES (0), (1)) AS offsets(i)
-    GROUP BY 1, 2
-    """,
-)
+@query("streaming_sliding_counts", oracle=_SLIDING_ORACLE)
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows as a real streaming query; drained == batch twin
     window_sliding_events == DuckDB offset-enumerated oracle."""
@@ -121,73 +139,20 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "window_sliding_events",
-    oracle="""
-    SELECT strftime(time_bucket(INTERVAL '30 minutes', ts) - INTERVAL (i * 30) MINUTE,
-                    '%Y-%m-%d %H:%M:%S') AS w_start,
-           event_type,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM events CROSS JOIN (VALUES (0), (1)) AS offsets(i)
-    GROUP BY 1, 2
-    """,
-)
+@query("window_sliding_events", oracle=_SLIDING_ORACLE)
 def window_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1h window, 30m slide: every event lands in exactly two
     windows (the oracle enumerates both via the offset cross join)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
-            "event_type",
-            "n",
-        )
-    )
+    return sliding_counts(load_table(spark, sf_dir, "events"), "1 hour", "30 minutes")
 
 
-@query(
-    "window_session_events",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                    OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       >= INTERVAL '5 minutes'
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ),
-    g AS (
-      SELECT user_id, ts,
-             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                 ROWS UNBOUNDED PRECEDING) AS sess_id
-      FROM s
-    )
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-           strftime(MAX(ts) + INTERVAL '5 minutes', '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM g
-    GROUP BY user_id, sess_id
-    """,
-)
+@query("window_session_events", oracle=_SESSION_ORACLE)
 def window_session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows, 5-minute gap (batch session_window; the
     oracle is the classic gaps-and-islands formulation — a new session
     starts when the gap since the previous event reaches the timeout,
     matching Spark's last_ts + gap session end)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_end"),
-            "n",
-        )
-    )
+    return session_counts(load_table(spark, sf_dir, "events"), "5 minutes")
 
 
 @query(
@@ -210,31 +175,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_dedup_events_stream(spark, sf_dir)
 
 
-@query(
-    "streaming_session_windows",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                    OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       >= INTERVAL '5 minutes'
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ),
-    g AS (
-      SELECT user_id, ts,
-             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                 ROWS UNBOUNDED PRECEDING) AS sess_id
-      FROM s
-    )
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-           strftime(MAX(ts) + INTERVAL '5 minutes', '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM g
-    GROUP BY user_id, sess_id
-    """,
-)
+@query("streaming_session_windows", oracle=_SESSION_ORACLE)
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows as a REAL streaming query (state-store session
     merge), drained == batch session_window == the gaps-and-islands

@@ -224,6 +224,59 @@ def _run_to_memory(spark: SparkSession, agg: DataFrame, output_mode: str) -> Dat
     return spark.table(name)
 
 
+def tumbling_counts(ev: DataFrame, window: str) -> DataFrame:
+    """(w_start, event_type, n, total_value) per event-time tumbling
+    window — the one aggregation behind the batch query
+    window_tumbling_events and ``run_tumbling_counts_stream``."""
+    return (
+        ev.groupBy(F.window("ts", window).alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            # decimal accumulator: bit-identical across the batch and
+            # streaming runs and the DuckDB oracle regardless of
+            # per-batch summation order
+            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
+        )
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
+            "event_type",
+            "n",
+            "total_value",
+        )
+    )
+
+
+def sliding_counts(ev: DataFrame, window: str, slide: str) -> DataFrame:
+    """(w_start, event_type, n) per sliding event-time window — every
+    event lands in window/slide windows; behind window_sliding_events
+    and ``run_sliding_counts_stream``."""
+    return (
+        ev.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
+            "event_type",
+            "n",
+        )
+    )
+
+
+def session_counts(ev: DataFrame, gap: str) -> DataFrame:
+    """(user_id, session_start, session_end, n) per gap-based session
+    window — behind window_session_events and
+    ``run_session_windows_stream``."""
+    return (
+        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            "user_id",
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
+            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_end"),
+            "n",
+        )
+    )
+
+
 def run_tumbling_counts_stream(
     spark: SparkSession, sf_dir: str, window: str = "1 hour", watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -234,40 +287,15 @@ def run_tumbling_counts_stream(
     the max event time). The watermark still exercises late-data tracking.
     """
     ev = stream_events(spark, sf_dir).withWatermark("ts", watermark)
-    agg = (
-        ev.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal accumulator: bit-identical to the batch twin and the
-            # DuckDB oracle regardless of per-batch summation order
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-    return _run_to_memory(spark, agg, "complete")
+    return _run_to_memory(spark, tumbling_counts(ev, window), "complete")
 
 
 def run_sliding_counts_stream(
     spark: SparkSession, sf_dir: str, window: str = "1 hour", slide: str = "30 minutes"
 ) -> DataFrame:
-    """Sliding event-time windows as a streaming query (complete mode);
-    every event lands in window/slide windows."""
+    """Sliding event-time windows as a streaming query (complete mode)."""
     ev = stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
-            "event_type",
-            "n",
-        )
-    )
-    return _run_to_memory(spark, agg, "complete")
+    return _run_to_memory(spark, sliding_counts(ev, window, slide), "complete")
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str, lookback: str = "1 hour") -> DataFrame:
@@ -429,17 +457,7 @@ def run_session_windows_stream(
     operator). Complete mode emits the fully-merged sessions once input
     drains; update mode is unsupported for streaming session windows."""
     ev = stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_end"),
-            "n",
-        )
-    )
-    return _run_to_memory(spark, agg, "complete")
+    return _run_to_memory(spark, session_counts(ev, gap), "complete")
 
 
 def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,7 @@ Two comparison tiers per oracle-paired entry:
 Usage:
   python tools/check_correctness.py [sf_dir] [name ...]
   python tools/check_correctness.py --json OUT.json [sf_dir] [name ...]
+  python tools/check_correctness.py --diff PARENT.json CHANGE.json
 
 With --json, writes the machine-readable full-registry sweep artifact
 (VERDICT r6 item 2): one record per entry with rows/schema/value/hash
@@ -22,7 +23,9 @@ status plus the git commit stamp, so every round closes with an
 all-entries sweep on record (CORRECTNESS_local_r{N}.json at the repo root).
 Every record carries ``spark_hash``, the Spark side's value hash, rows-only
 entries included, so two sweeps (e.g. a parent and a change) can be diffed
-entry by entry.
+entry by entry: --diff prints every entry whose status (OK / ROWS /
+FAIL) or ``spark_hash`` differs between two such files, or that only
+one of them has, and exits 1 if there are any.
 """
 
 from __future__ import annotations
@@ -117,8 +120,37 @@ def first_cell_diff(sdf: pd.DataFrame, odf: pd.DataFrame) -> str:
     return "hashes differ but canonical rows compare equal (encoding?)"
 
 
+def _status(payload: dict, name: str) -> str:
+    if name in payload["failures"]:
+        return "FAIL"
+    return "ROWS" if payload["entries"][name].get("rows_only") else "OK"
+
+
+def diff(parent_json: str, change_json: str) -> int:
+    with open(parent_json) as f:
+        parent = json.load(f)
+    with open(change_json) as f:
+        change = json.load(f)
+    a, b = parent["entries"], change["entries"]
+    n_diff = 0
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            print(f"ONLY  {name}: {'parent' if name in a else 'change'}")
+            n_diff += 1
+            continue
+        sa, sb = _status(parent, name), _status(change, name)
+        ha, hb = a[name]["spark_hash"], b[name]["spark_hash"]
+        if sa != sb or ha != hb:
+            print(f"DIFF  {name}: status {sa} -> {sb}, spark_hash {ha} -> {hb}")
+            n_diff += 1
+    print(f"{len(a.keys() & b.keys())} common entries, {n_diff} differ")
+    return 1 if n_diff else 0
+
+
 def main() -> int:
     argv = sys.argv[1:]
+    if argv and argv[0] == "--diff":
+        return diff(argv[1], argv[2])
     json_out = None
     if argv and argv[0] == "--json":
         json_out = argv[1]
