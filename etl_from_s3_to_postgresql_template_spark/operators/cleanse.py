@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
 __all__ = [
+    "clean_name",
     "clean_column_names",
     "union_by_name",
     "dedup_exact",
@@ -50,11 +51,16 @@ DEFAULT_EPOCH_COLUMNS = (
 )
 
 
+def clean_name(name: str) -> str:
+    """P1: strip ``{`` ``}`` and surrounding whitespace from a column name
+    (reference ``etl_pipeline.py:381-386``)."""
+    return re.sub(r"[{}]", "", name).strip()
+
+
 def clean_column_names(df: DataFrame) -> DataFrame:
-    """P1: strip ``{`` ``}`` and surrounding whitespace from column names
-    (reference ``etl_pipeline.py:381-386``). Names are metadata — this is a
-    driver-side rename, zero data movement."""
-    return df.toDF(*[re.sub(r"[{}]", "", c).strip() for c in df.columns])
+    """P1 over every column. Names are metadata — this is a driver-side
+    rename, zero data movement."""
+    return df.toDF(*[clean_name(c) for c in df.columns])
 
 
 def union_by_name(dfs: list[DataFrame]) -> DataFrame:
@@ -121,9 +127,11 @@ def null_column_counts(df: DataFrame) -> dict[str, int]:
 def drop_all_null_columns(df: DataFrame) -> DataFrame:
     """P5: drop columns where every value is NULL (reference
     ``etl_pipeline.py:453-455,473-477``). Data-dependent → requires one
-    aggregation; the drop itself is plan-time column pruning."""
-    counts = null_column_counts(df)
-    empty = [c for c, n in counts.items() if n == 0]
+    aggregation, which also counts the rows: a frame with no rows keeps
+    every column (a header-only day would otherwise lose its metadata
+    columns too). The drop itself is plan-time column pruning."""
+    row = df.agg(F.count(F.lit(1)), *[F.count(F.col(c)) for c in df.columns]).first()
+    empty = [c for c, n in zip(df.columns, row[1:]) if n == 0] if row[0] else []
     return df.drop(*empty) if empty else df
 
 

@@ -5,7 +5,9 @@ Maps SURVEY §3 onto lazy plans:
 - :func:`process_day` = ``process_single_day`` (reference
   ``etl_pipeline.py:252-545``): LIST -> prune-by-filename-date -> per-group
   CSV scan -> clean names + provenance -> union-by-name -> epoch->ts ->
-  metadata -> drop-empty-cols -> dedup -> sink + audit row.
+  metadata -> drop-empty-cols -> dedup -> sink + audit row. The audit
+  row's count comes from the write itself (a ``DataFrame.observe`` metric
+  on the frame the sink writes), not from a second pass over the day.
 - :func:`process_range` = the day loop (``:716-722``).
 - :func:`analyze_dates` = ``--analyze-dates`` bucket profiling
   (``:599-657``).
@@ -28,20 +30,19 @@ scans), so the driver does no per-file I/O anywhere in process_day.
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
-import os
-import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_from_s3_to_postgresql_template_spark.functions.dates import PatternSpec
 from etl_from_s3_to_postgresql_template_spark.operators.cleanse import (
     DEFAULT_EPOCH_COLUMNS,
     add_metadata_columns,
     clean_column_names,
+    clean_name,
     dedup_exact,
     drop_all_null_columns,
     epoch_to_timestamp,
@@ -49,22 +50,14 @@ from etl_from_s3_to_postgresql_template_spark.operators.cleanse import (
 )
 from etl_from_s3_to_postgresql_template_spark.sinks.base import Sink
 from etl_from_s3_to_postgresql_template_spark.sources.csv_ingest import (
+    CSV_SUFFIXES,
     FileInfo,
+    file_listing_df,
     list_files,
     probe_headers,
     prune_paths_by_date,
+    read_csv_auto,
 )
-
-# Serializes audit appends across concurrent process_day calls in this
-# process. The per-day DATA writes are safe concurrently (each day's
-# dynamic-partition overwrite stages under its own .spark-staging dir; JDBC
-# appends are row inserts), but append-mode writes to ONE audit path share a
-# single FileOutputCommitter `_temporary` dir, so a job commit can delete a
-# concurrent job's staged files — intermittent lost audit rows. A lock is
-# correct here because process_range's parallelism is thread-pool-in-one-
-# process by construction; cross-process backfills must target different
-# lake paths or sequence themselves.
-_AUDIT_LOCK = threading.Lock()
 
 
 class NoReadableFilesError(ValueError):
@@ -80,9 +73,6 @@ class NoReadableFilesError(ValueError):
 class PipelineConfig:
     source_dir: str
     epoch_columns: tuple[str, ...] = DEFAULT_EPOCH_COLUMNS
-    patterns: tuple[PatternSpec, ...] | None = None
-    drop_duplicates: bool = True
-    drop_empty_columns: bool = True
     table_name: str = "table_name"
     # "skip": unreadable files are dropped with a warning and counted out of
     # files_processed (reference behavior, etl_pipeline.py:404-406);
@@ -111,65 +101,50 @@ class DayResult:
         return self.files_processed > 0
 
 
+def _project_schema(schema: T.StructType, header: str) -> T.StructType:
+    """The explicit schema laid onto one header group, POSITIONALLY: one
+    output field per header column, always — dropping a field would shift
+    every later column's data into the wrong name. Header names are parsed
+    as CSV (a quoted name may hold a comma). Types come from the schema,
+    matched on the cleaned name; columns the schema doesn't know load as
+    strings."""
+    types = {clean_name(f.name): f.dataType for f in schema.fields}
+    names = [clean_name(c) for c in next(csv.reader([header]))]
+    return T.StructType([T.StructField(c, types.get(c, T.StringType())) for c in names])
+
+
 def ingest_day_plan(
     spark: SparkSession, config: PipelineConfig, files: list[FileInfo], day: str
 ) -> tuple[DataFrame, list[FileInfo]]:
     """Build the lazy merged-day plan (stages 5-8) for pruned ``files``.
     Returns (plan, skipped_files)."""
-    import re as _re
-
-    dfs = []
     groups, skipped = probe_headers(spark, files, config.on_error)
     if not groups:
         raise NoReadableFilesError(day, skipped)
-    n_files_read = 0
-    for header, group in groups:
-        reader = spark.read.option("header", "true")
-        if config.schema is not None:
-            # Project the explicit schema onto this group's header,
-            # POSITIONALLY: one output field per header column, always —
-            # dropping a field would shift every later column's data into
-            # the wrong name. Types come from the schema, matched on the
-            # raw name or its cleaned form (brace-stripped, trimmed);
-            # columns the schema doesn't know load as strings under their
-            # raw name and flow through name-cleaning like inferred ones.
-            by_name = {f.name: f for f in config.schema.fields}
-            by_clean = {_re.sub(r"[{}]", "", f.name).strip(): f for f in config.schema.fields}
-            fields = []
-            for c in header.split(","):
-                cleaned = _re.sub(r"[{}]", "", c).strip()
-                src = by_name.get(c) or by_name.get(c.strip()) or by_clean.get(cleaned)
-                fields.append(
-                    T.StructField(c.strip(), src.dataType if src else T.StringType())
-                )
-            reader = reader.schema(T.StructType(fields))
-        else:
-            reader = reader.option("inferSchema", "true")
-        df = reader.csv([fi.path for fi in group])
-        n_files_read += len(group)
-        df = clean_column_names(df)
-        # P2 provenance: basename of the originating file, per row.
-        df = df.withColumn(
-            "source_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
+    dfs = [
+        clean_column_names(
+            read_csv_auto(
+                spark,
+                [fi.path for fi in group],
+                schema=None if config.schema is None else _project_schema(config.schema, header),
+            )
         )
-        dfs.append(df)
-    merged = union_by_name(dfs)
-    merged = epoch_to_timestamp(merged, config.epoch_columns)
+        for header, group in groups
+    ]
+    merged = epoch_to_timestamp(union_by_name(dfs), config.epoch_columns)
     # files_merged counts FILES (reference: len(merged_dataframes), one df
     # per file), not header groups.
-    merged = add_metadata_columns(merged, day, files_merged=n_files_read)
-    return merged, skipped
+    n_files_read = sum(len(group) for _, group in groups)
+    return add_metadata_columns(merged, day, files_merged=n_files_read), skipped
 
 
-def process_day(
-    spark: SparkSession, config: PipelineConfig, day: str, sink: Sink | None = None
-) -> DayResult:
-    """Run one day end-to-end. Returns the audit-shaped result; writes data
-    + audit row to ``sink`` when given."""
+def process_day(spark: SparkSession, config: PipelineConfig, day: str, sink: Sink) -> DayResult:
+    """Run one day end-to-end: write the data and one audit row to ``sink``
+    and return the audit-shaped result. ``total_rows`` is observed on the
+    write itself, so the day's data is read once after the null-column
+    check."""
     all_files = [
-        f
-        for f in list_files(config.source_dir, spark=spark)
-        if f.path.endswith((".csv", ".csv.gz"))
+        f for f in list_files(config.source_dir, spark=spark) if f.path.endswith(CSV_SUFFIXES)
     ]
     matching = prune_paths_by_date(spark, all_files, day)
     if not matching:
@@ -182,50 +157,35 @@ def process_day(
         # (ok=False, reference returns False at etl_pipeline.py:411) but
         # the range keeps going — one rotten day must not kill a backfill.
         if config.on_error == "skip":
-            return DayResult(
-                day,
-                len(matching),
-                0,
-                0,
-                0,
-                [],
-                [os.path.basename(f.path) for f in e.skipped],
-            )
+            return DayResult(day, len(matching), 0, 0, 0, [], [f.name for f in e.skipped])
         raise
-    skipped_names = [os.path.basename(f.path) for f in skipped]
-    processed = [f for f in matching if os.path.basename(f.path) not in set(skipped_names)]
-    if config.drop_empty_columns:
-        merged = drop_all_null_columns(merged)  # one aggregate pass
-    if config.drop_duplicates:
-        merged = dedup_exact(merged)
+    skipped_set = set(skipped)
+    processed = [f for f in matching if f not in skipped_set]
+    merged = dedup_exact(drop_all_null_columns(merged))  # one aggregate pass
 
-    if sink is not None:
-        sink.write_day(merged, day)
-        # Post-write counts come from the sink-side frame: one extra count
-        # job instead of the reference's double duplicate scan.
-        total_rows = merged.count()
-        audit = spark.createDataFrame(
-            [
-                (
-                    dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-                    dt.datetime.fromisoformat(day),
-                    len(processed),
-                    len(processed),
-                    config.table_name,
-                    total_rows,
-                    len(merged.columns),
-                    ", ".join(os.path.basename(f.path) for f in processed),
-                )
-            ],
-            "date_processed timestamp, date_of_data timestamp, files_processed int, "
-            "files_merged int, table_name string, total_row_count long, "
-            "column_count int, source_files string",
-        )
-        with _AUDIT_LOCK:
-            sink.write_audit(audit)
-    else:
-        total_rows = merged.count()
-
+    obs = Observation()
+    sink.write_day(merged.observe(obs, F.count(F.lit(1)).alias("rows")), day)
+    # Blocks until the listener bus delivers the metric, which can land
+    # just after the write returns.
+    total_rows = obs.get["rows"]
+    audit = spark.createDataFrame(
+        [
+            (
+                dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+                dt.datetime.fromisoformat(day),
+                len(processed),
+                len(processed),
+                config.table_name,
+                total_rows,
+                len(merged.columns),
+                ", ".join(f.name for f in processed),
+            )
+        ],
+        "date_processed timestamp, date_of_data timestamp, files_processed int, "
+        "files_merged int, table_name string, total_row_count long, "
+        "column_count int, source_files string",
+    )
+    sink.write_audit(audit)
     return DayResult(
         day,
         len(matching),
@@ -233,50 +193,23 @@ def process_day(
         total_rows,
         len(merged.columns),
         merged.columns,
-        skipped_names,
+        [f.name for f in skipped],
     )
 
 
 def process_range(
-    spark: SparkSession,
-    config: PipelineConfig,
-    start_day: str,
-    end_day: str,
-    sink: Sink | None = None,
-    max_parallel_days: int = 1,
+    spark: SparkSession, config: PipelineConfig, start_day: str, end_day: str, sink: Sink
 ) -> list[DayResult]:
-    """The reference's day loop (etl_pipeline.py:716-722). Sequential by
-    default for audit parity; ``max_parallel_days > 1`` submits days
-    concurrently from a thread pool — days are independent (separate input
-    file sets, separate `dt=` partitions, separate audit rows), and Spark's
-    scheduler interleaves their jobs, so a backfill of months doesn't
-    serialize on per-day fixed costs. Results return in day order either
-    way. Keep ``max_parallel_days`` modest for JDBC sinks (each day holds
-    ``num_partitions`` connections)."""
+    """The reference's day loop (etl_pipeline.py:716-722): one day after
+    another, in day order."""
     start = dt.date.fromisoformat(start_day)
     end = dt.date.fromisoformat(end_day)
     if start > end:
         raise ValueError(f"start {start_day} after end {end_day}")
-    days = []
-    d = start
-    while d <= end:
-        days.append(d.isoformat())
-        d += dt.timedelta(days=1)
-    if max_parallel_days <= 1:
-        return [process_day(spark, config, day, sink) for day in days]
-    from concurrent.futures import ThreadPoolExecutor
-
-    # First day runs alone: SaveMode.Append auto-creates the data and audit
-    # tables on first touch, and two concurrent first-writers can race that
-    # CREATE (JDBC has no create-if-absent handshake). Once the tables
-    # exist, appends are safe to interleave (audit serialized by
-    # _AUDIT_LOCK above).
-    head = [process_day(spark, config, days[0], sink)]
-    rest = days[1:]
-    if not rest:
-        return head
-    with ThreadPoolExecutor(max_workers=max_parallel_days) as pool:
-        return head + list(pool.map(lambda day: process_day(spark, config, day, sink), rest))
+    return [
+        process_day(spark, config, (start + dt.timedelta(days=i)).isoformat(), sink)
+        for i in range((end - start).days + 1)
+    ]
 
 
 def recent_runs(spark: SparkSession, lake_path: str, n: int = 10) -> DataFrame:
@@ -297,10 +230,7 @@ def analyze_dates(spark: SparkSession, config: PipelineConfig) -> DataFrame:
     """Bucket profiling (reference --analyze-dates, etl_pipeline.py:599-657):
     per-extracted-date file counts plus listing metadata, as one DataFrame —
     the A4/A5/A6 aggregations compose on top of it."""
-    from etl_from_s3_to_postgresql_template_spark.sources.csv_ingest import file_listing_df
-
-    files = list_files(config.source_dir, spark=spark)
-    listing = file_listing_df(spark, files, list(config.patterns) if config.patterns else None)
+    listing = file_listing_df(spark, list_files(config.source_dir, spark=spark))
     return (
         listing.groupBy("src_date")
         .agg(

@@ -129,14 +129,16 @@ def project_source_file(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 class _CaptureSink:
     """Sink protocol implementation that keeps the audit frame instead
-    of writing it — the day write is a no-op (the data path is already
+    of writing it. The day write runs the frame into Spark's ``noop``
+    format: the audit row's count comes from the write itself, so the
+    frame must execute, but nothing lands (the data path is already
     e2e-tested against parquet and embedded-Derby JDBC sinks)."""
 
     def __init__(self) -> None:
         self.audit: DataFrame | None = None
 
     def write_day(self, df: DataFrame, day: str) -> None:  # noqa: ARG002
-        pass
+        df.write.format("noop").mode("overwrite").save()
 
     def write_audit(self, audit_df: DataFrame) -> None:
         self.audit = audit_df

@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame
 
 
 class Sink(Protocol):
+    """``write_day`` must execute the frame it is given: the pipeline reads
+    the day's row count from a metric observed on that frame's write."""
+
     def write_day(self, df: DataFrame, day: str) -> None: ...
     def write_audit(self, audit_df: DataFrame) -> None: ...
 

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_from_s3_to_postgresql_template_spark.functions.dates import PatternSpec, extract_date_str_col
+from etl_from_s3_to_postgresql_template_spark.functions.dates import extract_date_str_col
 
 __all__ = [
     "FileInfo",
@@ -215,11 +215,7 @@ def read_csv_auto(
     return df
 
 
-def file_listing_df(
-    spark: SparkSession,
-    files: list[FileInfo],
-    patterns: list[PatternSpec] | None = None,
-) -> DataFrame:
+def file_listing_df(spark: SparkSession, files: list[FileInfo]) -> DataFrame:
     """Listing as a DataFrame with extracted ``src_date`` — the input to the
     bucket-profiling aggregations (analyze_dates, SURVEY §3.2)."""
     schema = T.StructType(
@@ -232,4 +228,4 @@ def file_listing_df(
     )
     rows = [Row(path=f.path, filename=f.name, last_modified=f.mtime, size=f.size) for f in files]
     df = spark.createDataFrame(rows, schema=schema)
-    return df.withColumn("src_date", extract_date_str_col("filename", patterns))
+    return df.withColumn("src_date", extract_date_str_col("filename"))

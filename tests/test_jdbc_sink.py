@@ -132,10 +132,10 @@ def test_streaming_foreachbatch_to_jdbc(spark, derby_url, tmp_path):
     assert back.count() == n_src
 
 
-def test_parallel_range_to_jdbc_no_create_race(spark, derby_url, tmp_path):
-    """process_range(max_parallel_days>1) into JDBC: the first day runs
-    alone (settles SaveMode.Append table auto-creation), the rest append
-    concurrently; audit rows land one-per-day with no lost appends."""
+def test_range_to_jdbc_one_audit_row_per_day(spark, derby_url, tmp_path):
+    """process_range into JDBC: the first day creates the data and audit
+    tables (SaveMode.Append), later days append; audit rows land one per
+    day."""
     from etl_from_s3_to_postgresql_template_spark.pipeline import process_range
 
     d = tmp_path / "src"
@@ -145,8 +145,7 @@ def test_parallel_range_to_jdbc_no_create_race(spark, derby_url, tmp_path):
 
     sink = JdbcSink(url=derby_url, table_name="merged_par", audit_table="audit_par")
     results = process_range(
-        spark, PipelineConfig(source_dir=str(d)), "2025-02-01", "2025-02-06", sink,
-        max_parallel_days=3,
+        spark, PipelineConfig(source_dir=str(d)), "2025-02-01", "2025-02-06", sink
     )
     assert [r.ok for r in results] == [True] * 6
     assert _read_table(spark, derby_url, "merged_par").count() == 12
@@ -154,3 +153,21 @@ def test_parallel_range_to_jdbc_no_create_race(spark, derby_url, tmp_path):
     assert audit.count() == 6  # exactly one audit row per day, none lost
     days = sorted(str(r["date_of_data"])[:10] for r in audit.collect())
     assert days == [f"2025-02-0{i}" for i in range(1, 7)]
+
+
+def test_header_only_day_to_jdbc(spark, derby_url, tmp_path):
+    """A header-only day into JDBC: the table is created with the header
+    and metadata columns, 0 rows load and the audit row says 0."""
+    d = tmp_path / "src"
+    d.mkdir()
+    (d / "a_2025-02-03.csv").write_text("id,amount\n")
+    (d / "b_2025-02-03.csv").write_text("id,amount\n")
+    sink = JdbcSink(url=derby_url, table_name="empty_day", audit_table="empty_audit")
+    res = process_day(spark, PipelineConfig(source_dir=str(d)), "2025-02-03", sink)
+    assert res.ok and res.total_rows == 0
+    back = _read_table(spark, derby_url, "empty_day")
+    assert back.count() == 0
+    cols = {c.lower() for c in back.columns}
+    assert {"id", "amount", "source_file", "processed_date", "source_date", "files_merged_count"} <= cols
+    audit = _read_table(spark, derby_url, "empty_audit").collect()
+    assert len(audit) == 1 and audit[0]["total_row_count"] == 0

@@ -6,6 +6,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.sinks import ParquetSink
+
 
 def test_explicit_schema_clean_name_match_no_misalignment(spark, tmp_path):
     """Schema with CLEAN names against a brace-dirty header must not shift
@@ -29,8 +31,9 @@ def test_explicit_schema_clean_name_match_no_misalignment(spark, tmp_path):
     )
     res = process_day(
         spark,
-        PipelineConfig(source_dir=str(d), schema=schema, drop_empty_columns=False),
+        PipelineConfig(source_dir=str(d), schema=schema),
         "2025-02-03",
+        ParquetSink(str(tmp_path / "lake")),
     )
     assert res.total_rows == 1
     assert {"id", "amount", "region", "mystery"} <= set(res.columns)
@@ -44,7 +47,9 @@ def test_files_merged_count_counts_files_not_groups(spark, tmp_path):
     # two files with the SAME header -> one group, two files
     (d / "a_2025-02-03.csv").write_text("id,v\n1,10\n")
     (d / "b_2025-02-03.csv").write_text("id,v\n2,20\n")
-    res = process_day(spark, PipelineConfig(source_dir=str(d)), "2025-02-03")
+    res = process_day(
+        spark, PipelineConfig(source_dir=str(d)), "2025-02-03", ParquetSink(str(tmp_path / "lake"))
+    )
     assert res.total_rows == 2
     # every data row must carry files_merged_count == 2 (files, not groups)
     # re-run capturing the plan output
