@@ -23,9 +23,12 @@ Schema drift: the reference reads each file with its own inferred schema and
 lets ``pd.concat`` align names. Per-file reads don't scale to millions of
 files, so files are grouped by their *header line* and each group is read as
 one distributed scan; groups then ``unionByName`` with null-fill. One group
-== one schema == exact reference semantics at any file count. Header probing
-runs on EXECUTORS (sources/csv_ingest.probe_headers: concurrent limit-1 text
-scans), so the driver does no per-file I/O anywhere in process_day.
+== one schema == exact reference semantics at any file count.
+
+The day's metadata stays on the driver and runs no Spark job: pruning is a
+filter on the Arrow-built listing frame (sources/csv_ingest.file_listing_df),
+the header probe reads each file's first line through the Hadoop FileSystem
+API, and the audit row is built from an Arrow table.
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ import csv
 import datetime as dt
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -169,18 +173,18 @@ def process_day(spark: SparkSession, config: PipelineConfig, day: str, sink: Sin
     # just after the write returns.
     total_rows = obs.get["rows"]
     audit = spark.createDataFrame(
-        [
-            (
-                dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-                dt.datetime.fromisoformat(day),
-                len(processed),
-                len(processed),
-                config.table_name,
-                total_rows,
-                len(merged.columns),
-                ", ".join(f.name for f in processed),
-            )
-        ],
+        pa.table(
+            {
+                "date_processed": [dt.datetime.now(dt.timezone.utc)],
+                "date_of_data": [dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc)],
+                "files_processed": [len(processed)],
+                "files_merged": [len(processed)],
+                "table_name": [config.table_name],
+                "total_row_count": [total_rows],
+                "column_count": [len(merged.columns)],
+                "source_files": [", ".join(f.name for f in processed)],
+            }
+        ),
         "date_processed timestamp, date_of_data timestamp, files_processed int, "
         "files_merged int, table_name string, total_row_count long, "
         "column_count int, source_files string",

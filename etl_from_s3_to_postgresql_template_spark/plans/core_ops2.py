@@ -14,7 +14,7 @@ from the ``nation`` table. Timestamp columns are projected OUT of the
 K3 entry (the driver compares values; 'now' can't be oracle'd).
 
 - ``project_source_file`` exercises the REAL P2 code path
-  (sources/csv_ingest.py::read_csv_auto with ``with_source_file=True``,
+  (sources/csv_ingest.py::read_csv_auto, which adds ``source_file``;
   reference ``etl_pipeline.py:388-389``).
 - ``audit_log_row`` runs the REAL pipeline end-to-end
   (pipeline.process_day with a capture sink) and returns the audit row
@@ -119,11 +119,7 @@ def project_source_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = _fixture_dir(spark, sf_dir)
-    df = read_csv_auto(
-        spark,
-        [os.path.join(root, _EVEN), os.path.join(root, _ODD)],
-        with_source_file=True,
-    )
+    df = read_csv_auto(spark, [os.path.join(root, _EVEN), os.path.join(root, _ODD)])
     return df.select("n_nationkey", "n_name", "source_file").orderBy("n_nationkey")
 
 

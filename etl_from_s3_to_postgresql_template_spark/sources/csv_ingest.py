@@ -36,7 +36,8 @@ import os
 from collections import defaultdict
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,117 +116,104 @@ def _list_files_hadoop(spark: SparkSession, root: str, pattern: str) -> list[Fil
     return sorted(out, key=lambda f: f.path)
 
 
-def _extract_date_driver(spark: SparkSession, names: list[str]) -> list[str | None]:
-    """Run the pattern cascade over a (small) list of filenames.
-
-    Uses the exact same Column expressions as the in-plan path so driver-side
-    pruning and in-plan filtering can never disagree. A listing is metadata
-    (thousands to millions of rows, not billions), so one local job is fine.
-    """
-    if not names:
-        return []
-    df = spark.createDataFrame([Row(fn=n) for n in names])
-    rows = df.select(extract_date_str_col("fn").alias("d")).collect()
-    return [r["d"] for r in rows]
-
-
 def prune_paths_by_date(
     spark: SparkSession, files: list[FileInfo], day: str
 ) -> list[FileInfo]:
-    """Prune-before-read (S6/F1): keep files whose filename date == day."""
-    dates = _extract_date_driver(spark, [f.name for f in files])
-    return [f for f, d in zip(files, dates) if d == day]
+    """Prune-before-read (S6/F1): keep files whose filename date == day.
+
+    A filter on :func:`file_listing_df`, so pruning and the in-plan date
+    extraction use the same Column expression and can never disagree. The
+    listing frame is a local relation: Spark evaluates the filter on the
+    driver and the ``collect`` runs no job."""
+    kept = {
+        r["path"]
+        for r in file_listing_df(spark, files).where(F.col("src_date") == day).select("path").collect()
+    }
+    return [f for f in files if f.path in kept]
 
 
 def probe_headers(
     spark: SparkSession, files: list[FileInfo], on_error: str = "fail"
 ) -> tuple[list[tuple[str, list[FileInfo]]], list[FileInfo]]:
-    """Group files by their header line, reading headers on EXECUTORS.
+    """Group files by their header line, read on the driver through the
+    Hadoop FileSystem API (the one ``_list_files_hadoop`` uses), so every
+    scheme Spark can read works here too and no Spark job runs.
 
-    Each file's first line comes from a ``spark.read.text(path).head(1)``
-    job: LocalLimit(1) short-circuits the scan after the first row of the
-    first split, so only the leading block of each file moves — never the
-    file. Jobs are submitted concurrently from a thread pool (Spark's
-    scheduler interleaves them), so wall-clock is O(files / parallelism)
-    with zero driver file I/O and zero driver GET requests — the reference
-    opened every object on the driver (and a driver-side loop is the one
-    thing that cannot scale past ~10^5 objects).
+    Each file is opened, wrapped in the codec its extension names (``.gz``,
+    as Spark's text source does), and only its first line is read with
+    Hadoop's ``LineReader`` (LF, CR or CRLF, the splitter Spark uses). The
+    line decodes as strict UTF-8 with a leading BOM dropped, as Spark drops
+    it; undecodable bytes raise, as the reference's strict-utf-8 open did
+    (``etl_pipeline.py:368-374``). An empty file has header ``""``.
 
     ``on_error='skip'``: unreadable files (bad gzip, encoding, truncation)
     are returned separately instead of failing the day — the reference's
     skip-and-continue (``etl_pipeline.py:404-406``), but *counted*, not
     silent. Returns ([(header, files)], skipped).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    def head(fi: FileInfo) -> str:
-        rows = spark.read.text(fi.path).head(1)
-        header = rows[0]["value"] if rows else ""
-        if "�" in header:
-            # text source replaces undecodable bytes instead of raising; a
-            # replacement char in a supposed CSV header = corrupt input.
-            # Applies to plain .csv too — the reference opened every file
-            # with strict utf-8 (etl_pipeline.py:368-374), so undecodable
-            # plain CSVs failed there as well; grouping them under a
-            # mojibake header would silently load garbage columns.
-            raise ValueError(f"undecodable header in {fi.path}")
-        return header
-
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(hconf)
     groups: dict[str, list[FileInfo]] = defaultdict(list)
     skipped: list[FileInfo] = []
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        for fi, res in zip(files, pool.map(lambda f: _try(head, f), files)):
-            if isinstance(res, Exception):
-                if on_error != "skip":
-                    raise res
-                skipped.append(fi)
-            else:
-                groups[res].append(fi)
+    for fi in files:
+        try:
+            header = _first_line(jvm, hconf, codecs, fi.path)
+        except Exception:  # noqa: BLE001 — per-file fault isolation
+            if on_error != "skip":
+                raise
+            skipped.append(fi)
+        else:
+            groups[header].append(fi)
     return list(groups.items()), skipped
 
 
-def _try(fn, *args):
+def _first_line(jvm, hconf, codecs, path: str) -> str:
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    stream = hpath.getFileSystem(hconf).open(hpath)
     try:
-        return fn(*args)
-    except Exception as e:  # noqa: BLE001 — per-file fault isolation
-        return e
+        codec = codecs.getCodec(hpath)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        line = jvm.org.apache.hadoop.io.Text()
+        jvm.org.apache.hadoop.util.LineReader(stream).readLine(line)
+        raw = line.copyBytes()
+    finally:
+        stream.close()
+    try:
+        return raw.decode("utf-8-sig")
+    except UnicodeDecodeError as e:
+        raise ValueError(f"undecodable header in {path}") from e
 
 
 def read_csv_auto(
-    spark: SparkSession,
-    paths: list[str],
-    schema: T.StructType | None = None,
-    with_source_file: bool = True,
+    spark: SparkSession, paths: list[str], schema: T.StructType | None = None
 ) -> DataFrame:
     """Scan CSV/CSV.gz (S3/S4/S5) with header; inferred or explicit schema.
-
-    ``with_source_file`` adds the provenance column (P2) from
+    Adds the provenance column (P2) ``source_file`` from
     ``input_file_name()`` — basename only, matching the reference
     (``etl_pipeline.py:388-389``).
     """
-    paths = [p for p in paths if p.endswith(CSV_SUFFIXES)]  # S5 format dispatch
     reader = spark.read.option("header", "true")
     if schema is None:
         reader = reader.option("inferSchema", "true")
     else:
         reader = reader.schema(schema)
     df = reader.csv(paths)
-    if with_source_file:
-        df = df.withColumn("source_file", F.element_at(F.split(F.input_file_name(), "/"), -1))
-    return df
+    return df.withColumn("source_file", F.element_at(F.split(F.input_file_name(), "/"), -1))
 
 
 def file_listing_df(spark: SparkSession, files: list[FileInfo]) -> DataFrame:
-    """Listing as a DataFrame with extracted ``src_date`` — the input to the
-    bucket-profiling aggregations (analyze_dates, SURVEY §3.2)."""
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("filename", T.StringType()),
-            T.StructField("last_modified", T.TimestampType()),
-            T.StructField("size", T.LongType()),
-        ]
+    """Listing as a DataFrame with extracted ``src_date`` — the input to
+    filename-date pruning and the bucket-profiling aggregations
+    (analyze_dates, SURVEY §3.2). Built from an Arrow table, so the frame is
+    a local relation on the driver."""
+    table = pa.table(
+        {
+            "path": pa.array([f.path for f in files], pa.string()),
+            "filename": pa.array([f.name for f in files], pa.string()),
+            "last_modified": pa.array([f.mtime for f in files], pa.timestamp("us", tz="UTC")),
+            "size": pa.array([f.size for f in files], pa.int64()),
+        }
     )
-    rows = [Row(path=f.path, filename=f.name, last_modified=f.mtime, size=f.size) for f in files]
-    df = spark.createDataFrame(rows, schema=schema)
-    return df.withColumn("src_date", extract_date_str_col("filename"))
+    return spark.createDataFrame(table).withColumn("src_date", extract_date_str_col("filename"))

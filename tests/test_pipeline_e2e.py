@@ -387,3 +387,59 @@ def test_process_day_runs_no_job_between_write_and_audit(spark, source_dir, tmp_
     assert res.total_rows == 5
     assert len(marks) == 2 and marks[0] > 0
     assert marks[1] == marks[0], marks
+
+
+def test_audit_dates_ignore_driver_local_time_zone(spark, source_dir, tmp_path, monkeypatch):
+    """The audit row's timestamps are UTC whatever the driver process's
+    local time zone: 2025-02-03 is stored as midnight, not shifted by the
+    zone's offset."""
+    import datetime as dt
+    import time
+
+    lake = str(tmp_path / "lake")
+    try:
+        monkeypatch.setenv("TZ", "America/New_York")
+        time.tzset()
+        process_day(spark, PipelineConfig(source_dir=source_dir), "2025-02-03", ParquetSink(lake))
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    row = (
+        spark.read.parquet(f"{lake}/data_processing_log")
+        .selectExpr("cast(date_of_data as string) AS d", "cast(date_processed as string) AS p")
+        .first()
+    )
+    assert row["d"] == "2025-02-03 00:00:00"
+    processed = dt.datetime.fromisoformat(row["p"]).replace(tzinfo=dt.timezone.utc)
+    assert abs(dt.datetime.now(dt.timezone.utc) - processed) < dt.timedelta(minutes=30)
+
+
+def test_metadata_phase_runs_no_spark_job(spark, source_dir):
+    """Pruning by filename date and probing headers are driver work: no
+    Spark job runs for either."""
+    from etl_from_s3_to_postgresql_template_spark.sources.csv_ingest import (
+        list_files,
+        probe_headers,
+        prune_paths_by_date,
+    )
+
+    sc = spark.sparkContext
+    group = "metadata-phase-probe"
+    sc.setJobGroup(group, "metadata phase")
+    try:
+        files = prune_paths_by_date(spark, list_files(source_dir), "2025-02-03")
+        groups, skipped = probe_headers(spark, files)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(f.name for f in files) == [
+        "data_2025-02-03T030000_export.csv.gz",
+        "logs_2025_02_03.csv",
+        "sales_2025-02-03.csv",
+    ]
+    assert {h: [f.name for f in fs] for h, fs in groups} == {
+        "id,{amount},region,date_time_column1": ["sales_2025-02-03.csv"],
+        "id,amount,note,unused": ["data_2025-02-03T030000_export.csv.gz"],
+        "id,region": ["logs_2025_02_03.csv"],
+    }
+    assert skipped == []
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

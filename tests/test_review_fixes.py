@@ -158,9 +158,12 @@ def test_list_files_hadoop_file_scheme(spark, tmp_path):
         list_files(f"file://{d}")
 
 
-def test_probe_headers_runs_on_executors(spark, tmp_path):
-    """Distributed header probe: groups by header line, including .gz, with
-    zero driver file I/O; unreadable files skip-and-count."""
+def test_probe_headers_groups_by_first_line(spark, tmp_path):
+    """Header probe: groups by the first line, including .gz; a UTF-8 BOM is
+    dropped and CRLF ends the line, as in Spark's text source; an empty
+    file forms the "" group; a header that is valid UTF-8 holding U+FFFD is
+    accepted (strict UTF-8, as the reference opened files); unreadable files
+    skip-and-count."""
     import gzip
 
     from etl_from_s3_to_postgresql_template_spark.sources.csv_ingest import (
@@ -175,14 +178,24 @@ def test_probe_headers_runs_on_executors(spark, tmp_path):
     with gzip.open(d / "z_2025-02-03.csv.gz", "wt") as f:
         f.write("id,b\n5,6\n")
     (d / "bad_2025-02-03.csv.gz").write_bytes(b"not gzip")
+    (d / "bom_2025-02-03.csv").write_bytes(b"\xef\xbb\xbfid,a\n7,8\n")
+    (d / "crlf_2025-02-03.csv").write_bytes(b"id,a\r\n9,10\r\n")
+    (d / "empty_2025-02-03.csv").write_bytes(b"")
+    (d / "fffd_2025-02-03.csv").write_bytes("id,\ufffd\n1,2\n".encode("utf-8"))
 
     files = list_files(str(d))
     groups, skipped = probe_headers(spark, files, on_error="skip")
     got = {h: sorted(f.name for f in fs) for h, fs in groups}
     assert got == {
-        "id,a": ["x_2025-02-03.csv", "y_2025-02-03.csv"],
+        "id,a": ["bom_2025-02-03.csv", "crlf_2025-02-03.csv", "x_2025-02-03.csv", "y_2025-02-03.csv"],
         "id,b": ["z_2025-02-03.csv.gz"],
+        "": ["empty_2025-02-03.csv"],
+        "id,\ufffd": ["fffd_2025-02-03.csv"],
     }
+    assert [f.name for f in skipped] == ["bad_2025-02-03.csv.gz"]
+    # scheme-qualified paths (the Hadoop listing branch) probe the same
+    groups, skipped = probe_headers(spark, list_files(f"file://{d}", spark=spark), on_error="skip")
+    assert {h: sorted(f.name for f in fs) for h, fs in groups} == got
     assert [f.name for f in skipped] == ["bad_2025-02-03.csv.gz"]
 
 
