@@ -2,8 +2,9 @@
 
 Maps SURVEY.md §2.3/2.6/2.7 (reference ``etl_pipeline.py:348-483``) onto lazy
 DataFrame ops. Everything here is a plan fragment — nothing materializes
-until the caller acts — with two deliberate exceptions (``null_column_counts``
-and ``duplicate_count``) which ARE aggregations and say so.
+until the caller acts — except the three functions that need a data pass and
+say so: ``null_column_counts`` and ``duplicate_count`` return aggregates, and
+``drop_all_null_columns`` runs one aggregate to choose the columns it drops.
 
 Scale notes:
 
@@ -21,9 +22,11 @@ Scale notes:
 
 from __future__ import annotations
 
+import datetime as dt
 import functools
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
@@ -109,12 +112,27 @@ def epoch_to_timestamp(df: DataFrame, columns: tuple[str, ...] = DEFAULT_EPOCH_C
 
 
 def add_metadata_columns(df: DataFrame, source_date: str, files_merged: int) -> DataFrame:
-    """P4: audit metadata literals (reference ``etl_pipeline.py:443-446``)."""
-    return (
-        df.withColumn("processed_date", F.current_timestamp())
-        .withColumn("source_date", F.to_timestamp(F.lit(source_date)))
-        .withColumn("files_merged_count", F.lit(files_merged))
+    """P4: audit metadata columns (reference ``etl_pipeline.py:443-446``):
+    ``processed_date`` (the driver's UTC clock at this call), ``source_date``
+    (UTC midnight of ``source_date``) and ``files_merged_count``, appended
+    last.
+
+    The values come from a one-row Arrow frame joined in by broadcast, not
+    from literals: Spark inlines timestamp and int literals into its
+    generated code, so a literal that changes per run or per day would make
+    every stage it reaches compile anew. Through the join, every day's plan
+    compiles to the same code."""
+    meta = df.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "processed_date": [dt.datetime.now(dt.timezone.utc)],
+                "source_date": [dt.datetime.fromisoformat(source_date).replace(tzinfo=dt.timezone.utc)],
+                "files_merged_count": [files_merged],
+            }
+        ),
+        "processed_date timestamp NOT NULL, source_date timestamp, files_merged_count int NOT NULL",
     )
+    return df.crossJoin(F.broadcast(meta))
 
 
 def null_column_counts(df: DataFrame) -> dict[str, int]:
@@ -128,8 +146,8 @@ def drop_all_null_columns(df: DataFrame) -> DataFrame:
     """P5: drop columns where every value is NULL (reference
     ``etl_pipeline.py:453-455,473-477``). Data-dependent → requires one
     aggregation, which also counts the rows: a frame with no rows keeps
-    every column (a header-only day would otherwise lose its metadata
-    columns too). The drop itself is plan-time column pruning."""
+    every column (a header-only day would otherwise lose all of them). The
+    drop itself is plan-time column pruning."""
     row = df.agg(F.count(F.lit(1)), *[F.count(F.col(c)) for c in df.columns]).first()
     empty = [c for c, n in zip(df.columns, row[1:]) if n == 0] if row[0] else []
     return df.drop(*empty) if empty else df

@@ -5,7 +5,7 @@ Maps SURVEY §3 onto lazy plans:
 - :func:`process_day` = ``process_single_day`` (reference
   ``etl_pipeline.py:252-545``): LIST -> prune-by-filename-date -> per-group
   CSV scan -> clean names + provenance -> union-by-name -> epoch->ts ->
-  metadata -> drop-empty-cols -> dedup -> sink + audit row. The audit
+  drop-empty-cols -> dedup -> metadata -> sink + audit row. The audit
   row's count comes from the write itself (a ``DataFrame.observe`` metric
   on the frame the sink writes), not from a second pass over the day.
 - :func:`process_range` = the day loop (``:716-722``).
@@ -13,9 +13,11 @@ Maps SURVEY §3 onto lazy plans:
   (``:599-657``).
 
 Execution differences from the reference (the HOW we deliberately replace):
-stages 5-8 are ONE lazy plan — no per-file materialization, no full-day RAM
-spike; files read in parallel across executors; the only wide operations are
-the dedup hash-aggregate and the final write fan-in. Failure unit stays the
+stages 5-8 are ONE plan — no per-file materialization, no full-day RAM
+spike; files read in parallel across executors; the only passes before the
+write are schema inference (without an explicit schema) and the null-column
+aggregate, and the only wide operations are that aggregate, the dedup
+hash-aggregate and the final write fan-in. Failure unit stays the
 day (exceptions propagate; per-file read errors surface instead of being
 silently skipped — auditable beats lossy).
 
@@ -29,6 +31,11 @@ The day's metadata stays on the driver and runs no Spark job: pruning is a
 filter on the Arrow-built listing frame (sources/csv_ingest.file_listing_df),
 the header probe reads each file's first line through the Hadoop FileSystem
 API, and the audit row is built from an Arrow table.
+
+No value that changes per run or per day reaches the generated code of the
+day's heavy stages: the metadata columns are joined in from a one-row Arrow
+frame after the dedup (operators/cleanse.add_metadata_columns), so every day
+of the same shape reuses the code compiled for the first.
 """
 
 from __future__ import annotations
@@ -120,8 +127,11 @@ def _project_schema(schema: T.StructType, header: str) -> T.StructType:
 def ingest_day_plan(
     spark: SparkSession, config: PipelineConfig, files: list[FileInfo], day: str
 ) -> tuple[DataFrame, list[FileInfo]]:
-    """Build the lazy merged-day plan (stages 5-8) for pruned ``files``.
-    Returns (plan, skipped_files)."""
+    """Build the day's plan for pruned ``files``: one scan per header group,
+    clean names + provenance, union-by-name, epoch->ts, drop-empty-cols and
+    dedup, then the metadata columns. Runs the null-column aggregate (and,
+    without an explicit schema, CSV schema inference); the dedup and
+    everything after it stay lazy. Returns (plan, skipped_files)."""
     groups, skipped = probe_headers(spark, files, config.on_error)
     if not groups:
         raise NoReadableFilesError(day, skipped)
@@ -136,6 +146,10 @@ def ingest_day_plan(
         for header, group in groups
     ]
     merged = epoch_to_timestamp(union_by_name(dfs), config.epoch_columns)
+    # The metadata columns are constant within a day, so deduping before
+    # they are attached keeps the same rows and leaves them out of the
+    # dedup's shuffle keys.
+    merged = dedup_exact(drop_all_null_columns(merged))  # one aggregate pass
     # files_merged counts FILES (reference: len(merged_dataframes), one df
     # per file), not header groups.
     n_files_read = sum(len(group) for _, group in groups)
@@ -165,7 +179,6 @@ def process_day(spark: SparkSession, config: PipelineConfig, day: str, sink: Sin
         raise
     skipped_set = set(skipped)
     processed = [f for f in matching if f not in skipped_set]
-    merged = dedup_exact(drop_all_null_columns(merged))  # one aggregate pass
 
     obs = Observation()
     sink.write_day(merged.observe(obs, F.count(F.lit(1)).alias("rows")), day)

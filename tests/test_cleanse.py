@@ -77,10 +77,17 @@ def test_null_column_detection_and_drop(spark):
 
 def test_metadata_columns(spark):
     df = spark.createDataFrame([(1,)], ["x"])
-    out = add_metadata_columns(df, "2025-02-03", 4).collect()[0]
+    framed = add_metadata_columns(df, "2025-02-03", 4)
+    out = framed.collect()[0]
     assert out["files_merged_count"] == 4
     assert out["source_date"].date().isoformat() == "2025-02-03"
     assert out["processed_date"] is not None
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in framed.schema.fields] == [
+        ("x", "bigint", True),
+        ("processed_date", "timestamp", False),
+        ("source_date", "timestamp", True),
+        ("files_merged_count", "int", False),
+    ]
 
 
 def test_rows_per_file(spark):

@@ -171,3 +171,32 @@ def test_header_only_day_to_jdbc(spark, derby_url, tmp_path):
     assert {"id", "amount", "source_file", "processed_date", "source_date", "files_merged_count"} <= cols
     audit = _read_table(spark, derby_url, "empty_audit").collect()
     assert len(audit) == 1 and audit[0]["total_row_count"] == 0
+
+
+def test_jdbc_day_table_keeps_metadata_nullability(spark, derby_url, tmp_path):
+    """The day table's CREATE TABLE comes from the frame's schema: the
+    metadata columns are created processed_date NOT NULL, source_date
+    nullable and files_merged_count NOT NULL (read back from the
+    database's own catalog; Spark's JDBC reader reports every column
+    nullable)."""
+    d = tmp_path / "src"
+    d.mkdir()
+    (d / "sales_2025-02-03.csv").write_text("id,amount\n1,10.5\n")
+    sink = JdbcSink(url=derby_url, table_name="meta_day", audit_table="meta_audit")
+    assert process_day(spark, PipelineConfig(source_dir=str(d)), "2025-02-03", sink).total_rows == 1
+
+    conn = spark._jvm.java.sql.DriverManager.getConnection(derby_url)
+    try:
+        meta = conn.getMetaData()
+        table = "META_DAY" if meta.storesUpperCaseIdentifiers() else "meta_day"
+        cols = meta.getColumns(None, None, table, None)
+        nullable = {}
+        while cols.next():
+            nullable[cols.getString("COLUMN_NAME").lower()] = cols.getString("IS_NULLABLE")
+    finally:
+        conn.close()
+    assert {c: nullable[c] for c in ("processed_date", "source_date", "files_merged_count")} == {
+        "processed_date": "NO",
+        "source_date": "YES",
+        "files_merged_count": "NO",
+    }

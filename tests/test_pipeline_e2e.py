@@ -184,8 +184,8 @@ def test_explicit_schema_output_identical_and_skips_inference(spark, source_dir,
     key = [c for c in a.columns if c != "processed_date"]
     assert sorted(map(tuple, a.select(key).collect())) == sorted(map(tuple, b.select(key).collect()))
 
-    # Probe: building the lazy plan triggers Spark jobs only for the header
-    # probe (+ CSV schema inference when enabled). Fewer jobs with an
+    # Probe: building the plan runs Spark jobs only for the null-column
+    # aggregate (+ CSV schema inference when enabled). Fewer jobs with an
     # explicit schema == the inference pass really was skipped.
     files = prune_paths_by_date(
         spark, [f for f in list_files(source_dir, spark=spark) if f.path.endswith((".csv", ".csv.gz"))], day
@@ -443,3 +443,83 @@ def test_metadata_phase_runs_no_spark_job(spark, source_dir):
     }
     assert skipped == []
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_day_frame_schema(spark, tmp_path):
+    """The day frame's contract, in both schema modes: data columns in
+    first-seen order, then processed_date (timestamp, NOT NULL),
+    source_date (timestamp, nullable) and files_merged_count (int,
+    NOT NULL) last. JdbcSink's CREATE TABLE is built from this schema."""
+    from pyspark.sql import types as T
+
+    from etl_from_s3_to_postgresql_template_spark.pipeline import ingest_day_plan
+    from etl_from_s3_to_postgresql_template_spark.sources.csv_ingest import list_files
+
+    d = tmp_path / "src"
+    d.mkdir()
+    (d / "a_2025-02-03.csv").write_text("id,{amount},date_time_column1\n1,10.5,1706918400\n")
+    (d / "b_2025-02-03.csv").write_text("id,note\n2,hi\n")
+    files = list_files(str(d))
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("{amount}", T.DoubleType()),
+            T.StructField("date_time_column1", T.LongType()),
+        ]
+    )
+    metadata = [
+        ("processed_date", "timestamp", False),
+        ("source_date", "timestamp", True),
+        ("files_merged_count", "int", False),
+    ]
+
+    def fields(cfg):
+        df, skipped = ingest_day_plan(spark, cfg, files, "2025-02-03")
+        assert skipped == []
+        return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+
+    assert fields(PipelineConfig(source_dir=str(d))) == [
+        ("id", "int", True),
+        ("amount", "double", True),
+        ("date_time_column1", "int", True),
+        ("source_file", "string", True),
+        ("note", "string", True),
+        ("date_time_column1_datetime", "timestamp", True),
+    ] + metadata
+    assert fields(PipelineConfig(source_dir=str(d), schema=schema)) == [
+        ("id", "bigint", True),
+        ("amount", "double", True),
+        ("date_time_column1", "bigint", True),
+        ("source_file", "string", True),
+        ("note", "string", True),
+        ("date_time_column1_datetime", "timestamp", True),
+    ] + metadata
+
+
+def test_days_of_one_shape_reuse_compiled_code(spark, tmp_path):
+    """Days with the same header groups but different values and file
+    counts compile no new code after the first: no value that changes per
+    run or per day (processed_date, source_date, files_merged_count) is
+    inlined into the generated code of the day's stages."""
+    d = tmp_path / "src"
+    d.mkdir()
+    days = {"2025-04-01": 1, "2025-04-02": 2, "2025-04-03": 3}
+    for n, (day, n_files) in enumerate(days.items(), 1):
+        for i in range(n_files):
+            k = 100 * n + 10 * i
+            (d / f"sales{i}_{day}.csv").write_text(
+                "id,amount,region,date_time_column1\n"
+                f"{k},{k}.5,east,{1706918400 + k}\n"
+                f"{k + 1},{k}.25,west,{1706918401 + k}\n"
+                f"{k + 1},{k}.25,west,{1706918401 + k}\n"  # exact duplicate
+            )
+            (d / f"logs{i}_{day}.csv").write_text(f"id,note\n{k + 2},n{k}\n")
+    cfg = PipelineConfig(source_dir=str(d))
+    sink = ParquetSink(str(tmp_path / "lake"))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    (first, *rest) = days
+    assert process_day(spark, cfg, first, sink).total_rows == 3
+    after_first = compiles.getCount()
+    assert [process_day(spark, cfg, day, sink).total_rows for day in rest] == [6, 9]
+    assert compiles.getCount() == after_first

@@ -1,7 +1,7 @@
 """Streaming scale evidence: sustained throughput + state-store growth.
 
-The batch side has 10x/100x sweeps (bench_scale.py, bench_docs_dedup.py);
-this is the streaming counterpart. It drives the engine's canonical
+The batch side's 10x/100x sweeps are recorded in SCALING.md; this is the
+streaming counterpart. It drives the engine's canonical
 unbounded ingest shape — deterministic rate source behind the events
 contract (streaming/ingest.py::stream_events_rate) -> watermarked
 tumbling-window aggregate -> foreachBatch parquet sink — at two volumes

@@ -1,5 +1,5 @@
 """Synthesize a 10x-scale fixture (sf~1) from sf0.1 by key-offset
-replication, for scale-stress runs (tools/bench_scale.py).
+replication, for scale-stress runs (see SCALING.md's 10x section).
 
 Replicas get disjoint key ranges (orderkey/custkey/suppkey/event_id offset
 by replica * (max+1)) so uniqueness-sensitive plans (joins, windows,

@@ -1,6 +1,6 @@
 """Measure a plan's actual shuffle volume at two scales.
 
-The 100x sweep (tools/bench_scale.py) grades plans by wall-time RATIO,
+The 100x sweep (SCALING.md) grades plans by wall-time RATIO,
 which conflates compute with shuffle; for a shuffle-bound shape like q18
 (group-having-join: the pre-agg rows on l_orderkey ARE the cost) the
 linearity claim should be byte-backed. This tool runs a named registered
