@@ -3,6 +3,11 @@
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}. Each query is forced end-to-end with a
 noop sink (full computation, no collect-to-driver skew, no sink cost).
+The line also carries the Janino compile count of the warmup pass and of
+the timed passes (``codegen_compiles``: a timed pass that compiles many
+classes means the generated-class cache is too small for the pack), and
+the driver JVM's Metaspace use after them (``metaspace_mb``), the memory
+those classes hold.
 """
 
 from __future__ import annotations
@@ -163,6 +168,19 @@ def _calibrate() -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def _codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM (Spark's CodegenMetrics)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _metaspace_mb(spark) -> float | None:
+    """Metaspace in use by the driver JVM, in MB."""
+    for pool in spark._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans():
+        if pool.getName() == "Metaspace":
+            return round(pool.getUsage().getUsed() / 2**20, 1)
+    return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -179,10 +197,13 @@ def main() -> None:
     # still recorded per query (first TIMED pass below) as first_pass_total.
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
+    compiles0 = _codegen_compiles(spark)
     for name in HEADLINE + HEAVY + DOCS_HEAVY:
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     for _ in range(2):
         QUERIES["dedup_minhash_pairs"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    compiles1 = _codegen_compiles(spark)
 
     # Three timed passes per query; headline value = best (TPC power-run
     # convention, min instead of second-run to resist this shared box's
@@ -198,6 +219,7 @@ def main() -> None:
             passes.append(time.perf_counter() - t0)
         warm[name] = round(min(passes), 3)
 
+    compiles = {"warmup": compiles1 - compiles0, "timed": _codegen_compiles(spark) - compiles1}
     total = round(sum(warm.values()), 3)
     total10 = round(sum(warm[n] for n in HEADLINE), 3)
     print(
@@ -217,6 +239,8 @@ def main() -> None:
                 # single-core busy-loop seconds on this host at bench time;
                 # divide `value` by this to compare rounds on a shared box
                 "calib_loop_sec": calib,
+                "codegen_compiles": compiles,
+                "metaspace_mb": _metaspace_mb(spark),
                 # oracle-parity twins, not production tiers — read the
                 # family's production number instead (REFERENCE_ONLY doc)
                 "reference_only": REFERENCE_ONLY,

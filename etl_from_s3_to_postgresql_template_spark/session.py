@@ -11,6 +11,21 @@ Config derives from reference behavior (SURVEY.md §4.4):
   this is the knob that lets the same plans survive a 100x scale-up.
 - Dynamic partition overwrite — day-level idempotent re-runs (the
   reference append-only double-loads on re-run; we fix rather than copy).
+- A generated-class cache that holds the engine's warm working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps 100 compiled classes by default
+  and evicts the least recently used; one warm ``corpus_pack`` op (the
+  Bloom funnel plus the hashed CCNet buckets) cycles through ~145, so at
+  the default every warm op recompiled 132–141 classes with Janino and
+  handed the JIT cold code; at 2048 it compiles none. Over the 46 queries of ``bench.py`` at sf0.01 a cold
+  pass compiles 802 classes; later passes compiled 1048–1059 at the
+  default size and 8–16 with an unbounded cache. 2048 is a power of two
+  with headroom over ~800. Keeping the classes costs less Metaspace than
+  evicting them: after three such passes the driver JVM held 191.5 MB at
+  2048 and 207.4 MB at 100, where each eviction is compiled again into a
+  new class.
+- Driver memory sized from the host (``driver_memory``): half the physical
+  memory, capped at 48 GB. A fixed 48 GB let two sessions on a 16 GB host
+  grow until the kernel killed one.
 
 At 100 TB the same session settings hold except ``shuffle.partitions``
 (driven by AQE's advisory partition size) and executor sizing, which are
@@ -24,7 +39,24 @@ from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "s3a_conf"]
+__all__ = ["driver_memory", "get_spark", "s3a_conf"]
+
+#: spark.sql.codegen.cache.maxEntries: generated classes kept compiled
+#: (module docstring)
+CODEGEN_CACHE_ENTRIES = 2048
+#: the largest default driver heap, in MB
+_MAX_DRIVER_MB = 48 * 1024
+
+
+def driver_memory(env: Mapping[str, str] | None = None, phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEM`` if set, else half the
+    host's physical memory in MB, capped at 48 GB."""
+    e = os.environ if env is None else env
+    if e.get("SPARK_DRIVER_MEM"):
+        return e["SPARK_DRIVER_MEM"]
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys_bytes // 2 // 2**20, _MAX_DRIVER_MB)}m"
 
 
 def s3a_conf(env: Mapping[str, str] | None = None) -> dict[str, str]:
@@ -92,7 +124,8 @@ def get_spark(
         # micro-resolution engines (and DuckDB) read the same file.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in s3a_conf().items():
         builder = builder.config(k, v)

@@ -26,11 +26,24 @@ is unaffected: the engine's cross-engine hash-exact conventions
 (decimal/integer-micro accumulation, sorted collect_list) make every
 registered plan row-order-free. ``SPARK_GRAFT_SMALL_SCAN_BYTES`` overrides
 the byte bound (0 disables the gate).
+
+Footer cache: ``spark.read.parquet(path)`` infers the schema from the
+file's footer, and that inference runs one Spark job per call — two per
+warm ``corpus_pack`` op, inside plan construction. ``load_table`` keeps the
+inferred ``StructType`` per local file, keyed by the file's path, inode,
+size, modification and change times (ns) and the session's Parquet
+inference settings, and reads a known file through
+``spark.read.schema(cached).parquet(path)``: no job, the same schema and
+the same plans modulo expression IDs. A file rewritten or replaced at the
+same path changes its change time and is probed again.
+Directories and non-local paths (``s3a://``, ``file://`` URIs) keep the
+inferring read. ``events_physical_schema`` reads through the same cache.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +63,40 @@ TABLES: tuple[str, ...] = (
 )
 
 
-_EVENTS_SCHEMA_CACHE: dict[str, T.StructType] = {}
+#: session settings that change the schema Spark infers from a footer
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+#: local file path -> ((inode, size, mtime, ctime, inference settings), schema);
+#: two threads missing at once both probe and store the same schema
+_FOOTER_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the footer probed once per version
+    of a local file (module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ctime_ns,
+        tuple(spark.conf.get(c) for c in _INFER_CONFS),
+    )
+    hit = _FOOTER_SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _FOOTER_SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 def events_physical_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -59,17 +105,16 @@ def events_physical_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     The generator has shipped ts as TIMESTAMP(NANOS) (read as long under
     nanosAsLong) and as TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as
     TIMESTAMP_NTZ) at different times; streaming readers must declare the
-    physical type, so probe once per sf_dir instead of hard-coding.
+    physical type, so probe the file (once per version, through the footer
+    cache) instead of hard-coding.
     """
-    if sf_dir not in _EVENTS_SCHEMA_CACHE:
-        # events.parquet may store TIMESTAMP(NANOS), which Spark's reader
-        # rejects outright. Set the legacy conf on WHATEVER session we're
-        # given (the driver harness builds its own, without our session.py
-        # defaults — runtime-settable, so this is safe) and read nanos as
-        # long.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _EVENTS_SCHEMA_CACHE[sf_dir] = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    return _EVENTS_SCHEMA_CACHE[sf_dir]
+    # events.parquet may store TIMESTAMP(NANOS), which Spark's reader
+    # rejects outright. Set the legacy conf on WHATEVER session we're
+    # given (the driver harness builds its own, without our session.py
+    # defaults — runtime-settable, so this is safe) and read nanos as
+    # long.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _read_parquet(spark, f"{sf_dir}/events.parquet").schema
 
 
 def normalize_events_ts(df: DataFrame, for_streaming: bool = False) -> DataFrame:
@@ -146,7 +191,7 @@ def load_table(
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if name == "events":
         df = normalize_events_ts(df)
     if parallel:
