@@ -57,10 +57,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
+
 __all__ = ["rep_stats_counts", "REP_FIELDS"]
 
-#: explicit ASCII whitespace (the llm_ops8 convention)
-_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
+_WS_RE = re.compile(WS)
 
 #: output struct fields, all exact int64 counts
 REP_FIELDS = (

@@ -29,8 +29,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from etl_from_s3_to_postgresql_template_spark.functions.text import WS
+
 _TAG_RE = re.compile(r"<[^>]*>")
-_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
+_WS_RE = re.compile(WS)
 _ENTS = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&"))
 
 #: output schema of strip_markup_batches (DDL used at the call site —

@@ -35,7 +35,13 @@ __all__ = [
     "minhash_candidates",
     "simhash_col",
     "simhash_candidates",
+    "blocked_pair_ids",
+    "SHINGLES_SQL",
+    "shingle_sets",
+    "shingle_overlap",
     "ngram_jaccard_pairs",
+    "jaccard_components",
+    "duplicate_clusters",
     "connected_components",
     "fuzzy_pairs_blocked",
 ]
@@ -378,6 +384,54 @@ def blocked_pair_ids(
     )
 
 
+#: DuckDB twin of ``shingle_sets``: ``shl`` holds each document's
+#: token-3-gram list ``sl``, ``sh`` its distinct set ``s``; both carry
+#: every other column of ``documents`` but ``text``
+SHINGLES_SQL = r"""shl AS (
+      SELECT * EXCLUDE (toks),
+             CASE WHEN len(toks) >= 3
+                  THEN list_transform(range(1, len(toks)-1),
+                                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
+                  ELSE [array_to_string(toks, ' ')] END AS sl
+      FROM (SELECT * EXCLUDE (text), list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
+    ), sh AS (
+      SELECT * EXCLUDE (sl), list_distinct(sl) AS s FROM shl
+    )"""
+
+
+def shingle_sets(
+    df: DataFrame, *carry: str, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+) -> DataFrame:
+    """(id_col, *carry, s): each document's distinct token-k-gram set.
+    NULL text shingles like '' (the one-element set [''])."""
+    return df.select(id_col, *carry, F.array_distinct(shingles_col(text_col, k)).alias("s"))
+
+
+def shingle_overlap(
+    sh: DataFrame,
+    pairs: DataFrame | None = None,
+    block_col: str = "source",
+    id_col: str = "doc_id",
+) -> tuple[DataFrame, Column, Column, Column]:
+    """The verify stage of every exact set-overlap dedup: join candidate
+    ``pairs`` (id_a, id_b) back by id to the sets ``s`` of ``sh``. With
+    no ``pairs``, the candidates are every within-``block_col`` pair
+    (blocked_pair_ids), so the scoring runs at full parallelism instead
+    of one task per distinct block value.
+
+    Returns the joined frame (id_a, id_b, sa, sb) and its overlap
+    counts ``inter``, ``na``, ``nb`` as Columns; each caller applies its
+    own predicate and output columns. Columns, not projected fields: a
+    projected ``inter`` read twice stays a Project of its own, while a
+    Column folds into the caller's one projection."""
+    if pairs is None:
+        pairs = blocked_pair_ids(sh, block_col, id_col)
+    a = sh.select(F.col(id_col).alias("id_a"), F.col("s").alias("sa"))
+    b = sh.select(F.col(id_col).alias("id_b"), F.col("s").alias("sb"))
+    inter = F.size(F.array_intersect("sa", "sb"))
+    return pairs.join(a, "id_a").join(b, "id_b"), inter, F.size("sa"), F.size("sb")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     candidate_pairs: DataFrame,
@@ -389,17 +443,33 @@ def ngram_jaccard_pairs(
     """Exact token-k-gram Jaccard for candidate pairs only (the verify step
     after LSH blocking — never run this on all n^2 pairs).
     ``candidate_pairs``: (id_a, id_b). Output adds exact ``jaccard``."""
-    sh = spread_partitions(df).select(
-        F.col(id_col), F.array_distinct(shingles_col(text_col, k)).alias("sh")
-    )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        candidate_pairs.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", F.round(inter / union, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    sh = shingle_sets(spread_partitions(df), text_col=text_col, id_col=id_col, k=k)
+    pairs, inter, na, nb = shingle_overlap(sh, candidate_pairs, id_col=id_col)
+    return pairs.select(
+        "id_a", "id_b", F.round(inter / (na + nb - inter), 4).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def jaccard_components(
+    docs: DataFrame, threshold: float = 0.05, algorithm: str = "label"
+) -> DataFrame:
+    """(id, comp) over the graph of source-blocked pairs whose exact
+    token-3-gram Jaccard is >= ``threshold``: the duplicate clusters,
+    each labelled by its smallest doc_id (connected_components)."""
+    pairs, inter, na, nb = shingle_overlap(shingle_sets(docs, "source"))
+    edges = pairs.filter((inter / (na + nb - inter)) >= threshold).select("id_a", "id_b")
+    return connected_components(docs.select("doc_id"), edges, "doc_id", algorithm=algorithm)
+
+
+def duplicate_clusters(docs: DataFrame, algorithm: str = "label") -> DataFrame:
+    """(doc_id, cluster_id, cluster_size): every document with its
+    duplicate cluster (jaccard_components) and that cluster's size."""
+    comp = jaccard_components(docs, algorithm=algorithm)
+    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return comp.join(sizes, "comp").select(
+        F.col("id").alias("doc_id"),
+        F.col("comp").alias("cluster_id"),
+        "cluster_size",
     )
 
 

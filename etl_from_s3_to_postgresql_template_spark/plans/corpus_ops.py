@@ -18,7 +18,7 @@ from etl_from_s3_to_postgresql_template_spark.operators.corpus import (
 )
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree_eager
 
 
 @query(
@@ -426,7 +426,11 @@ def graph_token_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cnt") >= 20)
         .select("a", "b")
     )
-    edges = edges.transform(shared_subtree)  # three legs below reuse it
+    # pinned EAGERLY: the three legs below run as concurrent broadcast
+    # jobs, and one of them marking a lazy checkpoint while another's
+    # submit walks its dependencies failed a run with an NPE in
+    # DAGScheduler.eagerlyComputePartitionsForRddAndAncestors
+    edges = edges.transform(shared_subtree_eager)
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))

@@ -16,9 +16,13 @@ from etl_from_s3_to_postgresql_template_spark.functions.text import (
     token_count_col,
 )
 from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
+    SHINGLES_SQL,
     dedup_exact_by_hash,
+    duplicate_clusters,
     minhash_candidates,
     ngram_jaccard_pairs,
+    shingle_overlap,
+    shingle_sets,
     simhash_candidates,
 )
 from etl_from_s3_to_postgresql_template_spark.operators.similarity import brute_force_topk, lsh_topk
@@ -107,19 +111,12 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_repetition_score",
-    oracle=r"""
-    WITH sh AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_transform(range(1, len(toks)-1),
-                                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [array_to_string(toks, ' ')] END AS s
-      FROM (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    )
+    oracle=rf"""
+    WITH {SHINGLES_SQL}
     SELECT doc_id,
-           ROUND(1.0 - len(list_distinct(s)) * 1.0 / len(s), 4) AS repetition,
-           CASE WHEN 1.0 - len(list_distinct(s)) * 1.0 / len(s) > 0.2 THEN 1 ELSE 0 END AS is_repetitive
-    FROM sh
+           ROUND(1.0 - len(list_distinct(sl)) * 1.0 / len(sl), 4) AS repetition,
+           CASE WHEN 1.0 - len(list_distinct(sl)) * 1.0 / len(sl) > 0.2 THEN 1 ELSE 0 END AS is_repetitive
+    FROM shl
     """,
 )
 def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,16 +259,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard_exact",
-    oracle=r"""
-    WITH sh AS (
-      SELECT doc_id, source,
-             list_distinct(
-               CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks)-1),
-                                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS s
-      FROM (SELECT doc_id, source, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    )
+    oracle=rf"""
+    WITH {SHINGLES_SQL}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
                  (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS jaccard
@@ -290,25 +279,10 @@ def dedup_ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle arrays join back by id — so the array_intersect scoring
     runs at full parallelism instead of |distinct sources| tasks
     (measured 31 s -> ~2 s at sf0.1)."""
-    from etl_from_s3_to_postgresql_template_spark.functions.text import shingles_col
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import blocked_pair_ids
-
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", "source", F.array_distinct(shingles_col("text", 3)).alias("s")
-    )
-    pairs = blocked_pair_ids(sh, "source")
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    jac = inter / union
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(jac >= 0.05)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-    )
+    pairs, inter, na, nb = shingle_overlap(shingle_sets(docs, "source"))
+    jac = inter / (na + nb - inter)
+    return pairs.filter(jac >= 0.05).select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
 
 
 @query(
@@ -655,18 +629,11 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_topk(queries, candidates, dim=64, k=10).orderBy("q_id", "rank")
 
 
-@query(
-    "dedup_duplicate_clusters",
-    oracle=r"""
-    WITH RECURSIVE sh AS (
-      SELECT doc_id, source,
-             list_distinct(
-               CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks)-1),
-                                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS s
-      FROM (SELECT doc_id, source, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    ),
+#: connected components as a recursive-CTE transitive closure over the
+#: source-blocked Jaccard edges; also the oracle of llm_ops3's
+#: dedup_duplicate_clusters_star
+CLUSTERS_ORACLE = rf"""
+    WITH RECURSIVE {SHINGLES_SQL},
     edges AS (
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id <> b.doc_id
@@ -683,8 +650,10 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM comp c
     JOIN (SELECT cluster_id, COUNT(*) AS n FROM comp GROUP BY cluster_id) s
       USING (cluster_id)
-    """,
-)
+    """
+
+
+@query("dedup_duplicate_clusters", oracle=CLUSTERS_ORACLE)
 def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 capstone: duplicate CLUSTERS, not just pairs — connected
     components over the exact-Jaccard edge graph (same edges as
@@ -693,34 +662,10 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (operators/dedup.py::connected_components); the oracle is
     the recursive-CTE transitive closure. Transitivity matters: A~B and
     B~C put A and C in one cluster even when A is not directly similar
-    to C."""
-    from etl_from_s3_to_postgresql_template_spark.functions.text import shingles_col
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
-        connected_components,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", "source", F.array_distinct(shingles_col("text", 3)).alias("s")
-    )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("source"), F.col("s").alias("sa"))
-    b = sh.select(
-        F.col("doc_id").alias("id_b"), F.col("source").alias("source_b"), F.col("s").alias("sb")
-    )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    pairs = (
-        a.join(b, (F.col("source") == F.col("source_b")) & (F.col("id_a") < F.col("id_b")))
-        .filter((inter / union) >= 0.05)
-        .select("id_a", "id_b")
-    )
-    comp = connected_components(docs.select("doc_id"), pairs, "doc_id")
-    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return comp.join(sizes, "comp").select(
-        F.col("id").alias("doc_id"),
-        F.col("comp").alias("cluster_id"),
-        "cluster_size",
-    )
+    to C. The edges come from the blocked overlap stage
+    (operators/dedup.py::duplicate_clusters), not a self-join on
+    `source`, whose scoring ran one task per source."""
+    return duplicate_clusters(load_table(spark, sf_dir, "documents"))
 
 
 @query(

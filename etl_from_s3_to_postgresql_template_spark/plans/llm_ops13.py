@@ -78,7 +78,7 @@ from etl_from_s3_to_postgresql_template_spark.functions.dates import (
 from etl_from_s3_to_postgresql_template_spark.operators import bloom, ccnet
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "docs_ccnet_ppl_score_external",
@@ -360,29 +360,9 @@ def docs_ccnet_ppl_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame
 def _probe_odd_half(pars: DataFrame) -> DataFrame:
     """Bloom filter over the even-doc_id half's paragraphs, probed by
     the odd half: the odd-half paragraph frame with the `dup` flag."""
-    ref = pars.where(F.col("doc_id") % 2 == 0)
-    n_ref = ref.count()  # bounded scalar action, sizes m
-    bits = bloom.bits_for(n_ref)
-    words = bloom.words(ref, bits)
-    # each of the k broadcast builds evaluates its own copy of the words
-    # subtree (the per-j renames defeat exchange reuse) — 7 full passes
-    # of the reference-paragraph explode+agg without this checkpoint of
-    # the <= m/64-row table. EAGER: the k broadcast jobs can launch
-    # concurrently, and a lazy checkpoint materializing under a
-    # concurrent first action lets the others compute from lineage
-    # (byte-measured at 500k docs: the 7 passes survived eager=False).
-    # SIZE-GATED (r13): the eager materialization is itself a Spark job
-    # fired once per plan construction, and below ~10^5 reference
-    # paragraphs the 7 rebuilds it saves are cheaper than the job it
-    # costs (driver bench r12: docs_bloom_paragraph_dedup 0.66 -> 1.44 s
-    # at sf0.1, where the whole rebuild is a few-ms agg). Past the
-    # threshold the r12 500k A/B stands (eager 3.1-3.7 s vs none
-    # 7.1-15.9 s). The threshold is the m floor's capacity (16n > 2^20):
-    # a filter bigger than the floor means the reference shard is big
-    # enough that 7 explode+agg rebuilds dominate one checkpoint job.
-    if n_ref * 16 > bloom.MIN_BITS:
-        words = words.transform(shared_subtree_eager)
-    return bloom.flag_probe(pars.where(F.col("doc_id") % 2 == 1), words, bits)
+    return bloom.probe(
+        pars.where(F.col("doc_id") % 2 == 1), pars.where(F.col("doc_id") % 2 == 0)
+    )
 
 
 @query("docs_bloom_paragraph_dedup")
@@ -422,32 +402,10 @@ def docs_bloom_paragraph_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-bearing exchange is the doc-level join-back + output sort."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     pars = bloom.paragraphs(docs).transform(shared_subtree)
-    probe = _probe_odd_half(pars)
-    stats = probe.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_paragraphs"),
-        F.sum(F.col("dup").cast("long")).cast("long").alias("n_removed"),
-        # collect_list skips the NULLs the un-flagged rows produce
-        F.collect_list(F.when(F.col("dup"), F.col("pos") + 1)).alias("rm"),
+    base = docs.where(F.col("doc_id") % 2 == 1).select(
+        "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
     )
-    text = F.coalesce(F.col("text"), F.lit(""))
-    base = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", text.alias("text"))
-    parts = F.split(F.col("text"), "\n", -1)
-    kept_idx = F.array_except(
-        F.sequence(F.lit(1), F.size(parts)),
-        F.coalesce(F.col("rm"), F.array().cast("array<int>")),
-    )
-    return (
-        base.join(stats, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_paragraphs"), F.lit(0)).cast("long").alias("n_paragraphs"),
-            F.coalesce(F.col("n_removed"), F.lit(0)).cast("long").alias("n_removed"),
-            F.concat_ws(
-                "\n", F.transform(kept_idx, lambda i: F.element_at(parts, i))
-            ).alias("cleaned_text"),
-        )
-        .orderBy("doc_id")
-    )
+    return bloom.clean(base, _probe_odd_half(pars)).orderBy("doc_id")
 
 
 _BF_GATE_ORACLE = """

@@ -84,7 +84,7 @@ from etl_from_s3_to_postgresql_template_spark.operators import bloom, ccnet
 from etl_from_s3_to_postgresql_template_spark.functions.text import WS
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
-from etl_from_s3_to_postgresql_template_spark.util import shared_subtree, shared_subtree_eager
+from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
 
 __all__ = [
     "corpus_prep_funnel4",
@@ -130,45 +130,13 @@ def _f4_cleaned(docs: DataFrame, exact: bool) -> DataFrame:
             "left",
         ).select("doc_id", "pos", "par", F.col("_rpar").isNotNull().alias("dup"))
     else:
-        bits = bloom.bits_for(ref.count())  # bounded scalar action, sizes m
-        # the k broadcast builds would each rebuild the words subtree, so
-        # it is pinned EAGERLY (concurrent broadcast jobs would otherwise
-        # race a lazy checkpoint — llm_ops13's _probe_odd_half) and
-        # UNCONDITIONALLY, unlike llm_ops13's size gate (r13): this
-        # module's words subtrees are deeper — the shard-merge words
-        # table carries a union + second groupBy, and the funnel's probe
-        # nests under further checkpointed stages — and an A/B with the
-        # llm_ops13 size gate applied here regressed BOTH benched tiers
-        # at sf0.1 (corpus_prep_funnel4_bloom 3.04 -> 4.46 s,
-        # docs_bloom_merge_shards 0.80 -> 1.03 s), so 7 rebuilds cost
-        # more than one eager job even at fixture scale.
-        words = bloom.words(ref, bits).transform(shared_subtree_eager)
-        probe = bloom.flag_probe(probe_pars, words, bits)
-    stats = probe.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_paragraphs"),
-        F.sum(F.col("dup").cast("long")).cast("long").alias("n_removed"),
-        # collect_list skips the NULLs the un-flagged rows produce
-        F.collect_list(F.when(F.col("dup"), F.col("pos") + 1)).alias("rm"),
-    )
+        probe = bloom.probe(probe_pars, ref)
     base = docs.where(F.col("doc_id") % 2 == 1).select(
         "doc_id",
         F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
     )
-    parts = F.split(F.col("text"), "\n", -1)
-    kept_idx = F.array_except(
-        F.sequence(F.lit(1), F.size(parts)),
-        F.coalesce(F.col("rm"), F.array().cast("array<int>")),
-    )
-    return base.join(stats, "doc_id", "left").select(
-        "doc_id",
-        "lang",
-        F.coalesce(F.col("n_paragraphs"), F.lit(0)).cast("long").alias("n_paragraphs"),
-        F.coalesce(F.col("n_removed"), F.lit(0)).cast("long").alias("n_removed"),
-        F.concat_ws(
-            "\n", F.transform(kept_idx, lambda i: F.element_at(parts, i))
-        ).alias("cleaned_text"),
-    )
+    return bloom.clean(base, probe)
 
 
 def _f4_pipeline(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
@@ -428,14 +396,11 @@ def _merge_probe(docs: DataFrame) -> DataFrame:
     independently at a shared m, OR-merged, probed by doc_id % 3 == 2.
     Returns the probe paragraph frame with the `dup` flag."""
     pars = bloom.paragraphs(docs).transform(shared_subtree)
-    shard_a = pars.where(F.col("doc_id") % 3 == 0)
-    shard_b = pars.where(F.col("doc_id") % 3 == 1)
-    # shards that merge must share m, sized for the UNION load — one
-    # bounded scalar count over the combined reference shards
-    bits = bloom.bits_for(pars.where(F.col("doc_id") % 3 != 2).count())
-    merged = bloom.merge_words(bloom.words(shard_a, bits), bloom.words(shard_b, bits))
-    merged = merged.transform(shared_subtree_eager)  # see _f4_cleaned
-    return bloom.flag_probe(pars.where(F.col("doc_id") % 3 == 2), merged, bits)
+    return bloom.probe(
+        pars.where(F.col("doc_id") % 3 == 2),
+        pars.where(F.col("doc_id") % 3 == 0),
+        pars.where(F.col("doc_id") % 3 == 1),
+    )
 
 
 @query("docs_bloom_merge_shards")

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
+    SHINGLES_SQL,
+    jaccard_components,
+)
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 
@@ -375,16 +379,8 @@ def corpus_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_survivors",
-    oracle=r"""
-    WITH RECURSIVE sh AS (
-      SELECT doc_id, source,
-             list_distinct(
-               CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks)-1),
-                                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS s
-      FROM (SELECT doc_id, source, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    ),
+    oracle=rf"""
+    WITH RECURSIVE {SHINGLES_SQL},
     edges AS (
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id <> b.doc_id
@@ -412,29 +408,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostics. Same edge graph + connected components as
     dedup_duplicate_clusters (llm_ops.py), filtered to the canonical
     representative per cluster."""
-    from etl_from_s3_to_postgresql_template_spark.functions.text import shingles_col
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
-        connected_components,
-    )
-
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import blocked_pair_ids
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", "source", F.array_distinct(shingles_col("text", 3)).alias("s")
-    )
-    cand = blocked_pair_ids(sh, "source")
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    pairs = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .filter((inter / union) >= 0.05)
-        .select("id_a", "id_b")
-    )
-    comp = connected_components(docs.select("doc_id"), pairs, id_col="doc_id")
+    comp = jaccard_components(load_table(spark, sf_dir, "documents"))
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("replaces"))
     return (
         comp.where(F.col("id") == F.col("comp"))

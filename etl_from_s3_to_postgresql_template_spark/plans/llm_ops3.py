@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators.dedup import duplicate_clusters
+from etl_from_s3_to_postgresql_template_spark.plans.llm_ops import CLUSTERS_ORACLE
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 
@@ -538,36 +540,7 @@ def corpus_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_duplicate_clusters_star",
-    oracle=r"""
-    WITH RECURSIVE sh AS (
-      SELECT doc_id, source,
-             list_distinct(
-               CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks)-1),
-                                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS s
-      FROM (SELECT doc_id, source, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    ),
-    edges AS (
-      SELECT a.doc_id AS src, b.doc_id AS dst
-      FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id <> b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-            (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.05
-    ),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src)
-    SELECT c.doc_id, c.cluster_id, CAST(s.n AS BIGINT) AS cluster_size
-    FROM comp c
-    JOIN (SELECT cluster_id, COUNT(*) AS n FROM comp GROUP BY cluster_id) s
-      USING (cluster_id)
-    """,
-)
+@query("dedup_duplicate_clusters_star", oracle=CLUSTERS_ORACLE)
 def dedup_duplicate_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_duplicate_clusters' twin on the Large-Star/Small-Star path
     (operators/dedup.py::connected_components(algorithm='star')): same
@@ -575,33 +548,7 @@ def dedup_duplicate_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame
     O(log^2 n)-round formulation computes the identical clustering the
     diameter-round label propagation does. This is the variant to run on
     graphs with long chains / giant components."""
-    from etl_from_s3_to_postgresql_template_spark.functions.text import shingles_col
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
-        connected_components,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", "source", F.array_distinct(shingles_col("text", 3)).alias("s")
-    )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("source"), F.col("s").alias("sa"))
-    b = sh.select(
-        F.col("doc_id").alias("id_b"), F.col("source").alias("source_b"), F.col("s").alias("sb")
-    )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    pairs = (
-        a.join(b, (F.col("source") == F.col("source_b")) & (F.col("id_a") < F.col("id_b")))
-        .filter((inter / union) >= 0.05)
-        .select("id_a", "id_b")
-    )
-    comp = connected_components(docs.select("doc_id"), pairs, "doc_id", algorithm="star")
-    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return comp.join(sizes, "comp").select(
-        F.col("id").alias("doc_id"),
-        F.col("comp").alias("cluster_id"),
-        "cluster_size",
-    )
+    return duplicate_clusters(load_table(spark, sf_dir, "documents"), algorithm="star")
 
 
 @query(

@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
+    SHINGLES_SQL,
+    shingle_overlap,
+    shingle_sets,
+)
 from etl_from_s3_to_postgresql_template_spark.plans.money import _dsum
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
@@ -519,7 +524,7 @@ def _leak_blocked_pairs(
     produced at most once — no dropDuplicates needed. The pair join is an
     equi-join on list_id: shuffle-partitioned, no cross join anywhere.
     ``centroids`` defaults to the static oracle artifact; the scale path
-    passes k ~ n/target_cell centroids (tools/bench_docs_dedup.py)."""
+    passes k ~ n/target_cell centroids."""
     from etl_from_s3_to_postgresql_template_spark.operators.intquant import cogroup_pair_scores
 
     # localCheckpoint (lazy): hold and train both derive from the same
@@ -773,10 +778,9 @@ def events_wau_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-shuffle. The explode form is O(7 * active_pairs) — linear; the
     tempting alternative (range-join the pairs against a day spine) is a
     non-equi join that Spark executes as a nested loop, O(days * pairs),
-    and measured 13x on a 10x fixture (tools/bench_scale.py) before this
-    rewrite. The final equi-join back to the distinct-day spine keeps the
-    output to days that actually had events (spine is tiny; AQE
-    broadcasts it)."""
+    and measured 13x on a 10x fixture before this rewrite. The final
+    equi-join back to the distinct-day spine keeps the output to days
+    that actually had events (spine is tiny; AQE broadcasts it)."""
     events = load_table(spark, sf_dir, "events")
     du = events.select(
         F.date_trunc("day", "ts").alias("d"), "user_id"
@@ -1030,15 +1034,8 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "docs_dedup_containment",
-    oracle=r"""
-    WITH sh AS (
-      SELECT doc_id, source,
-             list_distinct(CASE WHEN len(toks) >= 3
-                  THEN list_transform(range(1, len(toks)-1),
-                                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [array_to_string(toks, ' ')] END) AS s
-      FROM (SELECT doc_id, source, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    )
+    oracle=rf"""
+    WITH {SHINGLES_SQL}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            ROUND(len(list_intersect(a.s, b.s)) * 1.0 / len(a.s), 4) AS contain_a_in_b,
            ROUND(len(list_intersect(a.s, b.s)) * 1.0 / len(b.s), 4) AS contain_b_in_a,
@@ -1062,20 +1059,10 @@ def docs_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical shape: id-only pair enumeration first, then shingle arrays
     join back by id (operators/dedup.py blocked_pair_ids) — the scoring
     runs at full parallelism instead of |distinct sources| tasks."""
-    from etl_from_s3_to_postgresql_template_spark.functions.text import shingles_col
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import blocked_pair_ids
-
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", "source", F.array_distinct(shingles_col("text", 3)).alias("s"))
-    pairs = blocked_pair_ids(sh, "source")
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    na, nb = F.size("sa"), F.size("sb")
+    pairs, inter, na, nb = shingle_overlap(shingle_sets(docs, "source"))
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .where(inter * 1.0 / F.least(na, nb) >= 0.5)
+        pairs.where(inter * 1.0 / F.least(na, nb) >= 0.5)
         .select(
             "id_a",
             "id_b",
@@ -1316,14 +1303,7 @@ __all__ += ["corpus_prep_funnel2"]
              SUM(CASE WHEN gm IN (SELECT gm FROM dupg) THEN 1 ELSE 0 END) AS n_dup
       FROM g GROUP BY doc_id
     ),
-    sh AS (
-      SELECT doc_id, source,
-             list_distinct(CASE WHEN len(toks2) >= 3
-                  THEN list_transform(range(1, len(toks2)-1),
-                                      i -> toks2[i] || ' ' || toks2[i+1] || ' ' || toks2[i+2])
-                  ELSE [array_to_string(toks2, ' ')] END) AS s
-      FROM (SELECT doc_id, source, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks2 FROM documents)
-    ),
+    {SHINGLES_SQL},
     losers AS (
       SELECT DISTINCT b.doc_id AS doc_id
       FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
@@ -1362,11 +1342,7 @@ def corpus_prep_funnel2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flags are computed corpus-wide and conjoined (not re-staged): each
     stage's statistic is defined on the full corpus, which keeps every
     stage one independent pass over the same scan."""
-    from etl_from_s3_to_postgresql_template_spark.functions.text import (
-        shingles_col,
-        tokens_col,
-    )
-    from etl_from_s3_to_postgresql_template_spark.operators.dedup import blocked_pair_ids
+    from etl_from_s3_to_postgresql_template_spark.functions.text import tokens_col
     from etl_from_s3_to_postgresql_template_spark.plans.llm_ops2 import docs_bigram_logprob
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1404,15 +1380,9 @@ def corpus_prep_funnel2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    sh = docs.select("doc_id", "source", F.array_distinct(shingles_col("text", 3)).alias("s"))
-    cand = blocked_pair_ids(sh, "source")
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
+    pairs, inter, na, nb = shingle_overlap(shingle_sets(docs, "source"))
     losers = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .where(inter * 1.0 / F.least(F.size("sa"), F.size("sb")) >= 0.5)
+        pairs.where(inter * 1.0 / F.least(na, nb) >= 0.5)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .withColumn("is_loser", F.lit(True))

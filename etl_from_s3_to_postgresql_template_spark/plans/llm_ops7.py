@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from etl_from_s3_to_postgresql_template_spark.operators.dedup import SHINGLES_SQL, shingle_overlap
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 from etl_from_s3_to_postgresql_template_spark.util import shared_subtree
@@ -158,16 +159,8 @@ def docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: tau = 4/5 kept as a ratio so every filter stays in integer arithmetic.
 _PPJ_NUM, _PPJ_DEN = 4, 5
 
-_PPJOIN_ORACLE = r"""
-    WITH sh AS (
-      SELECT doc_id,
-             list_distinct(
-               CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks)-1),
-                                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS s
-      FROM (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks FROM documents)
-    )
+_PPJOIN_ORACLE = rf"""
+    WITH {SHINGLES_SQL}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
                  (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS jaccard
@@ -271,14 +264,10 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb")).cast("long")
-    na, nb = F.size("sa").cast("long"), F.size("sb").cast("long")
+    pairs, inter, na, nb = shingle_overlap(sh, cands)
+    inter, na, nb = inter.cast("long"), na.cast("long"), nb.cast("long")
     return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter((_PPJ_NUM + _PPJ_DEN) * inter >= _PPJ_NUM * (na + nb))
+        pairs.filter((_PPJ_NUM + _PPJ_DEN) * inter >= _PPJ_NUM * (na + nb))
         .select(
             "id_a",
             "id_b",
@@ -1945,13 +1934,7 @@ _REPORT_ORACLE = rf"""
       SELECT ROUND(count(DISTINCT CASE WHEN cnt > 1 THEN doc_id END) * 1.0
                    / count(DISTINCT doc_id), 4) AS pct_docs_with_dup_chunks
       FROM ch JOIN chg USING (h)
-    ), sh AS (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(tk) >= 3
-                  THEN list_transform(range(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                  ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk FROM documents)
-    ), ppj AS (
+    ), {SHINGLES_SQL}, ppj AS (
       SELECT CAST(count(*) AS BIGINT) AS n_neardup_pairs
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
       WHERE 9 * len(list_intersect(a.s, b.s)) >= 4 * (len(a.s) + len(b.s))

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.sinks.rowgroups import bounded
+from etl_from_s3_to_postgresql_template_spark.sinks.swap import recover, swap_in
 
 __all__ = ["CompactionReport", "compact_parquet"]
 
@@ -53,9 +54,11 @@ def compact_parquet(
 
     Reads happen once: the byte total comes from the `_metadata` column of
     the same scan lineage. The rewrite goes to a sibling temp dir first and
-    moves into place only after success — a failed compaction must never
-    destroy the input (object-store rename semantics: copy+delete there,
-    atomic rename on HDFS/local)."""
+    moves into place only after success (sinks/swap.py) — a failed
+    compaction must never destroy the input."""
+    root = path.rstrip("/")
+    tmp, bak = root + ".compact.tmp", root + ".compact.bak"
+    recover(spark, root, bak)
     df = spark.read.parquet(path)
     stats = (
         df.select(F.col("_metadata.file_path").alias("fp"), F.col("_metadata.file_size").alias("sz"))
@@ -75,23 +78,10 @@ def compact_parquet(
     else:
         compacted = df.repartition(n_out)
 
-    tmp = path.rstrip("/") + ".compact.tmp"
     # explicit row-group bound (sinks/rowgroups.py): compaction exists to
     # fix layout — it must never emit a file that scans as one task
     bounded(compacted.write.mode("overwrite")).parquet(tmp)
-
-    # Swap via the JVM Hadoop FileSystem (works for any supported scheme).
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(tmp), conf)
-    p_old = jvm.org.apache.hadoop.fs.Path(path)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_bak = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact.bak")
-    fs.rename(p_old, p_bak)
-    if not fs.rename(p_tmp, p_old):
-        fs.rename(p_bak, p_old)  # roll back; the input is sacred
-        raise IOError(f"compaction swap failed for {path}")
-    fs.delete(p_bak, True)
+    swap_in(spark, root, tmp, bak)
 
     after = (
         spark.read.parquet(path)

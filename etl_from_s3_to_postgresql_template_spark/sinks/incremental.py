@@ -29,7 +29,7 @@ replays — streaming/sink.py foreach_batch_rollup builds on it).
 
 Scale shape: the combine touches |rollup| + |delta| rows (rollup tables
 are aggregate-sized, orders smaller than facts); the rewrite-and-swap
-follows sinks/merge.py's safe-swap discipline.
+is sinks/swap.py's, shared with merge and compaction.
 """
 
 from __future__ import annotations
@@ -38,6 +38,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_from_s3_to_postgresql_template_spark.sinks.swap import hadoop_fs, recover, swap_in
 
 __all__ = ["RollupSpec", "apply_delta", "read_rollup"]
 
@@ -60,31 +62,9 @@ class RollupSpec:
         return df.groupBy(*self.keys).agg(*aggs)
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return (
-        jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf),
-        jvm.org.apache.hadoop.fs.Path,
-    )
-
-
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """The current rollup contents (the ``data/`` side of the directory)."""
     return spark.read.parquet(rollup_path.rstrip("/") + "/data")
-
-
-def _recover(fs, Path, root: str, bak: str) -> None:
-    """Repair a crash between the swap renames: if the backup exists and
-    the live directory doesn't, the old state is intact in the backup —
-    restore it. If both exist, the swap completed and only backup cleanup
-    was lost — delete the backup."""
-    if fs.exists(Path(bak)):
-        if not fs.exists(Path(root)):
-            if not fs.rename(Path(bak), Path(root)):
-                raise IOError(f"rollup recovery failed: cannot restore {bak}")
-        else:
-            fs.delete(Path(bak), True)
 
 
 def apply_delta(
@@ -100,8 +80,8 @@ def apply_delta(
     creates the rollup. Crash-safe: see module docstring."""
     root = rollup_path.rstrip("/")
     tmp, bak = root + ".inc.tmp", root + ".inc.bak"
-    fs, Path = _fs(spark, root)
-    _recover(fs, Path, root, bak)
+    recover(spark, root, bak)
+    fs, Path = hadoop_fs(spark, root)
     fs.delete(Path(tmp), True)  # stale tmp from a crashed build is garbage
 
     exists = fs.exists(Path(root))
@@ -121,12 +101,5 @@ def apply_delta(
         ledger = spark.read.parquet(f"{root}/_applied").unionByName(ledger)
     ledger.write.mode("overwrite").parquet(f"{tmp}/_applied")
 
-    if exists:
-        if not fs.rename(Path(root), Path(bak)):
-            raise IOError(f"incremental swap failed: cannot back up {root}")
-    if not fs.rename(Path(tmp), Path(root)):
-        if exists:
-            fs.rename(Path(bak), Path(root))  # roll back; old state intact
-        raise IOError(f"incremental swap failed for {root}")
-    fs.delete(Path(bak), True)
+    swap_in(spark, root, tmp, bak)
     return True

@@ -4,9 +4,9 @@ Plain parquet has no MERGE INTO — that is a table-format feature (Delta /
 Iceberg / Hudi). A reference user running incremental dimension loads
 still needs the semantic, so this implements the classic
 rewrite-on-merge: full-outer join target with updates on the key, apply
-upsert/delete rules, write to a temp dir, swap atomically (same
-safe-swap discipline as sinks/compact.py — a failed merge never destroys
-the target).
+upsert/delete rules, write to a temp dir, swap it in (sinks/swap.py — a
+failed merge never destroys the target, and a crash mid-swap is repaired
+by the next call).
 
 Scale honesty, stated plainly: this rewrites the WHOLE target per merge —
 O(|target|) I/O regardless of |updates|. That is the correct baseline for
@@ -23,6 +23,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_from_s3_to_postgresql_template_spark.sinks.swap import recover, swap_in
 
 __all__ = ["MergeReport", "merge_upsert"]
 
@@ -52,6 +54,9 @@ def merge_upsert(
 
     One full-outer join on the key; the counters come from the same plan
     via conditional aggregates (one pass, not four count() jobs)."""
+    root = target_path.rstrip("/")
+    tmp, bak = root + ".merge.tmp", root + ".merge.bak"
+    recover(spark, root, bak)
     target = spark.read.parquet(target_path)
     dup = updates.groupBy(key).count().where("count > 1").limit(1).count()
     if dup:
@@ -86,18 +91,8 @@ def merge_upsert(
         F.sum(is_delete.cast("long")).alias("deleted"),
     ).collect()[0]
 
-    tmp = target_path.rstrip("/") + ".merge.tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(tmp), conf)
-    Path = jvm.org.apache.hadoop.fs.Path
-    bak = target_path.rstrip("/") + ".merge.bak"
-    fs.rename(Path(target_path), Path(bak))
-    if not fs.rename(Path(tmp), Path(target_path)):
-        fs.rename(Path(bak), Path(target_path))
-        raise IOError(f"merge swap failed for {target_path}")
-    fs.delete(Path(bak), True)
+    swap_in(spark, root, tmp, bak)
 
     before = int(stats["before"] or 0)
     ins, upd, dele = (int(stats[k] or 0) for k in ("inserted", "updated", "deleted"))

@@ -28,8 +28,12 @@ def shared_subtree(df: DataFrame, eager: bool = False) -> DataFrame:
       loops — should configure a checkpoint dir in cluster deployments:
       persist alone leaves the logical plan growing per iteration.)
 
-    ``eager`` materializes now (the Bloom words table's concurrent-
-    broadcast-build case); lazily otherwise. Use as a postfix via
+    ``eager`` materializes now: use it when the pinned frame feeds
+    concurrent jobs (broadcast legs), which can race a lazy pin's
+    checkpoint. Otherwise the pin is taken at the first action, except
+    under AQE: building a lazy pin runs the frame's shuffle stages at
+    once (one job for a one-shuffle ``groupBy``; none with AQE off), so
+    only the final stage waits for the first action. Use as a postfix via
     ``df.transform(shared_subtree)`` / ``df.transform(shared_subtree_eager)``.
     Results are unaffected in every mode — only where (and whether twice)
     the subtree is computed.

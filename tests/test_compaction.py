@@ -55,3 +55,19 @@ def test_compact_sorted_layout_has_disjoint_ranges(spark, tmp_path):
     assert len(spans) >= 2
     for a, b in zip(spans, spans[1:]):
         assert a.hi < b.lo  # range-partitioned: files don't overlap -> footer stats prune
+
+
+def test_compact_recovers_crash_between_swap_renames(spark, tmp_path):
+    """The mid-swap crash state (backup present, live path missing) is
+    repaired by the next compaction, which then compacts the restored
+    data."""
+    import os
+    import shutil
+
+    path = _fragmented(spark, tmp_path)
+    shutil.move(path, path + ".compact.bak")
+    assert not os.path.exists(path)
+    report = compact_parquet(spark, path, target_file_bytes=10**9)
+    assert (report.files_before, report.files_after) == (40, 1)
+    assert spark.read.parquet(path).count() == 2000
+    assert not os.path.exists(path + ".compact.bak")

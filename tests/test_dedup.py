@@ -9,6 +9,8 @@ from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
     dedup_exact_by_hash,
     minhash_candidates,
     ngram_jaccard_pairs,
+    shingle_overlap,
+    shingle_sets,
     simhash_candidates,
 )
 
@@ -65,6 +67,59 @@ def test_ngram_jaccard_exact_values(spark, docs):
     want = round(len(a & b) / len(a | b), 4)
     assert abs(out[(1, 3)] - want) < 1e-9
     assert out[(1, 4)] == 0.0
+
+
+def _ref_shingles(text):
+    """Pure-Python token-3-gram set: NULL text is '', fewer than 3
+    tokens shingle as the whole (token-joined) document."""
+    toks = [t for t in (text or "").split() if t]
+    if len(toks) < 3:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+
+def test_shingle_overlap_matches_python_reference(spark):
+    """The shared overlap stage against a pure-Python Jaccard /
+    containment reference over every source-blocked pair: NULL and
+    empty text, fewer than 3 tokens, repeated shingles, and identical
+    documents in different sources (which must never pair)."""
+    rows = [
+        (1, BASE, "web"),
+        (2, BASE, "books"),                          # = 1, other source
+        (3, NEAR, "web"),
+        (4, None, "web"),                            # NULL text
+        (5, "", "web"),                              # empty text
+        (6, "   ", "books"),                         # whitespace only
+        (7, "two words", "web"),                     # < 3 tokens
+        (8, "a b a b a b a b", "web"),               # repeated shingles
+        (9, "a b a b", "web"),
+        (10, "two  words\t", "books"),
+        (11, "two words", "books"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    pairs, inter, na, nb = shingle_overlap(shingle_sets(docs, "source"))
+    got = {
+        (r.id_a, r.id_b): (r.inter, r.na, r.nb)
+        for r in pairs.select(
+            "id_a", "id_b", inter.alias("inter"), na.alias("na"), nb.alias("nb")
+        ).collect()
+    }
+    ref = {d: (_ref_shingles(t), src) for d, t, src in rows}
+    want = {}
+    for a, (sa, src_a) in ref.items():
+        for b, (sb, src_b) in ref.items():
+            if a < b and src_a == src_b:
+                want[(a, b)] = (len(sa & sb), len(sa), len(sb))
+    assert got == want
+    assert (1, 2) not in got  # identical text, different source
+    assert got[(4, 5)] == (1, 1, 1)  # NULL and empty both shingle as ['']
+    assert got[(8, 9)] == (2, 2, 2)  # {'a b a', 'b a b'} on both sides
+    assert got[(10, 11)] == (1, 1, 1)  # '  ' and tabs collapse
+    jaccard = {k: i / (x + y - i) for k, (i, x, y) in got.items()}
+    sa, sb = _ref_shingles(BASE), _ref_shingles(NEAR)
+    assert jaccard[(1, 3)] == len(sa & sb) / len(sa | sb)
+    containment = {k: i / min(x, y) for k, (i, x, y) in got.items()}
+    assert containment[(7, 8)] == 0.0 and containment[(8, 9)] == 1.0
 
 
 def test_simhash_near_dups(spark, docs):

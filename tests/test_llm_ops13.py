@@ -125,6 +125,24 @@ def test_bloom_probe_plan_is_broadcast_only(spark, tmp_path):
     assert "ShuffledHashJoin" not in plan
 
 
+def test_bloom_probe_builds_words_once(spark, tmp_path):
+    """The k probe joins share one broadcast of the words table: the
+    executed plan has one BroadcastExchange over it and k-1
+    ReusedExchange, despite the per-join column renames."""
+    rows = [(i, f"line {i}\nline {i+1}", "en", "web", 1) for i in range(20)]
+    sf = _write_docs(spark, tmp_path, rows)
+    pars = bloom.paragraphs(spark.read.parquet(f"{sf}/documents.parquet"))
+    probe = bloom.probe(
+        pars.where(F.col("doc_id") % 2 == 1), pars.where(F.col("doc_id") % 2 == 0)
+    )
+    probe.collect()  # the final adaptive plan exists only after execution
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    nodes = [line.lstrip(" :+-").split(" ")[0] for line in final.splitlines()]
+    assert nodes.count("BroadcastExchange") == 1
+    assert nodes.count("ReusedExchange") == bloom.K - 1
+
+
 # ---------------------------------------------------------------------------
 # CCNet external-LM tier
 # ---------------------------------------------------------------------------

@@ -58,3 +58,21 @@ def test_merge_idempotent_reapply(spark, tmp_path):
     report2 = merge_upsert(spark, path, updates, key="k")
     assert (report2.inserted, report2.updated, report2.deleted) == (0, 1, 0)
     assert spark.read.parquet(path).where(F.col("k") == 2).collect()[0].v == 200
+
+
+def test_merge_recovers_crash_between_swap_renames(spark, tmp_path):
+    """A crash after the live table moved to its backup but before the
+    new state moved in leaves no table at the path: the next merge
+    restores the backup first, then merges into it."""
+    import os
+    import shutil
+
+    path = _target(spark, tmp_path)
+    shutil.move(path, path + ".merge.bak")
+    assert not os.path.exists(path)
+    updates = spark.createDataFrame([(2, "B", 200)], "k long, name string, v long")
+    report = merge_upsert(spark, path, updates, key="k")
+    assert (report.rows_before, report.updated) == (3, 1)
+    rows = {r.k: (r.name, r.v) for r in spark.read.parquet(path).collect()}
+    assert rows == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30)}
+    assert not os.path.exists(path + ".merge.bak")
