@@ -132,7 +132,8 @@ def probe(probe_pars: DataFrame, *shards: DataFrame) -> DataFrame:
     corpus the unpinned form built it once too but ran warm queries
     slower (docs_bloom_paragraph_dedup on a 4-vCPU VM, 3 alternating
     pairs: median 10.6 s against 9.85 s pinned), and eager rather than
-    lazy because the k broadcast jobs launch concurrently."""
+    lazy because the k broadcast jobs launch concurrently. At sf0.1 the
+    pin adds two construction jobs per query and at most ~0.05 s warm."""
     bits = bits_for(reduce(DataFrame.unionByName, shards).count())
     tables = [words(s, bits) for s in shards]
     merged = tables[0] if len(tables) == 1 else merge_words(*tables)

@@ -42,6 +42,7 @@ __all__ = [
     "ngram_jaccard_pairs",
     "jaccard_components",
     "duplicate_clusters",
+    "CLUSTERS_ORACLE",
     "connected_components",
     "fuzzy_pairs_blocked",
 ]
@@ -408,16 +409,13 @@ def shingle_sets(
 
 
 def shingle_overlap(
-    sh: DataFrame,
-    pairs: DataFrame | None = None,
-    block_col: str = "source",
-    id_col: str = "doc_id",
+    sh: DataFrame, pairs: DataFrame | None = None, id_col: str = "doc_id"
 ) -> tuple[DataFrame, Column, Column, Column]:
     """The verify stage of every exact set-overlap dedup: join candidate
     ``pairs`` (id_a, id_b) back by id to the sets ``s`` of ``sh``. With
-    no ``pairs``, the candidates are every within-``block_col`` pair
+    no ``pairs``, the candidates are every within-``source`` pair
     (blocked_pair_ids), so the scoring runs at full parallelism instead
-    of one task per distinct block value.
+    of one task per distinct source.
 
     Returns the joined frame (id_a, id_b, sa, sb) and its overlap
     counts ``inter``, ``na``, ``nb`` as Columns; each caller applies its
@@ -425,7 +423,7 @@ def shingle_overlap(
     projected ``inter`` read twice stays a Project of its own, while a
     Column folds into the caller's one projection."""
     if pairs is None:
-        pairs = blocked_pair_ids(sh, block_col, id_col)
+        pairs = blocked_pair_ids(sh, "source", id_col)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("s").alias("sa"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("s").alias("sb"))
     inter = F.size(F.array_intersect("sa", "sb"))
@@ -450,14 +448,12 @@ def ngram_jaccard_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def jaccard_components(
-    docs: DataFrame, threshold: float = 0.05, algorithm: str = "label"
-) -> DataFrame:
+def jaccard_components(docs: DataFrame, algorithm: str = "label") -> DataFrame:
     """(id, comp) over the graph of source-blocked pairs whose exact
-    token-3-gram Jaccard is >= ``threshold``: the duplicate clusters,
-    each labelled by its smallest doc_id (connected_components)."""
+    token-3-gram Jaccard is >= 0.05: the duplicate clusters, each
+    labelled by its smallest doc_id (connected_components)."""
     pairs, inter, na, nb = shingle_overlap(shingle_sets(docs, "source"))
-    edges = pairs.filter((inter / (na + nb - inter)) >= threshold).select("id_a", "id_b")
+    edges = pairs.filter((inter / (na + nb - inter)) >= 0.05).select("id_a", "id_b")
     return connected_components(docs.select("doc_id"), edges, "doc_id", algorithm=algorithm)
 
 
@@ -471,6 +467,29 @@ def duplicate_clusters(docs: DataFrame, algorithm: str = "label") -> DataFrame:
         F.col("comp").alias("cluster_id"),
         "cluster_size",
     )
+
+
+#: DuckDB twin of ``duplicate_clusters``: connected components as a
+#: recursive-CTE transitive closure over the source-blocked Jaccard edges
+CLUSTERS_ORACLE = rf"""
+    WITH RECURSIVE {SHINGLES_SQL},
+    edges AS (
+      SELECT a.doc_id AS src, b.doc_id AS dst
+      FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id <> b.doc_id
+      WHERE len(list_intersect(a.s, b.s)) * 1.0 /
+            (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.05
+    ),
+    reach(src, dst) AS (
+      SELECT doc_id, doc_id FROM documents
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    ),
+    comp AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src)
+    SELECT c.doc_id, c.cluster_id, CAST(s.n AS BIGINT) AS cluster_size
+    FROM comp c
+    JOIN (SELECT cluster_id, COUNT(*) AS n FROM comp GROUP BY cluster_id) s
+      USING (cluster_id)
+    """
 
 
 class ComponentsNotConverged(RuntimeError):

@@ -16,6 +16,7 @@ from etl_from_s3_to_postgresql_template_spark.functions.text import (
     token_count_col,
 )
 from etl_from_s3_to_postgresql_template_spark.operators.dedup import (
+    CLUSTERS_ORACLE,
     SHINGLES_SQL,
     dedup_exact_by_hash,
     duplicate_clusters,
@@ -627,30 +628,6 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     candidates = emb.select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_vec"))
     return lsh_topk(queries, candidates, dim=64, k=10).orderBy("q_id", "rank")
-
-
-#: connected components as a recursive-CTE transitive closure over the
-#: source-blocked Jaccard edges; also the oracle of llm_ops3's
-#: dedup_duplicate_clusters_star
-CLUSTERS_ORACLE = rf"""
-    WITH RECURSIVE {SHINGLES_SQL},
-    edges AS (
-      SELECT a.doc_id AS src, b.doc_id AS dst
-      FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id <> b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-            (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.05
-    ),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src)
-    SELECT c.doc_id, c.cluster_id, CAST(s.n AS BIGINT) AS cluster_size
-    FROM comp c
-    JOIN (SELECT cluster_id, COUNT(*) AS n FROM comp GROUP BY cluster_id) s
-      USING (cluster_id)
-    """
 
 
 @query("dedup_duplicate_clusters", oracle=CLUSTERS_ORACLE)

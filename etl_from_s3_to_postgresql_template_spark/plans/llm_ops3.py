@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_from_s3_to_postgresql_template_spark.operators.dedup import duplicate_clusters
-from etl_from_s3_to_postgresql_template_spark.plans.llm_ops import CLUSTERS_ORACLE
+from etl_from_s3_to_postgresql_template_spark.operators.dedup import CLUSTERS_ORACLE, duplicate_clusters
 from etl_from_s3_to_postgresql_template_spark.plans.registry import query
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 
