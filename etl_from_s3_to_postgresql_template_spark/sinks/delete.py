@@ -33,7 +33,7 @@ DUPLICATED (both the original and its rewrite visible), never missing;
 ``delete_rows`` — replays the manifest to completion, restoring
 exactly-once layout before any new probe runs. Readers that cannot
 tolerate the transient duplicate window need a real table format's
-atomic snapshot swap (sinks/tableformat.py).
+atomic snapshot swap.
 """
 
 from __future__ import annotations
@@ -43,6 +43,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_from_s3_to_postgresql_template_spark.sinks.swap import hadoop_fs
 
 __all__ = ["DeleteReport", "delete_rows", "recover_pending_delete"]
 
@@ -55,13 +57,6 @@ class DeleteReport:
     rows_rewritten: int
 
 
-def _hadoop(spark: SparkSession, any_path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(any_path), conf)
-    return jvm, fs
-
-
 def _manifest_path(path: str) -> str:
     return path.rstrip("/") + ".delete.manifest.json"
 
@@ -70,10 +65,9 @@ def _tmp_dir(path: str) -> str:
     return path.rstrip("/") + ".delete.tmp"
 
 
-def _write_manifest(jvm, fs, path: str, manifest: dict) -> None:
+def _write_manifest(fs, HPath, path: str, manifest: dict) -> None:
     """Persist the manifest atomically: write to a side file, rename into
     place (rename is the atomic primitive on HDFS-like stores)."""
-    HPath = jvm.org.apache.hadoop.fs.Path
     side = _manifest_path(path) + ".writing"
     out = fs.create(HPath(side), True)
     out.write(bytearray(json.dumps(manifest), "utf-8"))
@@ -83,27 +77,21 @@ def _write_manifest(jvm, fs, path: str, manifest: dict) -> None:
         raise IOError(f"committing delete manifest for {path} failed")
 
 
-def _read_manifest(jvm, fs, path: str) -> dict | None:
-    HPath = jvm.org.apache.hadoop.fs.Path
+def _read_manifest(fs, HPath, path: str) -> dict | None:
     mp = HPath(_manifest_path(path))
     if not fs.exists(mp):
         return None
     stream = fs.open(mp)
-    reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
-    chunks = []
-    line = reader.readLine()
-    while line is not None:
-        chunks.append(line)
-        line = reader.readLine()
-    reader.close()
-    return json.loads("\n".join(chunks))
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+    finally:
+        stream.close()
 
 
-def _apply_swap(jvm, fs, path: str, touched: list[str], part_names: list[str]) -> None:
+def _apply_swap(fs, HPath, path: str, touched: list[str], part_names: list[str]) -> None:
     """The idempotent core of the swap: move every rewritten part into the
     dataset (skipping ones a previous attempt already moved), then delete
     every original still present. Safe to replay any number of times."""
-    HPath = jvm.org.apache.hadoop.fs.Path
     tmp = _tmp_dir(path)
     for name in part_names:
         src = HPath(tmp + "/" + name)
@@ -126,11 +114,11 @@ def recover_pending_delete(spark: SparkSession, path: str) -> bool:
     rewritten parts in, drop remaining originals, clear the manifest).
     Returns True if there was anything to recover. Called automatically
     by ``delete_rows``; also safe to call directly at startup."""
-    jvm, fs = _hadoop(spark, path)
-    manifest = _read_manifest(jvm, fs, path)
+    fs, HPath = hadoop_fs(spark, path)
+    manifest = _read_manifest(fs, HPath, path)
     if manifest is None:
         return False
-    _apply_swap(jvm, fs, path, manifest["touched"], manifest["parts"])
+    _apply_swap(fs, HPath, path, manifest["touched"], manifest["parts"])
     return True
 
 
@@ -170,8 +158,7 @@ def delete_rows(
     remaining.coalesce(len(touched)).write.mode("overwrite").parquet(tmp)
     n_after = spark.read.parquet(tmp).count()
 
-    jvm, fs = _hadoop(spark, path)
-    HPath = jvm.org.apache.hadoop.fs.Path
+    fs, HPath = hadoop_fs(spark, path)
     part_names = [
         st.getPath().getName()
         for st in fs.listStatus(HPath(tmp))
@@ -179,8 +166,8 @@ def delete_rows(
     ]
     # point of no return: once the manifest is committed, the swap below
     # (or a later recover_pending_delete) WILL complete this delete
-    _write_manifest(jvm, fs, path, {"touched": touched, "parts": part_names})
-    _apply_swap(jvm, fs, path, touched, part_names)
+    _write_manifest(fs, HPath, path, {"touched": touched, "parts": part_names})
+    _apply_swap(fs, HPath, path, touched, part_names)
 
     return DeleteReport(
         files_total=files_total,

@@ -24,8 +24,8 @@ join/broadcast-deep (multi-join TPC-H shapes, funnel envelopes: up to
 +2x) — so the flag is set only at the measured-win sites. Result content
 is unaffected: the engine's cross-engine hash-exact conventions
 (decimal/integer-micro accumulation, sorted collect_list) make every
-registered plan row-order-free. ``SPARK_GRAFT_SMALL_SCAN_BYTES`` overrides
-the byte bound (0 disables the gate).
+registered plan row-order-free. The byte bounds are the fixed module
+constants below.
 
 Footer cache: ``spark.read.parquet(path)`` infers the schema from the
 file's footer, and that inference runs one Spark job per call — two per
@@ -155,19 +155,6 @@ _SCAN_SPLIT_BYTES = 128 * 1024 * 1024
 _SCAN_PART_BYTES = 128 * 1024
 
 
-def _env_bytes(var: str, default: int) -> int:
-    """Parse an integer byte-count env override; a malformed value falls
-    back to the default instead of raising at plan-build time inside
-    every load_table(parallel=True) site (ADVICE r12)."""
-    raw = os.environ.get(var)
-    if not raw:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        return default
-
-
 def _parallelize_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Round-robin-repartition a small unsplittable scan to size-derived
     parallelism (module docstring). Local-path sizes only: a non-local
@@ -177,10 +164,8 @@ def _parallelize_small_scan(spark: SparkSession, df: DataFrame, path: str) -> Da
     except OSError:
         return df
     dp = spark.sparkContext.defaultParallelism
-    limit = _env_bytes("SPARK_GRAFT_SMALL_SCAN_BYTES", _SCAN_SPLIT_BYTES * dp)
-    if dp > 1 and _SCAN_FLOOR_BYTES <= size < limit:
-        per_part = max(1, _env_bytes("SPARK_GRAFT_SCAN_PART_BYTES", _SCAN_PART_BYTES))
-        width = min(dp, max(2, (size + per_part - 1) // per_part))
+    if dp > 1 and _SCAN_FLOOR_BYTES <= size < _SCAN_SPLIT_BYTES * dp:
+        width = min(dp, max(2, (size + _SCAN_PART_BYTES - 1) // _SCAN_PART_BYTES))
         return df.repartition(width)
     return df
 

@@ -369,66 +369,6 @@ def run_stateful_user_counts_stream(spark: SparkSession, sf_dir: str) -> DataFra
     return _run_to_memory(spark, out, "update")
 
 
-def run_tws_user_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running stats via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-stateful API succeeding applyInPandasWithState
-    (typed state handles, timers, TTL support; requires the RocksDB state
-    store provider). ValueState accumulates (n, total) across batches;
-    drained over the fixture with AvailableNow the final emit per user
-    equals the batch groupBy — asserted by a pytest that auto-activates
-    where the API's python deps exist (the TWS state-server protocol needs
-    google.protobuf, absent in this container — same detect-and-skip
-    policy as the multimodal codecs).
-
-    At scale state is per-user-key in RocksDB shards, off the JVM heap —
-    the provider built for 1e8+-key state."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, mx double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            # count + max: both order-independent folds, so the drained
-            # result is bit-identical to the batch/oracle aggregate (a
-            # double SUM here would hit the cross-engine accumulation-order
-            # rounding hazard plans/money.py documents)
-            n, mx = self._agg.get() if self._agg.exists() else (0, None)
-            for pdf in rows:
-                n += len(pdf)
-                bmax = float(pdf["value"].max()) if len(pdf) else None
-                if bmax is not None:
-                    mx = bmax if mx is None else max(mx, bmax)
-            self._agg.update((n, mx))
-            yield pd.DataFrame({"user_id": [key[0]], "n": [n], "max_value": [mx]})
-
-        def close(self) -> None:
-            pass
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        ev = stream_events(spark, sf_dir)
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            UserStats(),
-            outputStructType="user_id long, n long, max_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        return _run_to_memory(spark, out, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def run_dedup_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: dropDuplicatesWithinWatermark on event_id.
 

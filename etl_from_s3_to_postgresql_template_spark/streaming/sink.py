@@ -14,10 +14,9 @@ Idempotency contract (the part worth getting right at scale):
   overwrite: a replay rewrites its own partition instead of appending a
   duplicate. Write-side idempotency + checkpointed offsets = effective
   exactly-once, no sink transactions needed.
-- The JDBC variant stamps ``_batch_id`` on every row and (when the
-  driver supports it) deletes that batch's rows before inserting —
-  delete-then-insert keyed by batch id is the standard idempotent-upsert
-  pattern for non-transactional sinks. The path is e2e-tested against
+- The JDBC variant only appends, stamping ``_batch_id`` on every row: a
+  replayed batch lands twice, and the downstream loader reconciles it
+  (delete-then-insert on ``_batch_id``). The path is e2e-tested against
   embedded Derby (tests/test_jdbc_sink.py); in production the URL points
   at PostgreSQL and nothing else changes.
 """
@@ -30,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_from_s3_to_postgresql_template_spark.sinks.base import JdbcSink
+from etl_from_s3_to_postgresql_template_spark.sinks.swap import hadoop_fs
 from etl_from_s3_to_postgresql_template_spark.streaming.ingest import stream_events
 
 
@@ -137,11 +137,10 @@ def run_corpus_stream_to_landing(
         # content key = md5 of the CANONICAL normal form (lowercase +
         # whitespace collapse, the same form exact dedup keys on)
         hashed = good.withColumn("h", F.md5(normalize_text_col("text"))).dropDuplicates(["h"])
-        try:
+        fs, Path = hadoop_fs(sess, target)
+        if fs.exists(Path(target)):  # absent only before the first landing
             seen = sess.read.parquet(target).select("h")
             hashed = hashed.join(seen, "h", "left_anti")
-        except Exception:
-            pass  # first batch: nothing landed yet
         hashed.write.mode("append").parquet(target)
 
     q = (

@@ -7,7 +7,9 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_from_s3_to_postgresql_template_spark.sinks.compact import compact_parquet
 from etl_from_s3_to_postgresql_template_spark.sinks.delete import delete_rows
+from etl_from_s3_to_postgresql_template_spark.sinks.swap import hadoop_fs
 from etl_from_s3_to_postgresql_template_spark.sources.registry import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -40,6 +42,10 @@ def test_delete_removes_targets_and_keeps_everything_else(spark, tmp_path):
     # survivors identical to an anti-join of the original
     want = ev.join(keys, "event_id", "left_anti")
     assert back.count() == want.count()
+    assert back.exceptAll(want).count() == 0 and want.exceptAll(back).count() == 0
+    # compacting the rewritten layout keeps the deleted rows gone
+    assert compact_parquet(spark, out, target_file_bytes=1 << 30).files_after == 1
+    back = spark.read.parquet(out)
     assert back.exceptAll(want).count() == 0 and want.exceptAll(back).count() == 0
 
 
@@ -87,14 +93,13 @@ def _build_crash_state(spark, out, keys, move_first_n):
     remaining = sub.join(keys, "event_id", "left_anti")
     tmp = mod._tmp_dir(out)
     remaining.coalesce(len(touched)).write.mode("overwrite").parquet(tmp)
-    jvm, fs = mod._hadoop(spark, out)
-    HPath = jvm.org.apache.hadoop.fs.Path
+    fs, HPath = hadoop_fs(spark, out)
     parts = [
         st.getPath().getName()
         for st in fs.listStatus(HPath(tmp))
         if st.getPath().getName().endswith(".parquet")
     ]
-    mod._write_manifest(jvm, fs, out, {"touched": touched, "parts": parts})
+    mod._write_manifest(fs, HPath, out, {"touched": touched, "parts": parts})
     for name in parts[:move_first_n]:
         assert fs.rename(HPath(tmp + "/" + name), HPath(out.rstrip("/") + "/" + name))
     return touched

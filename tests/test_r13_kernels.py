@@ -121,15 +121,3 @@ def test_small_scan_width_is_size_derived(spark, monkeypatch):
     size = os.path.getsize(f"{SF_BIG}/documents.parquet")
     want = min(dp, max(2, (size + 128 * 1024 - 1) // (128 * 1024)))
     assert df.rdd.getNumPartitions() == want
-
-
-def test_small_scan_env_overrides_malformed(spark, monkeypatch):
-    # a malformed byte bound must fall back, not raise at plan build
-    monkeypatch.setenv("SPARK_GRAFT_SMALL_SCAN_BYTES", "128mb")
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_PART_BYTES", " ")
-    df = load_table(spark, SF_BIG, "documents", parallel=True)
-    assert df.rdd.getNumPartitions() >= 2
-    # 0 disables the gate entirely (documented contract)
-    monkeypatch.setenv("SPARK_GRAFT_SMALL_SCAN_BYTES", "0")
-    df0 = load_table(spark, SF_BIG, "documents", parallel=True)
-    assert df0.rdd.getNumPartitions() == 1

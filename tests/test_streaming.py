@@ -234,31 +234,6 @@ def test_rate_source_contract_and_composition(spark, tmp_path):
     assert {r["event_type"] for r in rows} <= {"click", "view", "purchase", "scroll", "login"}
 
 
-def test_transform_with_state_equals_batch(spark):
-    """Runs wherever transformWithStateInPandas' python deps exist (the TWS
-    state protocol needs google.protobuf — skips here): running per-user
-    count+max via the Spark 4 typed-state API must equal the batch
-    aggregate after draining the fixture."""
-    pytest_ = __import__("pytest")
-    pytest_.importorskip("google.protobuf.descriptor")
-    from etl_from_s3_to_postgresql_template_spark.streaming.ingest import (
-        run_tws_user_stats_stream,
-    )
-
-    got = {
-        r["user_id"]: (r["n"], r["max_value"])
-        for r in run_tws_user_stats_stream(spark, SF).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["max_value"])
-        for r in load_table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("value").alias("max_value"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_streaming_corpus_pipeline_e2e(spark, tmp_path):
     """System composition: streaming document arrival -> quality gate ->
     content dedup (in-batch + vs landed) -> landing -> compaction. Asserts
@@ -309,6 +284,37 @@ def test_streaming_corpus_pipeline_e2e(spark, tmp_path):
     after = spark.read.parquet(f"{out}/docs")
     assert {r["doc_id"] for r in after.collect()} == {1, 3, 6}
     assert report.files_after <= report.files_before
+
+
+def test_corpus_landing_unreadable_landed_set_raises(spark, tmp_path):
+    """A landed set that exists but cannot be read must fail the batch:
+    landing without the cross-run anti-join would re-land every doc."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from etl_from_s3_to_postgresql_template_spark.streaming.sink import (
+        run_corpus_stream_to_landing,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.createDataFrame(
+        [(1, "alpha beta gamma", "en", "web"), (3, "delta epsilon zeta", "en", "web")],
+        "doc_id long, text string, lang string, source string",
+    ).coalesce(1).write.parquet(src)
+    run_corpus_stream_to_landing(spark, src, out, str(tmp_path / "ck1"))
+    bad = f"{out}/docs/part-00000-00000000-0000-0000-0000-000000000000-c000.snappy.parquet"
+    with open(bad, "wb") as f:
+        f.write(b"not a parquet file")
+    failed = None
+    try:  # a replay with a fresh checkpoint
+        run_corpus_stream_to_landing(spark, src, out, str(tmp_path / "ck2"))
+    except StreamingQueryException as e:
+        failed = e
+    os.remove(bad)
+    landed = sorted(r["doc_id"] for r in spark.read.parquet(f"{out}/docs").collect())
+    assert landed == [1, 3]
+    assert failed is not None and "FOREACH_BATCH_USER_FUNCTION_ERROR" in str(failed)
 
 
 def test_python_streaming_datasource_offsets_and_restart(spark, tmp_path):

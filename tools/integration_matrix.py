@@ -1,13 +1,12 @@
 """Integration matrix: detect each dep-gated rung, run its functional
 suite where the dependency exists, and record one row per rung.
 
-The engine dep-gates five integration surfaces the container lacks
-(VERDICT r5 "What's missing"): real PostgreSQL over JDBC, Delta Lake
-(python package + jars), the spark-sql-kafka connector jar, PIL, pyav,
-and transformWithStateInPandas' protobuf dependency. Their local
-equivalents are fully tested (Derby JDBC, parquet backend, kafka-shaped
-static frames, stub codecs) — this tool is the switch that runs the REAL
-halves the day a runtime has them, with zero new work:
+The engine dep-gates four integration surfaces the container lacks
+(VERDICT r5 "What's missing"): real PostgreSQL over JDBC, the
+spark-sql-kafka connector jar, PIL and pyav. Their local equivalents are
+fully tested (Derby JDBC, kafka-shaped static frames, stub codecs) — this
+tool is the switch that runs the REAL halves the day a runtime has them,
+with zero new work:
 
     python tools/integration_matrix.py          # detect + run + report
     python tools/integration_matrix.py --json   # machine-readable only
@@ -134,20 +133,6 @@ def build_matrix() -> list[dict]:
         _pg_smoke,
     )
 
-    delta_py = _importable("delta")
-    delta_jar = _pyspark_jars("delta-spark*.jar") or _pyspark_jars("delta-core*.jar")
-    rung(
-        "delta-lake",
-        delta_py and delta_jar,
-        (
-            f"python pkg={'present' if delta_py else 'absent'}, "
-            f"jars={'present' if delta_jar else 'absent'} "
-            "(local equivalent: parquet backend byte-equivalence, tests/test_tableformat.py)"
-        ),
-        "pytest tests/test_tableformat.py",
-        lambda: _run_pytest(["tests/test_tableformat.py"]),
-    )
-
     kafka_jar = _pyspark_jars("*sql-kafka*.jar") or _pyspark_jars("*kafka-clients*.jar")
     rung(
         "kafka-connector",
@@ -176,19 +161,6 @@ def build_matrix() -> list[dict]:
         lambda: _run_pytest(["tests/test_multimodal.py", "-k", "real_codec_contract_pyav"]),
     )
 
-    iceberg_jar = _pyspark_jars("iceberg-spark-runtime*.jar")
-    rung(
-        "iceberg-table-format",
-        iceberg_jar,
-        (
-            f"iceberg-spark-runtime jar={'present' if iceberg_jar else 'absent'} "
-            "(local equivalent: SQL-builder unit tests + parquet backend, "
-            "tests/test_tableformat.py)"
-        ),
-        "pytest tests/test_tableformat.py -k iceberg",
-        lambda: _run_pytest(["tests/test_tableformat.py", "-k", "iceberg"]),
-    )
-
     avro_jar = _pyspark_jars("spark-avro*.jar")
     rung(
         "avro-datasource",
@@ -200,14 +172,6 @@ def build_matrix() -> list[dict]:
         ),
         "inline avro write/read roundtrip",
         _avro_smoke,
-    )
-
-    rung(
-        "protobuf-transformWithState",
-        _importable("google.protobuf.descriptor"),
-        "google.protobuf import (local equivalent: applyInPandasWithState stateful suite)",
-        "pytest tests/test_streaming.py -k transform_with_state",
-        lambda: _run_pytest(["tests/test_streaming.py", "-k", "transform_with_state"]),
     )
 
     # r9: the one external-scan-engine rung whose dependency IS in the
